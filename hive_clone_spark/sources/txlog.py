@@ -62,10 +62,16 @@ def _footer_minmax(path, col: str) -> tuple[int, int] | None:
     FOOTER statistics — the stats a production writer harvests from the
     files it just wrote, at zero Spark jobs (Delta/Iceberg record
     exactly these in their add actions). Driver-side metadata read of
-    one footer, O(row groups). Returns None when the footer carries no
-    min/max for the column (e.g. all rows NULL) — the add action then
-    records no stats and readers scan the file conservatively, the
-    same contract as before."""
+    one footer, O(row groups).
+
+    Fails CLOSED: a range that is too narrow lets ``scan_files`` prune
+    a file that holds matches, so any non-empty row group without a
+    min/max (statistics absent, or present but lacking bounds while
+    holding non-null values) makes the whole answer None. Only a row
+    group whose null count equals its row count (all NULL) may be
+    skipped. None — also for a file with no non-null value at all —
+    means the add action records no stats and readers scan the file
+    conservatively."""
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(path)
@@ -75,9 +81,16 @@ def _footer_minmax(path, col: str) -> tuple[int, int] | None:
         return None
     mn = mx = None
     for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
+        meta = md.row_group(rg)
+        st = meta.column(idx).statistics
+        if st is None:
+            if meta.num_rows:
+                return None
             continue
+        if not st.has_min_max:
+            if st.has_null_count and st.null_count == meta.num_rows:
+                continue  # all NULL: nothing a range predicate matches
+            return None
         mn = st.min if mn is None else min(mn, st.min)
         mx = st.max if mx is None else max(mx, st.max)
     if mn is None:
@@ -1999,14 +2012,36 @@ def _with_bucket(df: DataFrame, m: int) -> DataFrame:
     )
 
 
+def _footer_max(df: DataFrame, col: str) -> int | None:
+    """max(``col``) over the files a parquet scan ``df`` reads, from
+    their footers alone (zero Spark jobs), or None when any file cannot
+    vouch for it: not a local file, or no footer min/max (see
+    _footer_minmax). The caller then runs the aggregate."""
+    from urllib.parse import unquote, urlparse
+
+    hi = None
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        mnmx = _footer_minmax(unquote(u.path), col)
+        if mnmx is None:
+            return None
+        hi = mnmx[1] if hi is None else max(hi, mnmx[1])
+    return hi
+
+
 def _stage_bucketed_orders(
     spark: SparkSession, sf_dir: str, name: str
 ) -> tuple[TxLog, int]:
     """Version 0: orders bucketed into _SKIP_BUCKETS stats-carrying
-    files by orderkey range (q98's layout)."""
+    files by orderkey range (q98's layout). The bucket bound comes from
+    the orders footers; the max aggregate is only the fallback."""
     tl = TxLog(_warehouse_dir(sf_dir, name)).create()
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    m = int(o.agg(F.max("o_orderkey")).collect()[0][0])
+    m = _footer_max(o, "o_orderkey")
+    if m is None:
+        m = int(o.agg(F.max("o_orderkey")).collect()[0][0])
     bucketed = _with_bucket(o, m)
     tl.commit(
         "append",
@@ -3429,6 +3464,14 @@ def q170_gdpr_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "streaming upsert" pattern (Delta's foreachBatch-MERGE): q128 showed
 # exactly-once APPEND; this shows exactly-once STATE.
 #
+# Redelivery goes through the sink itself, as a real foreachBatch
+# replay does: upsert's txn_applied gate returns before the batch is
+# aggregated, merged or staged, so a replay costs no Spark action and
+# leaves no data file behind (every file under data/ is referenced by
+# some commit). q128 owns the crash-after-write half of the contract:
+# a retry that stages its files again before reaching the idempotent
+# commit, whose staged file is then dropped as an unreferenced orphan.
+#
 # Determinism under real multi-batch (events staged to 4 files,
 # maxFilesPerTrigger=1, so batch boundaries are engine-chosen): the
 # merged state is ORDER-INDEPENDENT — counts are associative sums and
@@ -3538,12 +3581,14 @@ def q187_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
 
     versions_after_drain = tl.latest_version() + 1
-    snapshot = tl.read(spark)
-    for batch_id in delivered:  # full redelivery: every txn must no-op
-        tl.commit_idempotent(
-            f"q187-{batch_id}", "stream-merge",
-            add=tl.stage_data(snapshot, 1),
-        )
+    # full redelivery through the sink; the events payload is read only
+    # if the gate fails open, and then an applied upsert appends to
+    # ``delivered`` — hence the copy
+    redelivered = spark.read.schema(EVENTS_SCHEMA).parquet(
+        os.path.join(staged, "*.parquet")
+    )
+    for batch_id in list(delivered):
+        upsert(redelivered, batch_id)
     skipped = tl.latest_version() + 1 == versions_after_drain
 
     back = tl.read(spark)

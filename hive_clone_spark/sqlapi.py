@@ -1264,6 +1264,8 @@ def _read_affected(
 def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
     """Parse one DML statement and execute it as a txlog commit.
     Returns the op name recorded in the log."""
+    import pyarrow.parquet as pq
+
     from hive_clone_spark.sources.txlog import (
         CommitConflictError,
         ConstraintViolationError,
@@ -1679,9 +1681,12 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                 # file's own parquet footer (zero extra Spark jobs — the
                 # pre-r14 shape ran a separate min/max aggregate over
                 # the insert frame before staging it, computing the
-                # anti-join twice). No NOT-MATCHED rows -> the staged
-                # file is empty -> no footer stats: drop the file and
-                # commit no insert action, exactly the old no-op path.
+                # anti-join twice). Emptiness comes from the footer's
+                # row count: a file with no NOT-MATCHED rows is dropped
+                # and commits no insert action, exactly the old no-op
+                # path. A non-empty file without key min/max (e.g. all
+                # inserted keys NULL) is kept with a stats-less add,
+                # which readers scan conservatively.
                 ins_adds = tl.stage_data(
                     tl.to_physical(inserts, expected) if mapped else inserts,
                     n_files=1,
@@ -1689,11 +1694,13 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                 pkey = mapping.get(tgt_key, tgt_key) if mapped else tgt_key
                 kept = []
                 for a in ins_adds:
-                    mnmx = _footer_minmax(tl.root / a["file"], pkey)
-                    if mnmx is None:
-                        (tl.root / a["file"]).unlink()
+                    path = tl.root / a["file"]
+                    if pq.read_metadata(path).num_rows == 0:
+                        path.unlink()
                         continue
-                    a["stats"] = {tgt_key: [mnmx[0], mnmx[1]]}
+                    mnmx = _footer_minmax(path, pkey)
+                    if mnmx is not None:
+                        a["stats"] = {tgt_key: [mnmx[0], mnmx[1]]}
                     kept.append(a)
                 ins_adds = kept
             try:

@@ -13,6 +13,8 @@ The builder runs the FULL suite (env set) before closing a round; the
 driver's budgeted `pytest tests/ -x -q` gets the fast lane and
 finishes with 0 failures instead of a truncation. Measured on the
 round-14 profiling run: whales below total ~24 min of a 54-min suite.
+Every run ends with a terminal-summary line naming how many slow-lane
+tests it skipped, so a fast-lane run is never mistaken for a full one.
 """
 
 from __future__ import annotations
@@ -80,17 +82,32 @@ _SLOW_LANE = {
 }
 
 
+_SLOW_LANE_REASON = (
+    "slow lane — set SPARK_GRAFT_FULL_SUITE=1 to run "
+    "(full pass only; excluded from the fast verify lane)"
+)
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_SUITE"):
         return
-    skip = pytest.mark.skip(
-        reason="slow lane — set SPARK_GRAFT_FULL_SUITE=1 to run "
-        "(builder's full pass; excluded from the driver's verify budget)"
-    )
+    skip = pytest.mark.skip(reason=_SLOW_LANE_REASON)
     for item in items:
         name = item.nodeid.rsplit("/", 1)[-1]
         if name in _SLOW_LANE:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    # one line even under -q, so a fast-lane run never reads as full
+    n = sum(
+        _SLOW_LANE_REASON in str(r.longrepr)
+        for r in terminalreporter.stats.get("skipped", [])
+    )
+    terminalreporter.write_line(
+        f"slow lane: {n} tests skipped"
+        + (" (set SPARK_GRAFT_FULL_SUITE=1 to run them)" if n else "")
+    )
 
 
 @pytest.fixture(scope="session")

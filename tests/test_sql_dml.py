@@ -356,6 +356,29 @@ def test_merge_duplicate_unmatched_source_keys_legal(spark, small_log):
     assert snap.where(F.col("o_orderkey") == m + 5).count() == 2
 
 
+def test_merge_inserts_null_key_rows(spark, small_log):
+    """Two NULL-key source rows match nothing, so both insert. The
+    staged insert file has rows but no key min/max in its footer: it
+    must be committed with a stats-less add, not dropped as empty."""
+    tl, m = small_log
+    spark.createDataFrame(
+        [(None, 1.0), (None, 2.0)],
+        "o_orderkey BIGINT, o_totalprice DOUBLE",
+    ).createOrReplaceTempView("dml_src_nullkey")
+    txlog_sql_dml(
+        spark, tl, m,
+        "MERGE INTO t USING dml_src_nullkey AS s"
+        " ON t.o_orderkey = s.o_orderkey"
+        " WHEN NOT MATCHED THEN INSERT *",
+    )
+    assert tl.history()[-1]["n_added"] == 1
+    snap = _read(spark, tl)
+    assert snap.count() == m + 2
+    assert sorted(
+        r["o_totalprice"] for r in snap.where(F.col("o_orderkey").isNull()).collect()
+    ) == [1.0, 2.0]
+
+
 def test_merge_multiple_insert_clauses_cascade(spark, small_log):
     """Several WHEN NOT MATCHED ... THEN INSERT * clauses: a source row
     inserts when the FIRST clause whose condition holds is an INSERT —
