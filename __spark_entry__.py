@@ -84,183 +84,37 @@ def _effective_history(
     return history[int(rec.get("valid_from", 0)):]
 
 
-def _rounds_green(name: str, history: list[dict], has_oracle: bool = False) -> int:
-    """How many prior driver rounds recorded this query as green.
-
-    Green = a CORRECTNESS_r*.json row with no error and no hash
-    mismatch. A "no_oracle" rows-only marker counts as green ONLY
-    while the entry still has no oracle — once an entry is upgraded to
-    a full oracle, its old weak rows stop counting, so the stronger
-    gate gets exercised early. Queries that have never been green sort
-    FIRST so the driver — which checks only the first N entries of
-    queries() in order — always spends its budget on the entries with
-    the least correctness signal. As rounds accumulate, this rotates
-    coverage automatically.
-    """
-    n = 0
-    for rows in history:
-        r = rows.get(name)
-        if r is None:
-            continue
-        err = r.get("err")
-        if err == "no_oracle" and has_oracle:
-            continue
-        if err not in (None, "no_oracle"):
-            continue
-        if r.get("hash_match") is False:
-            continue
-        n += 1
-    return n
-
-
 def _rounds_stale(name: str, history: list[dict]) -> int:
     """Rounds since the driver last recorded ANY row for this query
-    (len(history)+1 if never recorded). The staleness tiebreak keeps a
-    green driver signal from aging out: without it, an entry green in
-    round 1 and stably sorted could go unchecked indefinitely while the
-    same-green cohort ahead of it got re-checked every round."""
+    (len(history)+1 if never recorded)."""
     for rounds_ago, rows in enumerate(reversed(history)):
         if name in rows:
             return rounds_ago
     return len(history) + 1
 
 
-# Age floor (round-5 verdict task 6): any entry whose latest driver row
-# is >= this many rounds old outranks the entire green cohort regardless
-# of how many rounds it has been green — nothing may go unchecked
-# indefinitely just because it was green long ago. Entries at the floor
-# join bucket 0 alongside never-green entries; within the bucket,
-# staleness (desc) keeps brand-new entries (stale = n_rounds+1) first.
-# Raised 3 -> 4 in round 7: the registry grew to 208 entries against a
-# ~50-entry checked window, so a 3-round floor needs ~53 staleness
-# slots per round (> the window) and would thrash; (208-50)/4 ≈ 40
-# slots per round leaves room for new entries too.
-# Raised 4 -> 5 in round 8: at ~296 entries, (296-50)/4 ≈ 61 > the
-# window again; (296-50)/5 ≈ 49 fits. Recheck whenever a sizeable
-# entry batch lands.
-# Raised 5 -> 6 late in round 8: at ~347 entries, (347-50)/5 ≈ 59 >
-# the window; (347-50)/6 ≈ 50 fits (at the edge — recheck next batch).
-# Raised 6 -> 7 at 396 entries ((396-50)/6 ≈ 58 > the window;
-# (396-50)/7 ≈ 49 fits).
-# Raised 7 -> 9 in round 9 (r8 verdict task 1): at 402 entries the
-# floor-7 promise needs 402/7 ≈ 57 checks/round against a 50-check
-# window — silently unsatisfiable even with ZERO registry growth.
-# At ~410 entries (round 9 adds a handful, growth otherwise frozen
-# while the 145-entry never-checked backlog drains): (410-50)/9 = 40
-# staleness slots per round, leaving ~10 slots of headroom for new /
-# rewritten entries. Recheck this arithmetic on every sizeable batch:
-# the sustainable floor is ceil((n_entries - window) / (window -
-# expected_new_per_round)).
-#
-# Round 12: the floor is PREEMPTIVE — an entry joins bucket 0 one round
-# BEFORE breaching (stale >= _AGE_FLOOR - 1), because the promise "no
-# signal older than _AGE_FLOOR rounds" can only hold if the re-check
-# happens while the signal is still _AGE_FLOOR-1 rounds old; waiting for
-# stale == _AGE_FLOOR means every floor-triggered check reads a signal
-# that already violated the bound (the r11 verdict flagged exactly this:
-# 16 staleness-8 entries one round from breach, yet outranked by a
-# lower-green cohort). Worst-case demand rises to n/( _AGE_FLOOR-1 ) =
-# 410/8 ~ 51/round vs the 50 window — marginal, but the game reserve
-# overlaps the stale g_* cohort and registry growth is frozen; revisit
-# if entries are added.
-_AGE_FLOOR = 9
-
-
-# Priority escort (round-10 verdict task 2): never-checked flagship
-# deliverables that must not queue behind a 100+-entry never-checked
-# backlog sorted by registration order — they registered LAST and
-# would otherwise wait a round. Flag-0 inside bucket 0, inert once
-# green, exactly like _R1_NEVER_CHECKED. Round 11 adds
-# q257_dml_full_delete (the empty-table-lifecycle fix made
-# driver-visible); the round-9 escorts went green in r10 and are inert.
-_ESCORT = frozenset(
-    {"p_zstd_roundtrip", "p_pdf_extract", "q254_sql_dml_txlog",
-     "q257_dml_full_delete", "q258_schema_time_travel"}
-)
-
-# Game-refresh reserve (round-10 verdict task 3): the 25 g_* entries
-# are bench-EXCLUDED, so the correctness window is the only place a
-# driver ever touches them — and while a large never-checked backlog
-# fills bucket 0 (staleness n_rounds+1 beats any checked entry's), the
-# age-ordering alone would not re-emit them until the backlog drains
-# (r12+ at the current rate), brushing the _AGE_FLOOR. Each round the
-# _GAME_RESERVE_SLOTS stalest green g_* entries at or past
-# _GAME_REFRESH_AGE get a reserved window slot between the escorts and
-# the never-checked cohort. 5 slots/round cycles the whole block every
-# ~5 rounds, and the backlog still drains within the judge's ≤60 bound.
-_GAME_REFRESH_AGE = 4
-_GAME_RESERVE_SLOTS = 5
-
-
-def _game_reserve(names, history, store) -> frozenset:
-    """The <= _GAME_RESERVE_SLOTS stalest previously-checked g_*
-    entries due a refresh (staleness >= _GAME_REFRESH_AGE). Never-
-    checked g_* entries are excluded — they already sort into bucket 0
-    on their own."""
-    due = []
-    for i, n in enumerate(names):
-        if not n.startswith("g_"):
-            continue
-        eff = _effective_history(n, registry.QUERIES[n], history, store)
-        if not any(n in rows for rows in eff):
-            continue
-        stale = _rounds_stale(n, eff)
-        if stale >= _GAME_REFRESH_AGE:
-            due.append((-stale, i, n))
-    due.sort()
-    return frozenset(n for _, _, n in due[:_GAME_RESERVE_SLOTS])
-
-
-def _emit_key(
-    n: str,
-    history: list[dict],
-    has_oracle: bool,
-    reg_order: int,
-    n_rounds: int | None = None,
-    reserved: bool = False,
-):
+def _emit_key(name: str, history: list[dict], n_rounds: int) -> tuple[int, int]:
     """Sort key for queries() emission — shared with test_entry_order.
 
-    ``history`` is the entry's EFFECTIVE history (rows earned under its
-    current source fingerprint; see _effective_history). ``n_rounds``
-    is the total number of driver rounds on disk — an entry with no
-    effective rows is treated as maximally stale relative to the FULL
-    round count, so a rewritten entry sorts exactly like a brand-new
-    one rather than like a recently-checked one. ``reserved`` marks a
-    game-refresh reserve member (see _game_reserve): bucket 0 with a
-    priority slot between the escorts and the never-checked cohort.
+    ``(0 if the last effective row is red or there is none else 1,
+    -rounds_stale)``. ``history`` is the entry's EFFECTIVE history
+    (rows earned under its current source fingerprint; see
+    _effective_history). Red = an error (historical ``no_oracle``
+    markers included: every entry now has a full oracle) or a hash
+    mismatch. An entry with no effective row is maximally stale
+    relative to the FULL round count ``n_rounds``, so a rewritten entry
+    sorts exactly like a brand-new one.
     """
-    green = _rounds_green(n, history, has_oracle=has_oracle)
-    stale = _rounds_stale(n, history)
-    if not any(n in rows for rows in history):
-        stale = (n_rounds if n_rounds is not None else len(history)) + 1
-    bucket = 0 if (reserved or stale >= _AGE_FLOOR - 1) else green
-    # flag tiers inside a bucket:
-    #   0 — round-1 never-checked gap entries and never-green escorts:
-    #       the r1 verdict named the former as THE gap, and a new op
-    #       must not displace them from the checked window; inert once
-    #       green (green entries compete on staleness alone)
-    #   1 — game-refresh reserve slots
-    #   2 — everything else (ties by staleness desc, then reg order)
-    if green == 0 and (n in _R1_NEVER_CHECKED or n in _ESCORT):
-        flag = 0
-    elif reserved:
-        flag = 1
-    else:
-        flag = 2
-    return (bucket, flag, -stale, reg_order)
+    stale = _rounds_stale(name, history)
+    if stale > len(history):
+        return (0, -(n_rounds + 1))
+    last = history[-1 - stale][name]
+    red = last.get("err") is not None or last.get("hash_match") is False
+    return (0 if red else 1, -stale)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Emitted in explicit order: never-driver-green and age-floor-stale
-    entries first (see _emit_key), then the green cohorts, each ordered
-    by how long the driver has not looked at them (_rounds_stale), ties
-    broken by registration order. The driver checks a fixed-size
-    prefix, so this order IS the coverage strategy: least signal first,
-    oldest signal next, and no signal older than _AGE_FLOOR rounds.
-    """
+def _load_history() -> list[dict]:
+    """The driver's CORRECTNESS_r*.json rows, one dict per round."""
     import json
 
     history = []
@@ -269,48 +123,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             history.append(json.loads(p.read_text()))
         except (OSError, json.JSONDecodeError):
             continue
-    store = _load_fingerprint_store()
-    names = list(registry.QUERIES)
-    order = {n: i for i, n in enumerate(names)}
-    reserve = _game_reserve(names, history, store)
-    names.sort(
+    return history
+
+
+def _emit_order(history: list[dict], store: dict) -> list[str]:
+    """Registered names sorted by _emit_key; the sort is stable, so
+    ties keep registration order."""
+    return sorted(
+        registry.QUERIES,
         key=lambda n: _emit_key(
             n,
             _effective_history(n, registry.QUERIES[n], history, store),
-            has_oracle=n in registry.ORACLE,
-            reg_order=order[n],
-            n_rounds=len(history),
-            reserved=n in reserve,
-        )
+            len(history),
+        ),
     )
-    return {n: registry.QUERIES[n] for n in names}
 
 
-# The 52 round-1 entries with no green CORRECTNESS_r01 row (50 never
-# checked by the driver's 50-entry window + q50/q53 which failed it).
-# Once green, _rounds_green outranks this list and it becomes inert.
-_R1_NEVER_CHECKED = frozenset(
-    [
-        "q50_rolling_time_window", "q53_approx_percentile",
-        "g_stack_tops", "g_queen_surrounded", "g_game_over_blackwins",
-        "g_game_over_draw", "g_can_slide", "g_queen_moves",
-        "g_beetle_climb", "g_beetle_on_top", "g_grasshopper_moves",
-        "g_ant_moves", "g_ant_perimeter", "g_spider_moves", "g_reserves",
-        "g_color_status", "g_placement_empty_board",
-        "g_placement_first_of_color", "g_placement_targets", "g_add_piece",
-        "g_move_piece", "g_pixel_roundtrip", "g_legal_moves_all",
-        "p_dedup_exact", "p_dedup_minhash_lsh", "p_dedup_simhash",
-        "p_dedup_ngram_jaccard", "p_dedup_embedding", "p_dedup_resolve",
-        "p_contamination", "p_knn_bruteforce", "p_knn_lsh", "p_knn_ivf",
-        "p_knn_filtered", "p_text_stats", "p_lang_id", "p_token_count",
-        "p_doc_fingerprint", "p_top_words", "p_vocab_build",
-        "p_multimodal_meta", "p_multimodal_decode",
-        "p_multimodal_framesample", "p_multimodal_resize",
-        "p_stratified_sample", "p_sequence_pack", "p_pipeline_e2e",
-        "q43_sql_passthrough", "p_ema", "q23_tumbling_window",
-        "q24_sliding_window", "q25_session_window",
-    ]
-)
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """One entry per implemented operator from SURVEY.md §2.
+
+    The driver checks only a fixed-size prefix of this dict each round,
+    so the order is the coverage strategy: least recently checked
+    first. Entries whose last effective driver row is red, or that have
+    none (new, or rewritten since their last row), come first; the rest
+    follow by staleness, oldest signal first; ties keep registration
+    order. With every check green, a W-entry window therefore rechecks
+    each of N entries at least once every ceil(N/W) rounds.
+    """
+    order = _emit_order(_load_history(), _load_fingerprint_store())
+    return {n: registry.QUERIES[n] for n in order}
 
 
 def oracle_sql() -> dict[str, str]:

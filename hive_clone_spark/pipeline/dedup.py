@@ -2082,12 +2082,15 @@ def p_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sizes aggregate joined back in (guide §2.4). The candidate pair
     # generation is a SELF-join of pref aliased twice with IDENTICAL
     # projections on both sides (doc_a/doc_b renames happen AFTER the
-    # join): both join inputs canonicalize to the same exchange-on-h
-    # subtree, so Spark plans one Window pass + ReusedExchange instead
-    # of computing the whole ss->dfreq->rank subtree twice (the r13
-    # shape renamed doc_id per side BELOW the join, which made the
-    # subtrees differ and defeated reuse; an explicit checkpoint of
-    # pref was A/B'd SLOWER, 11.0 vs 9.8 s — it serialized the job).
+    # join). Measured: this does NOT reuse the exchange — the executed
+    # adaptive plan has no ReusedExchange (the join plans as a
+    # broadcast, and the self-join sides off the localCheckpoint get
+    # deduplicated attribute ids), so the ss->dfreq->rank subtree still
+    # runs twice, as parallel stages of one job; SHUFFLE_HASH / MERGE
+    # hint-forced variants were A/B-neutral (OPTIMIZATION_r14.md §8).
+    # The shape is kept because it is plan-neutral. An explicit
+    # checkpoint of pref was A/B'd SLOWER, 11.0 vs 9.8 s — it
+    # serialized the job.
     wdoc = Window.partitionBy("doc_id")
     ranked = ss.join(dfreq, "h").select(
         "doc_id",

@@ -747,7 +747,8 @@ class TxLog:
         the DATA file's basename (what ``_apply_dvs`` matches on); the
         sidecar-to-data-file binding is METADATA (O(files touched), a
         commit-log fact), so the tiny local binding relation is the
-        only driver-side piece."""
+        only driver-side piece. FAILFAST: a corrupt sidecar must fail
+        the read, never parse as null positions and un-delete rows."""
         binding = spark.createDataFrame(
             [
                 (pathlib.Path(dv).name, pathlib.Path(f).name)
@@ -757,6 +758,7 @@ class TxLog:
         )
         raw = (
             spark.read.schema("positions array<bigint>")
+            .option("mode", "FAILFAST")
             .json([str(self.root / dv) for dv in dvs.values()])
             .select(
                 F.element_at(
@@ -1945,17 +1947,8 @@ _SKIP_BUCKETS = 16
     """,
 )
 def q98_txlog_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tl = TxLog(_warehouse_dir(sf_dir, "txlog_q98")).create()
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    m = o.agg(F.max("o_orderkey")).collect()[0][0]
+    tl, m = _stage_bucketed_orders(spark, sf_dir, "txlog_q98")
     lo, hi = m // 4, m // 2
-    bucketed = o.withColumn(
-        "bucket", (F.col("o_orderkey") * _SKIP_BUCKETS) / (m + 1)
-    ).withColumn("bucket", F.floor("bucket").cast("int"))
-    tl.commit(
-        "append",
-        add=tl.stage_data_partitioned(bucketed, "bucket", stats_col="o_orderkey"),
-    )
     all_files, chosen = tl.scan_files("o_orderkey", lo, hi)
     pruned = spark.read.parquet(*[str(tl.root / f) for f in chosen])
     agg = pruned.where(F.col("o_orderkey").between(lo, hi)).agg(
@@ -3975,14 +3968,7 @@ def q206_txlog_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q210_txlog_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tl = TxLog(_warehouse_dir(sf_dir, "txlog_q210")).create()
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    m = o.agg(F.max("o_orderkey")).collect()[0][0]
-    bucketed = _with_bucket(o, m)
-    tl.commit(
-        "append",
-        add=tl.stage_data_partitioned(bucketed, "bucket", stats_col="o_orderkey"),
-    )
+    tl, m = _stage_bucketed_orders(spark, sf_dir, "txlog_q210")
     # metadata side: one row per active file straight from the log
     _, stats, _, _, _, _ = tl._replay(tl.latest_version())
     meta_rows = [

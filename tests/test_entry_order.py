@@ -1,17 +1,19 @@
 """Rotation integrity for the driver window (__spark_entry__.queries).
 
 The driver checks only the first N entries of queries() per round, so
-the emission order IS the coverage strategy: entries with the least
-correctness signal (fewest green CORRECTNESS_r* rows) must come
-first, ties broken stably, and every registered query must appear
-exactly once. These tests pin that contract so a registry change or a
-new CORRECTNESS file can't silently starve never-checked entries.
+the emission order IS the coverage strategy. queries() sorts on one
+key: entries whose last effective (fingerprint-valid) driver row is red
+or missing come first, the rest follow least recently checked first,
+and ties keep registration order. These tests pin that contract —
+exact cover, failing or rewritten entries first, non-increasing
+staleness, and the ceil(N/W)-round recheck bound — plus the
+fingerprint gate that decides which history rows count.
 """
 
 from __future__ import annotations
 
 import importlib.util
-import json
+import math
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -21,16 +23,6 @@ _spec = importlib.util.spec_from_file_location(
 )
 entry_mod = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(entry_mod)
-
-
-def _history() -> list[dict]:
-    out = []
-    for p in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        try:
-            out.append(json.loads(p.read_text()))
-        except (OSError, json.JSONDecodeError):
-            continue
-    return out
 
 
 def test_queries_cover_registry_exactly_once():
@@ -50,145 +42,100 @@ def _eff(n, history, registry):
     )
 
 
-def _reserve(history, registry):
-    """The round's game-refresh reserve set (mirrors queries())."""
-    store = entry_mod._load_fingerprint_store()
-    return entry_mod._game_reserve(list(registry.QUERIES), history, store)
+def _last_row(n, eff):
+    """(rounds ago, row) of the entry's latest effective driver row, or
+    None — computed here independently of __spark_entry__._emit_key."""
+    for ago, rows in enumerate(reversed(eff)):
+        if n in rows:
+            return ago, rows[n]
+    return None
 
 
-def _bucket(n, history, registry, reserve=frozenset()):
-    """Effective primary key: 0 for never-green, age-floor-stale (the
-    floor is preemptive: one round BEFORE breach), or game-reserve
-    entries, else rounds-green (mirrors _emit_key, including the
-    fingerprint gate on which history rows count)."""
-    eff = _eff(n, history, registry)
-    green = entry_mod._rounds_green(n, eff, has_oracle=n in registry.ORACLE)
-    stale = entry_mod._rounds_stale(n, eff)
-    if not any(n in rows for rows in eff):
-        stale = len(history) + 1
-    return 0 if (n in reserve or stale >= entry_mod._AGE_FLOOR - 1) else green
+def _needs_check(n, eff) -> bool:
+    """Red (error, no_oracle marker or hash mismatch) or no row at all."""
+    last = _last_row(n, eff)
+    if last is None:
+        return True
+    row = last[1]
+    return row.get("err") is not None or row.get("hash_match") is False
 
 
 def test_least_signal_entries_emit_first():
-    """Primary sort key: the effective bucket (rounds-green with the
-    age floor collapsing stale entries to 0) must be non-decreasing
-    across the emitted order, so the driver's fixed-size window always
-    lands on the entries with the least / oldest signal."""
+    """Every entry whose last effective row is red, or that has no
+    effective row (new or rewritten), emits before every green entry —
+    and so inside the driver's 50-entry window while there are at most
+    50 of them."""
     from hive_clone_spark import registry
 
     registry.load_all_modules()
-    history = _history()
+    history = entry_mod._load_history()
     names = list(entry_mod.queries())
-    reserve = _reserve(history, registry)
-    buckets = [_bucket(n, history, registry, reserve) for n in names]
-    assert all(a <= b for a, b in zip(buckets, buckets[1:])), (
-        "bucket not monotonic: "
-        + str([(n, g) for n, g in zip(names, buckets)][:10])
-    )
-
-
-def test_age_floor_entries_emit_in_head():
-    """Any entry whose latest driver row is >= _AGE_FLOOR rounds old
-    must emit before every non-stale green entry — the rotation that
-    guarantees no signal ages out indefinitely."""
-    from hive_clone_spark import registry
-
-    registry.load_all_modules()
-    history = _history()
-    names = list(entry_mod.queries())
-    def _stale(n):
-        eff = _eff(n, history, registry)
-        if not any(n in rows for rows in eff):
-            return len(history) + 1
-        return entry_mod._rounds_stale(n, eff)
-
-    reserve = _reserve(history, registry)
-    stale_idx = [
-        i for i, n in enumerate(names) if _stale(n) >= entry_mod._AGE_FLOOR
-    ]
-    nonstale_green_idx = [
-        i for i, n in enumerate(names) if _bucket(n, history, registry, reserve) > 0
-    ]
-    if stale_idx and nonstale_green_idx:
-        assert max(stale_idx) < min(nonstale_green_idx)
-
-
-def test_new_entries_outrank_nonstale_green_entries():
-    """A freshly registered query (no CORRECTNESS history at all) must
-    appear before every NON-STALE entry that has already been green —
-    the rotation that earns new operators their first driver row.
-    (Age-floor-stale green entries share bucket 0 with new entries, but
-    a new entry's staleness of n_rounds+1 still sorts it ahead of any
-    previously-recorded entry inside the bucket.)"""
-    from hive_clone_spark import registry
-
-    registry.load_all_modules()
-    history = _history()
-    names = list(entry_mod.queries())
-    greens = {
-        n: entry_mod._rounds_green(
-            n, _eff(n, history, registry), has_oracle=n in registry.ORACLE
-        )
-        for n in names
-    }
-    never = [n for n in names if greens[n] == 0]
-    if not never:  # every entry green at least once — rotation complete
-        return
-    reserve = _reserve(history, registry)
-    first_nonstale_green_idx = min(
-        (i for i, n in enumerate(names) if _bucket(n, history, registry, reserve) > 0),
-        default=len(names),
-    )
-    last_never_idx = max(i for i, n in enumerate(names) if greens[n] == 0)
-    assert last_never_idx < first_nonstale_green_idx
+    flags = [_needs_check(n, _eff(n, history, registry)) for n in names]
+    n_first = sum(flags)
+    assert all(flags[:n_first]), [n for n, f in zip(names, flags) if f]
+    assert n_first <= 50, f"{n_first} red/unchecked entries overflow the window"
 
 
 def test_stalest_entries_emit_first_within_green_cohort():
-    """Secondary sort key: within a same-rounds-green cohort (and same
-    r1-flag class), entries the driver has not recorded for more rounds
-    must emit earlier, so a green signal can never age indefinitely."""
+    """After the red / unchecked head, entries follow in non-increasing
+    staleness (rounds since their last effective row), and equal
+    staleness keeps registration order — so a green signal is the next
+    thing rechecked once it is the oldest."""
     from hive_clone_spark import registry
 
     registry.load_all_modules()
-    history = _history()
+    history = entry_mod._load_history()
+    reg = {n: i for i, n in enumerate(registry.QUERIES)}
     names = list(entry_mod.queries())
-    reserve = _reserve(history, registry)
-    keyed = []
+    green = []
     for n in names:
-        b, f, neg_s, _ = entry_mod._emit_key(
-            n,
-            _eff(n, history, registry),
-            has_oracle=n in registry.ORACLE,
-            reg_order=0,
-            n_rounds=len(history),
-            reserved=n in reserve,
-        )
-        keyed.append((b, f, -neg_s))
-    for (g1, f1, s1), (g2, f2, s2) in zip(keyed, keyed[1:]):
-        if (g1, f1) == (g2, f2):
-            assert s1 >= s2, (g1, f1, s1, s2)
+        eff = _eff(n, history, registry)
+        if not _needs_check(n, eff):
+            green.append((_last_row(n, eff)[0], reg[n]))
+    assert green, "no green entry in the committed history"
+    for (s1, r1), (s2, r2) in zip(green, green[1:]):
+        assert s1 > s2 or (s1 == s2 and r1 < r2), (s1, r1, s2, r2)
 
 
-def test_preemptive_age_floor_boundary():
-    """The floor is preemptive (round 12): an entry at staleness
-    _AGE_FLOOR-1 joins bucket 0 THIS round — re-checking at the floor
-    itself would read a signal that already violated the promise. One
-    round younger stays in its green bucket."""
-    floor = entry_mod._AGE_FLOOR
-    green_row = {"x": {"hash_match": True, "err": None}}
+def _simulate(history, store, rounds, window=50, rewrite_at=None):
+    """Run `rounds` driver rounds on a copy of the history: each round
+    checks the first `window` entries of the emission order and records
+    them green. `rewrite_at=(round, name)` bumps that entry's
+    valid_from before the round, as tools/update_fingerprints.py does
+    for a rewritten body. Returns the per-round windows."""
+    history, store = list(history), dict(store)
+    windows = []
+    for r in range(rounds):
+        if rewrite_at and rewrite_at[0] == r:
+            name = rewrite_at[1]
+            store[name] = {**store[name], "valid_from": len(history)}
+        checked = entry_mod._emit_order(history, store)[:window]
+        windows.append(set(checked))
+        history.append({n: {"hash_match": True, "err": None} for n in checked})
+    return windows
 
-    def hist(stale):
-        # one green row, then `stale` rounds without a row
-        return [green_row] + [{}] * stale
 
-    at_breach_minus_1 = entry_mod._emit_key(
-        "x", hist(floor - 1), True, 0, n_rounds=floor
-    )
-    assert at_breach_minus_1[0] == 0  # preemptive: bucket 0
-    younger = entry_mod._emit_key(
-        "x", hist(floor - 2), True, 0, n_rounds=floor - 1
-    )
-    assert younger[0] == 1  # still competes as a green entry
+def test_window_rechecks_every_entry_within_bound():
+    """From the committed history, with a 50-entry window and every
+    check green, each registered entry is in the window at least once
+    in every ceil(N/50) consecutive rounds, and an entry re-fingerprinted
+    between rounds lands in the very next window — here the most
+    recently checked entry, which would otherwise wait ~N/50 rounds."""
+    from hive_clone_spark import registry
+
+    registry.load_all_modules()
+    history = entry_mod._load_history()
+    store = entry_mod._load_fingerprint_store()
+    names = list(registry.QUERIES)
+    bound = math.ceil(len(names) / 50)
+
+    freshest = entry_mod._emit_order(history, store)[-1]
+    windows = _simulate(history, store, 2 * bound + 2, rewrite_at=(1, freshest))
+    assert freshest not in windows[0] and freshest in windows[1]
+    for start in range(len(windows) - bound + 1):
+        seen = set().union(*windows[start : start + bound])
+        missing = sorted(set(names) - seen)
+        assert not missing, (start, missing[:5])
 
 
 def test_rounds_stale_semantics():
@@ -223,8 +170,8 @@ def test_fingerprint_store_is_current():
 def test_rewritten_entry_resorts_into_bucket_zero():
     """A changed source fingerprint (or a valid_from bump) must void
     pre-rewrite driver rows: the entry's effective history goes empty,
-    it becomes maximally stale, and _emit_key lands it in bucket 0 like
-    a new registration — the round-7 verdict's change-aware rotation."""
+    it becomes maximally stale, and _emit_key sorts it with the red /
+    unchecked head like a new registration."""
     from hive_clone_spark import registry
 
     registry.load_all_modules()
@@ -238,22 +185,24 @@ def test_rewritten_entry_resorts_into_bucket_zero():
         name, fn, history, {name: {"fp": fp, "valid_from": 0}}
     )
     assert len(eff) == 5
-    key_green = entry_mod._emit_key(name, eff, True, 0, n_rounds=5)
-    assert key_green[0] == 5  # 5 rounds green
+    assert entry_mod._emit_key(name, eff, n_rounds=5) == (1, 0)
 
-    # Changed fingerprint: history voided, bucket 0, maximally stale.
+    # Changed fingerprint: history voided, head of the order, maximally stale.
     eff2 = entry_mod._effective_history(
         name, fn, history, {name: {"fp": "deadbeef", "valid_from": 0}}
     )
     assert eff2 == []
-    key_new = entry_mod._emit_key(name, eff2, True, 0, n_rounds=5)
-    assert key_new[0] == 0 and key_new[2] == -6
+    assert entry_mod._emit_key(name, eff2, n_rounds=5) == (0, -6)
 
     # valid_from bump voids only earlier rounds.
     eff3 = entry_mod._effective_history(
         name, fn, history, {name: {"fp": fp, "valid_from": 3}}
     )
     assert len(eff3) == 2
+
+    # A red last row (error, no_oracle marker or hash mismatch) also sorts first.
+    for red in ({"err": "boom"}, {"err": "no_oracle"}, {"hash_match": False, "err": None}):
+        assert entry_mod._emit_key(name, eff[:4] + [{name: red}], n_rounds=5) == (0, 0)
 
 
 def test_r7_rewrites_have_voided_history():
@@ -298,34 +247,3 @@ def test_update_fingerprints_tool_semantics(tmp_path, monkeypatch):
     assert "~0 changed" in out.stdout and "+0 new" in out.stdout
     after = json.loads(store.read_text())
     assert after == before
-
-
-def test_escort_and_game_reserve_land_in_window():
-    """Round-10 rotation additions: (a) never-green escort entries
-    (_ESCORT) must emit ahead of the never-checked cohort instead of
-    queueing behind 100+ entries by registration order; (b) the
-    game-refresh reserve — at most _GAME_RESERVE_SLOTS previously
-    checked g_* entries at/past _GAME_REFRESH_AGE staleness — must
-    emit right after the flag-0 tier, inside any plausible driver
-    window, because the bench-excluded g_* block is otherwise only
-    ever touched here."""
-    from hive_clone_spark import registry
-
-    registry.load_all_modules()
-    history = _history()
-    names = list(entry_mod.queries())
-    reserve = _reserve(history, registry)
-    assert len(reserve) <= entry_mod._GAME_RESERVE_SLOTS
-    greens = {
-        n: entry_mod._rounds_green(
-            n, _eff(n, history, registry), has_oracle=n in registry.ORACLE
-        )
-        for n in names
-    }
-    for n in entry_mod._ESCORT:
-        if n in greens and greens[n] == 0:
-            assert names.index(n) < 20, (n, names.index(n))
-    for n in reserve:
-        assert names.index(n) < 20, (n, names.index(n))
-        # reserve members are real re-checks: previously green g_*
-        assert n.startswith("g_") and greens[n] > 0

@@ -1,7 +1,6 @@
-"""CI guard: the generated registry-inventory tables in SURVEY.md and
-COVERAGE.md must match the live registry (tools/gen_inventory.py).
-Inventory drift — an entry added without regenerating, or a stale
-count — fails the suite instead of surfacing as a verdict nit."""
+"""CI guard: the generated registry-inventory table in COVERAGE.md must
+match the live registry (tools/gen_inventory.py). Inventory drift — an
+entry added without regenerating, or a stale count — fails the suite."""
 
 from __future__ import annotations
 
@@ -15,12 +14,10 @@ sys.path.insert(0, str(REPO / "tools"))
 def test_inventory_tables_in_sync():
     import gen_inventory
 
-    generated = gen_inventory.render()
-    for name in ("SURVEY.md", "COVERAGE.md"):
-        path = REPO / name
-        assert gen_inventory.splice(path, generated) == path.read_text(), (
-            f"{name} inventory drifted — run: python tools/gen_inventory.py --write"
-        )
+    path = gen_inventory.TARGET
+    assert gen_inventory.splice(path, gen_inventory.render()) == path.read_text(), (
+        f"{path.name} inventory drifted — run: python tools/gen_inventory.py --write"
+    )
 
 
 def test_every_entry_has_an_oracle():

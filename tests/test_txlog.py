@@ -461,6 +461,22 @@ def test_deletion_vector_checkpoint_and_vacuum(spark, tmp_path):
     assert tl.read(spark).where(F.col("k") < 5).count() == 0
 
 
+def test_deletion_vector_corrupt_sidecar_fails_closed(spark, tmp_path):
+    """A torn DV sidecar must make the read raise: parsed leniently it
+    yields no positions, which silently un-deletes the rows it hid."""
+    from pyspark.sql import functions as F
+
+    tl = _mk(tmp_path)
+    tl.append(spark.range(20).withColumnRenamed("id", "k"), n_files=1)
+    tl.delete_where_mor(spark, F.col("k") < 5)
+    assert tl.read(spark).count() == 15
+    (sidecar,) = tl.dvs().values()
+    path = tl.root / sidecar
+    path.write_bytes(path.read_bytes()[: path.stat().st_size // 2])
+    with pytest.raises(Exception, match="(?i)malformed"):
+        tl.read(spark).collect()
+
+
 def test_deletion_vector_rewrite_drops_binding(spark, tmp_path):
     """Removing a data file (compaction/rewrite) retires its DV."""
     from pyspark.sql import functions as F

@@ -1,12 +1,11 @@
-"""Generate the registry-derived operator inventory tables.
+"""Generate the registry-derived operator inventory table.
 
-The 180+-entry registry (hive_clone_spark.registry.QUERIES/ORACLE) is
-the single source of truth for what is implemented and oracle-gated;
-SURVEY.md §2b and COVERAGE.md carry human-written context PLUS a
-generated table each, delimited by marker comments. This script emits
-those tables from the registry itself — module, file:line, oracle
-status — so the inventory cannot drift from the code (the round-6
-verdict's "177 vs 178" nit, made structurally impossible).
+The registry (hive_clone_spark.registry.QUERIES/ORACLE) is the single
+source of truth for what is implemented and oracle-gated; COVERAGE.md
+carries human-written context PLUS one generated table, delimited by
+marker comments. This script emits that table from the registry itself
+— module, file:line, oracle status — so the inventory cannot drift
+from the code.
 
 Usage:
     python tools/gen_inventory.py --write   # regenerate in place
@@ -23,6 +22,7 @@ import pathlib
 import sys
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
+TARGET = REPO / "COVERAGE.md"
 BEGIN = "<!-- BEGIN GENERATED REGISTRY INVENTORY (tools/gen_inventory.py) -->"
 END = "<!-- END GENERATED REGISTRY INVENTORY -->"
 
@@ -131,20 +131,15 @@ def splice(path: pathlib.Path, generated: str) -> str:
 
 def main() -> int:
     mode = sys.argv[1] if len(sys.argv) > 1 else "--check"
-    targets = [REPO / "SURVEY.md", REPO / "COVERAGE.md"]
-    generated = render()
-    dirty = []
-    for path in targets:
-        new = splice(path, generated)
-        if new != path.read_text():
-            dirty.append(path)
-            if mode == "--write":
-                path.write_text(new)
+    new = splice(TARGET, render())
+    dirty = new != TARGET.read_text()
     if mode == "--write":
-        print(f"updated: {[str(p) for p in dirty] or 'nothing (in sync)'}")
+        if dirty:
+            TARGET.write_text(new)
+        print(f"updated: {TARGET}" if dirty else "nothing to update (in sync)")
         return 0
     if dirty:
-        print(f"DRIFT: {[str(p) for p in dirty]} — run tools/gen_inventory.py --write")
+        print(f"DRIFT: {TARGET} — run tools/gen_inventory.py --write")
         return 1
     print("inventory in sync")
     return 0

@@ -20,9 +20,11 @@ Usage:
     python tools/parallelism_audit.py [name-substring ...]
         [--threshold 1.5] [--sf-dir /root/testdata/sf0.1]
 
-Writes parallelism_audit.json next to this file and prints flagged
-queries. Not CI-gated (it executes the suite); the importable helpers
-are smoke-tested in tests/test_sources.py.
+Writes parallelism_audit.json (parallelism_audit_partial.json for a
+name-filtered run) next to this file and prints flagged queries. The
+output is a local artifact, not committed (see .gitignore). Not
+CI-gated (it executes the suite); the job-id probe helpers are
+tested in tests/test_parallelism_audit.py.
 
 KNOWN LIMITATION (round-10 advice): setJobGroup properties are
 thread-local and NOT inherited by Python worker threads under
@@ -184,8 +186,8 @@ def main() -> int:
                 f"{row['n_single_task_stages']}/{row['n_stages']} single-task "
                 f"stages, max parallelism {row['max_tasks']}"
             )
-    # a name-filtered run must not clobber the committed full-suite
-    # artifact with a subset (it did once)
+    # a name-filtered run writes its subset to a separate file, so it
+    # never overwrites a full-suite audit from an earlier run
     fname = "parallelism_audit.json" if not args else "parallelism_audit_partial.json"
     out = Path(__file__).resolve().parent / fname
     out.write_text(json.dumps({"threshold": threshold, "sf_dir": sf_dir,
