@@ -2,45 +2,41 @@
 
 Implements the BASELINE.md:32-36 measurement protocol: warm the JVM
 with throwaway actions, then time each registered headline query
-end-to-end (plan + execute + collect) at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], one discarded
-per-query warmup run (codegen JIT) + 3 measured runs, report the
-per-query MEDIAN. Spark version, driver memory, and
-shuffle-partition count are recorded alongside the results.
+end-to-end (plan + execute + collect) at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test tables) on local[$SPARK_GRAFT_CPUS]. Spark version,
+driver memory, shuffle-partition count and the machine-speed
+calibration probe (``perfbench/run.py``'s ``calibration_probe``) are
+recorded alongside the results.
 
-The stdout line is deliberately small: round 1's full 78-query dict
-overflowed the driver's output-tail capture ("parsed": null in
-BENCH_r01.json), so the per-query detail (including every individual
-run) goes to bench_detail.json next to this file and stdout carries
-only the total + the 10 slowest medians, rounded to 2 dp.
+Per query: ONE discarded warmup (codegen JIT — measured up to 3x
+warm), then ONE measured run. If the measured run is ANOMALOUS —
+slower than the query's own warmup, which pays codegen and is normally
+the slowest execution, or over 1.5x its committed baseline median —
+one retry runs and the MIN of the two is reported. The per-query floor
+is warm + codegen, so total protocol cost is ~2.3x the suite's warm
+total. Single warm samples jitter by a fixed few-hundred-ms; the
+regression gate's 0.75 s absolute floor exists precisely so sub-second
+jitter cannot trip it, and the anomaly retry bounds one-sided hiccups
+on the heavies.
 
-A wall-clock budget (SPARK_GRAFT_BENCH_BUDGET, default 450 s of
+A wall-clock budget (SPARK_GRAFT_BENCH_BUDGET, default 1500 s of
 measured query time) guards the driver's invocation timeout: once
-spent, remaining queries get a single run instead of three (their
-median is that run). The detail file records the actual run count per
-query so degraded entries are visible.
-
-Run counts (BASELINE.md protocol, amended as the registry grew past
-120 / 138 / 153 / 196 bench queries, re-amended at 239 when even the
-2-run fast tier stopped fitting any budget the driver window allows):
-every query gets ONE discarded warmup (codegen JIT — measured up to
-3x warm) and ONE measured run; if the measured run is ANOMALOUS
-(slower than the query's own warmup, which pays codegen and is
-normally the slowest execution — a provable scheduler hiccup), one
-retry runs and the MIN of the two is reported. The per-query floor is
-warm + codegen, so total protocol cost is ~2.3x the suite's warm
-total — the earlier 2-run fast tier cost ~3.3x and pushed the tail
-of a 239-query suite into COLD single runs (up to 5x warm, 93
-entries, a false 1.37x "regression"). Single warm samples jitter by a
-fixed few-hundred-ms; the regression gate's 0.75 s absolute floor
-exists precisely so sub-second jitter cannot trip it, and the
-anomaly retry bounds one-sided hiccups on the heavies.
+spent, each remaining query's cold warmup run is its only sample, and
+it is listed as degraded and cold-only in the detail file.
 
 Queries run in order of DESCENDING known cost (committed baseline
 median; queries new since the snapshot go first at +inf — they have
 no history, so they must get honest warm samples): if the budget does
 blow, the forced-cold tail lands on the cheapest queries, where a
 cold sample misstates the total by tenths of a second, not multiples.
+
+The stdout line is deliberately small: round 1's full 78-query dict
+overflowed the driver's output-tail capture ("parsed": null in
+BENCH_r01.json), so the per-query detail (including every individual
+run) goes to bench_detail.json next to this file and stdout carries
+only the total + the 10 slowest medians, rounded to 2 dp. The
+per-query WindowExec warning is silenced so the captured tail keeps
+that line.
 """
 
 from __future__ import annotations
@@ -56,11 +52,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from hive_clone_spark import registry  # noqa: E402
 from hive_clone_spark.session import get_spark  # noqa: E402
+from perfbench.run import calibration_probe, quiet  # noqa: E402
 
 # Queries excluded from the benchmark (fixture-scale demos, not data-scale).
 EXCLUDE_PREFIXES = ("g_",)
 
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 # 450 -> 495 when the registry hit 221 entries (196 bench queries):
 # the r8 additions (~10 entries, ~14 s warm) pushed the warmup+samples
 # total past 450 and the last 11 alphabetical queries (q89-q99) went
@@ -87,39 +83,20 @@ RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 # (extra samples exactly when a machine runs slow). Raised before the
 # first degradation instead of after it, for once.
 BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1500"))
-# Session recycling: restart the SparkSession every N queries
-# (re-warming footer caches; restart time is NOT counted against the
-# measured budget). DEFAULT OFF — the round-6 A/B (NOTES.md) measured
-# NO session-aging effect (fresh 16.07 s vs aged 15.15 s on a
-# 12-query sample; the r5 "q68 at 10.5 s aged" reading did not
-# reproduce), and with 140+ queries the ~5 restarts cost ~60 s of
-# wall clock that is better left as headroom under the driver's
-# invocation timeout. The machinery stays behind the env var for
-# future A/Bs. The r4→r5 drift root causes were elsewhere: see
-# SCALE.md "Round 6: the bench-drift diagnosis".
-RECYCLE_EVERY = int(os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "0"))
-
-
-_CALIBRATION_SEC = None  # machine-speed probe, recorded in the detail
-
-
 def _fresh_session(sf_dir: str):
-    global _CALIBRATION_SEC
+    """A warmed session and its machine-speed calibration (seconds).
+
+    The calibration is a fixed warm workload whose wall time varies
+    only with the VM (measured swing between round drivers: ~1.35x),
+    so a slow recorded run is diagnosable from the detail file alone
+    instead of reading as a code regression."""
     spark = get_spark(app_name="hive-clone-spark-bench")
-    # Warm up the JVM / parquet footer caches with throwaway actions on
-    # each fact table the query families scan. The SECOND timing below
-    # is the machine-speed calibration: a fixed warm workload whose
-    # wall time varies only with the VM (measured swing between round
-    # drivers: ~1.35x), so a slow recorded run is diagnosable from the
-    # detail file alone instead of reading as a code regression.
-    for t in ("lineitem", "events", "documents", "embeddings"):
+    quiet(spark)
+    # warm the parquet footer caches of the other fact tables the query
+    # families scan; the probe warms lineitem and events itself
+    for t in ("documents", "embeddings"):
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    t0 = time.perf_counter()
-    for t in ("lineitem", "events"):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    if _CALIBRATION_SEC is None:
-        _CALIBRATION_SEC = round(time.perf_counter() - t0, 4)
-    return spark
+    return spark, round(calibration_probe(spark, sf_dir), 4)
 
 
 def main() -> None:
@@ -127,7 +104,7 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     registry.load_all_modules()
-    spark = _fresh_session(sf_dir)
+    spark, calibration_sec = _fresh_session(sf_dir)
 
     # Descending-known-cost order (module docstring): new queries first
     # (no history -> +inf), then by committed baseline median, so a
@@ -149,15 +126,9 @@ def main() -> None:
 
     runs: dict[str, list[float]] = {}
     medians: dict[str, float] = {}
-    targets: dict[str, int] = {}
     cold_only: list[str] = []
     spent = 0.0
-    n_run = 0
     for name in bench_names:
-        if RECYCLE_EVERY > 0 and n_run > 0 and n_run % RECYCLE_EVERY == 0:
-            spark.stop()
-            spark = _fresh_session(sf_dir)
-        n_run += 1
         fn = registry.QUERIES[name]
         samples: list[float] = []
         # one discarded warmup run per query: the first execution pays
@@ -178,10 +149,8 @@ def main() -> None:
             # sample. ALWAYS degraded — a cold median (up to 5x warm)
             # must never sit in the detail file indistinguishable from a
             # by-design warm single run (it would falsely trip the
-            # per-query gate later), so force the target above the
-            # sample count and tag the entry cold.
+            # per-query gate later), so tag the entry cold.
             samples.append(round(dt, 4))
-            targets[name] = max(2, RUNS)
             cold_only.append(name)
             runs[name] = samples
             medians[name] = round(statistics.median(samples), 4)
@@ -199,7 +168,6 @@ def main() -> None:
         # >= the sample, so no retry fired). MIN of the retried pair,
         # because heavy jitter is one-sided — a scheduler hiccup can
         # only inflate a sample.
-        targets[name] = 1
         t0 = time.perf_counter()
         fn(spark, sf_dir).collect()
         dt = time.perf_counter() - t0
@@ -265,9 +233,9 @@ def main() -> None:
                 end_retried, end_dropped = [], []
 
     total = round(sum(medians.values()), 2)
-    # degraded = budget-forced below the ADAPTIVE target (a 1-run heavy
-    # query that targeted 1 run is by-design, not degraded)
-    degraded = sorted(n for n, s in runs.items() if len(s) < targets.get(n, RUNS))
+    # degraded = budget-forced to its cold warmup sample (a warm single
+    # run is by-design, not degraded)
+    degraded = sorted(cold_only)
     # contention self-diagnosis: total over the queries SHARED with the
     # committed baseline, as a ratio. A clean run sits near 1.0; a run
     # contended by another JVM (or a cold-degraded cascade) reads well
@@ -298,15 +266,13 @@ def main() -> None:
                 "unit": "sec",
                 "queries": medians,
                 "runs_per_query": runs,
-                "runs": RUNS,
                 "budget_sec": BUDGET_SEC,
-                "recycle_every": RECYCLE_EVERY,
                 "degraded_queries": degraded,
                 "cold_only_queries": cold_only,
                 "end_retry_queries": end_retried,
                 "end_retry_dropped": end_dropped,
                 "vs_baseline_ratio": vs_baseline,
-                "calibration_sec": _CALIBRATION_SEC,
+                "calibration_sec": calibration_sec,
                 "sf": sf,
                 "config": {
                     "spark_version": spark.version,
@@ -338,7 +304,7 @@ def main() -> None:
                 "runs": 1,
                 "n_degraded": len(degraded),
                 "vs_baseline_ratio": vs_baseline,
-                "calibration_sec": _CALIBRATION_SEC,
+                "calibration_sec": calibration_sec,
                 "sf": sf,
             }
         )

@@ -1140,8 +1140,11 @@ class TxLog:
         latest = self.latest_version()
         if latest < 0:
             return {"cutoff": -1, "n_data_files_removed": 0, "n_commits_removed": 0}
-        cutoff = max(0, latest - retain_versions + 1)
-        retained = [v for v in self.versions() if v >= cutoff]
+        # never below the oldest commit left: an earlier vacuum already
+        # dropped what lies under it and pinned a checkpoint at it
+        versions = self.versions()
+        cutoff = max(versions[0], latest - retain_versions + 1)
+        retained = [v for v in versions if v >= cutoff]
         referenced: set[str] = set()
         referenced_dvs: set[str] = set()
         for v in retained:

@@ -852,18 +852,12 @@ def q205_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q228: composite-state per-user census — one keyed stream operator
 # holding TWO state shapes at once: scalar running totals (event count
-# + exact cents sum) AND a per-event-type count MAP. This is the
-# natural fit for Spark 4's transformWithStateInPandas (a
-# StatefulProcessor with named ValueState + MapState variables on the
-# RocksDB provider), and `user_census_tws` below IS that spelling —
-# but the TWS Python lane speaks protobuf to its state server
-# (pyspark.sql.streaming.proto needs google.protobuf), a dependency
-# this container does not ship. The registered entry therefore probes
-# for the dependency and otherwise runs `user_census_fallback`:
+# + exact cents sum) AND a per-event-type count MAP, through
 # applyInPandasWithState with the map encoded as two aligned ARRAY
-# state columns (array-typed state is proven since q138). Both forms
-# share every semantic decision, so the choice is a deployment detail,
-# not a behavior change.
+# state columns (array-typed state is proven since q138).
+# transformWithStateInPandas would spell the map as MapState, but its
+# Python lane speaks protobuf to its state server, and google.protobuf
+# is not a dependency of this project.
 #
 # Determinism (q138 discipline): events staged to 4 files, one file
 # per micro-batch; every transition is a commutative monoid (counts,
@@ -872,16 +866,15 @@ def q205_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emission with the largest n_events per user (strictly increasing).
 #
 # At 100 TB: state is O(1) per user (two BIGINTs + a small-domain type
-# map); stateful shuffle keyed by user_id; on a real cluster the TWS/
-# RocksDB lane adds off-heap state + incremental changelog checkpoints.
+# map); stateful shuffle keyed by user_id.
 # ---------------------------------------------------------------------------
-_TWS_FILES = 4
+_CENSUS_FILES = 4
 
-TWS_OUT_SCHEMA = (
+CENSUS_OUT_SCHEMA = (
     "user_id BIGINT, n_events BIGINT, sum_cents BIGINT, n_types INT, "
     "top_type STRING, top_type_n BIGINT"
 )
-TWS_STATE_SCHEMA = (
+CENSUS_STATE_SCHEMA = (
     "n BIGINT, cents BIGINT, types ARRAY<STRING>, counts ARRAY<BIGINT>"
 )
 
@@ -892,9 +885,10 @@ TWS_STATE_SCHEMA = (
 # verdict task 5).
 
 
-def user_census_fallback(events_stream: DataFrame) -> DataFrame:
-    """applyInPandasWithState form: the census map rides as two aligned
-    array state columns (sorted by type for a canonical encoding)."""
+def user_census(events_stream: DataFrame) -> DataFrame:
+    """Per-user census state: running totals, with the census map riding
+    as two aligned array state columns (sorted by type for a canonical
+    encoding)."""
     # ship census_merge/census_row BY VALUE: module-level helpers
     # pickle by reference, and the driver contract imports this repo by
     # FILE PATH from a foreign cwd — executors then have no
@@ -924,68 +918,11 @@ def user_census_fallback(events_stream: DataFrame) -> DataFrame:
 
     return events_stream.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=TWS_OUT_SCHEMA,
-        stateStructType=TWS_STATE_SCHEMA,
+        outputStructType=CENSUS_OUT_SCHEMA,
+        stateStructType=CENSUS_STATE_SCHEMA,
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-
-
-def user_census_tws(events_stream: DataFrame) -> DataFrame:
-    """transformWithStateInPandas form (requires google.protobuf and
-    the RocksDB state store provider — see module comment)."""
-    from pyspark import cloudpickle as _cp
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    import hive_clone_spark.streaming._workers as _wmod
-    from hive_clone_spark.streaming._workers import census_merge, census_row
-
-    _cp.register_pickle_by_value(_wmod)  # foreign-cwd executors (see fallback)
-
-    class UserCensusProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, cents BIGINT"
-            )
-            self._types = handle.getMapState(
-                "types", "event_type STRING", "n BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            n, cents = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            census = {k[0]: v[0] for k, v in self._types.iterator()}
-            for pdf in rows:
-                dn, dc = census_merge(census, pdf)
-                n += dn
-                cents += dc
-            self._totals.update((n, cents))
-            for et, cnt in census.items():
-                self._types.updateValue((et,), (cnt,))
-            yield census_row(user_id, n, cents, census)
-
-        def close(self) -> None:
-            pass
-
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserCensusProcessor(),
-        outputStructType=TWS_OUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
-def _tws_available() -> bool:
-    """The TWS Python lane needs google.protobuf for its state-server
-    protocol; probe instead of crashing the stream mid-query."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent 'google' namespace absent
-        return False
 
 
 @register(
@@ -1030,7 +967,7 @@ def q228_stream_composite_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (
         table(spark, sf_dir, "events")
         .select("user_id", "event_type", "value")
-        .repartition(_TWS_FILES)
+        .repartition(_CENSUS_FILES)
         .write.mode("overwrite")
         .parquet(src_dir)
     )
@@ -1040,22 +977,10 @@ def q228_stream_composite_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    use_tws = _tws_available()
-    if use_tws:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        stream = user_census_tws(src)
-    else:
-        stream = user_census_fallback(src)
     try:
-        run_to_memory(stream, "q228_census", output_mode="update")
+        run_to_memory(user_census(src), "q228_census", output_mode="update")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if use_tws:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     t = spark.table("q228_census")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (

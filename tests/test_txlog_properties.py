@@ -14,7 +14,7 @@ sequences can be long enough to exercise checkpoint boundaries.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from hive_clone_spark.sources.txlog import _CHECKPOINT_EVERY, TxLog
@@ -283,6 +283,8 @@ compose_op = st.one_of(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=st.lists(compose_op, min_size=2, max_size=4))
+# a wider retention after a narrower one once re-pinned a vacuumed commit
+@example(ops=[("merge_upsert", {1}), ("vacuum", 1), ("vacuum", 2)])
 def test_spec_dv_merge_interleaving_matches_model(
     spark, tmp_path_factory, ops
 ):

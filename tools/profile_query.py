@@ -1,161 +1,104 @@
-"""Per-query profiling harness for the optimization rounds.
+"""Per-entry work profile, read with the benchmark's own tracer.
 
 Usage:
-    python tools/profile_query.py q204_topo_generations [more names...] \
-        [--sf /root/testdata/sf0.1] [--runs 3] [--plan-dir plans/r13] \
-        [--suffix before] [--events]
+    python tools/profile_query.py [name-substring ...] [--sf DIR] [--threshold 1.5]
 
-For each named query: one discarded warmup, then `--runs` timed runs
-with the noop sink (guide §1.4: computes every column, discards the
-result, no collect-to-driver cost), plus one timed `.collect()` run for
-comparison with bench methodology. Writes `.explain("formatted")` to
-<plan-dir>/<name>_<suffix>.txt when --plan-dir is given.
+For each registry entry whose name contains one of the substrings (every
+entry when none is given; the fixture-scale ``g_*`` entries are left out),
+one discarded warm-up request, then one request bracketed by
+``perfbench/layers.Tracer`` marks: before the entry call, when it returns its
+frame (the *body*) and after ``.collect()`` (the *collect* phase). Work is
+attributed by Spark's monotonic job, stage and SQL-execution ids, so jobs
+submitted from helper threads count, and only stages that ran are counted
+(a job's skipped stages, whose shuffle output is reused, are not).
 
-With --events, enables the Spark event log and prints a per-job time
-breakdown (job description, duration) after each profiled run —
-the local substitute for the Spark UI's job/stage view.
+stdout carries one JSON line per entry: the Tracer counters plus
+``body.sql``, the call site (``description``) of each SQL execution the body
+ran. stderr gets the machine-speed calibration probe first, then a ``FLAG``
+line for each slow entry whose stages are mostly single-task. A flag is a
+lead, not a verdict: final limits, 1-row aggregates and driver-bounded
+fixpoint probes legitimately run single-task stages. Formatted plans come
+from ``tools/explain_audit.py``.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from hive_clone_spark import registry  # noqa: E402
+from hive_clone_spark import catalog, registry  # noqa: E402
+from perfbench import layers  # noqa: E402
+from perfbench.run import calibration_probe, quiet  # noqa: E402
 
 
-def _event_jobs(event_dir: Path, app_id: str) -> list[tuple[float, str]]:
-    """Parse the event log: [(seconds, job description/first stage name)]."""
-    out = []
-    files = sorted(event_dir.glob(f"{app_id}*"))
-    # Spark 4 rolling layout: eventlog_v2_<appId>/events_*_<appId>
-    files += sorted(event_dir.glob(f"eventlog_v2_{app_id}/events_*"))
-    for f in files:
-        if f.is_dir():
-            continue
-        if f.suffix == ".zstd":
-            import zstandard
-
-            raw = zstandard.ZstdDecompressor().stream_reader(f.open("rb")).read()
-            text = raw.decode("utf-8", errors="replace")
-        else:
-            text = f.read_text()
-        starts: dict[int, tuple[int, str]] = {}
-        for line in text.splitlines():
-            try:
-                ev = json.loads(line)
-            except ValueError:
-                continue
-            if ev.get("Event") == "SparkListenerJobStart":
-                desc = ev.get("Properties", {}).get(
-                    "spark.job.description"
-                ) or (ev.get("Stage Infos") or [{}])[0].get("Stage Name", "?")
-                starts[ev["Job ID"]] = (ev["Submission Time"], desc)
-            elif ev.get("Event") == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in starts:
-                    t0, desc = starts.pop(jid)
-                    out.append(
-                        (jid, (ev["Completion Time"] - t0) / 1000.0, desc)
-                    )
-    return out
+def _totals(c: dict) -> tuple[float, float, float]:
+    """(wall s, stages, single-task stages) of a request, both phases."""
+    return tuple(
+        c.get(f"body.{k}", 0) + c.get(f"collect.{k}", 0)
+        for k in ("s", "stages", "single_task_stages")
+    )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+")
-    ap.add_argument("--sf", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--plan-dir", default=None)
-    ap.add_argument("--suffix", default="before")
-    ap.add_argument("--events", action="store_true")
-    ap.add_argument("--collect", action="store_true",
-                    help="also time one .collect() run (bench methodology)")
-    args = ap.parse_args()
+def flag(c: dict, threshold: float) -> bool:
+    """A slow request whose stages are mostly (or entirely) single-task."""
+    wall, stages, single = _totals(c)
+    return wall >= threshold and stages > 0 and single / stages >= 0.5
 
-    event_dir = Path("/tmp/spark-events-profile")
-    if args.events:
-        event_dir.mkdir(exist_ok=True)
-        os.environ["SPARK_GRAFT_EVENTLOG"] = str(event_dir)
+
+def profile(spark, tracer: layers.Tracer, fn, sf_dir: str) -> dict:
+    """Counters of one traced request of ``fn``, after one discarded warm-up."""
+    fn(spark, sf_dir).collect()
+    tracer.start_pass()
+    try:
+        b0 = tracer.mark()
+        df = fn(spark, sf_dir)
+        b1 = tracer.mark()
+        df.collect()
+        b2 = tracer.mark()
+    finally:
+        tracer.end_pass()
+    # read right after the request, so the newest executions are its own
+    executions = tracer._last_executions(b2["exec"] - b0["exec"])
+    body_sql = [ex["description"] for ex in executions if ex["executionId"] < b1["exec"]]
+    return {**tracer.record(df, b0, b1, b2), "body.sql": body_sql}
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", help="entry-name substrings (default: all)")
+    ap.add_argument("--sf", default=catalog.DEFAULT_SF_DIR)
+    ap.add_argument("--threshold", type=float, default=1.5,
+                    help="wall seconds from which a single-task-bound entry is flagged")
+    args = ap.parse_args(argv)
 
     from hive_clone_spark.session import get_spark
 
-    if args.events:
-        # eventLog confs must exist before the SparkContext does: build
-        # the session FIRST with get_spark's knobs via PYSPARK_SUBMIT_ARGS
-        os.environ["PYSPARK_SUBMIT_ARGS"] = (
-            f"--conf spark.eventLog.enabled=true "
-            f"--conf spark.eventLog.compress=false "
-            f"--conf spark.eventLog.rolling.enabled=false "
-            f"--conf spark.eventLog.dir={event_dir} pyspark-shell"
-        )
-
-    spark = get_spark(app_name="profile")
     registry.load_all_modules()
-
-    # warm footer caches same as bench, then the same machine-speed
-    # calibration probe bench.py records — profiler medians from
-    # different epochs are only comparable after dividing by this
-    for t in ("lineitem", "events", "documents", "embeddings"):
-        spark.read.parquet(os.path.join(args.sf, f"{t}.parquet")).count()
-    t0 = time.perf_counter()
-    for t in ("lineitem", "events"):
-        spark.read.parquet(os.path.join(args.sf, f"{t}.parquet")).count()
-    print(f"calibration_sec={time.perf_counter() - t0:.4f}", flush=True)
-
-    for name in args.names:
-        fn = registry.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"{name}: warmup")
-        t0 = time.perf_counter()
-        fn(spark, args.sf).collect()
-        warm = time.perf_counter() - t0
-        times = []
-        for i in range(args.runs):
-            spark.sparkContext.setJobDescription(f"{name}: run{i}")
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-        line = (
-            f"{name}: warmup(collect)={warm:.3f}s noop runs="
-            + "/".join(f"{t:.3f}" for t in times)
-            + f" median={statistics.median(times):.3f}"
-        )
-        if args.collect:
-            t0 = time.perf_counter()
-            fn(spark, args.sf).collect()
-            line += f" collect={time.perf_counter() - t0:.3f}"
-        print(line, flush=True)
-        if args.plan_dir:
-            pd = Path(args.plan_dir)
-            pd.mkdir(parents=True, exist_ok=True)
-            qdf = fn(spark, args.sf)
-            plan = qdf._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            (pd / f"{name}_{args.suffix}.txt").write_text(plan)
-        spark.sparkContext.setJobDescription(None)
-
-    if args.events:
-        app_id = spark.sparkContext.applicationId
-        spark.stop()
-        time.sleep(1)
-        jobs = _event_jobs(event_dir, app_id)
-        total = sum(d for _, d, _ in jobs)
-        print(f"-- {len(jobs)} jobs, {total:.2f}s total job time --")
-        for jid, dur, desc in jobs:
-            print(f"  job {jid:4d}  {dur:7.3f}s  {desc[:100]}")
+    spark = get_spark(app_name="profile")
+    quiet(spark)
+    print(f"calibration_sec={calibration_probe(spark, args.sf):.4f}", file=sys.stderr)
+    tracer = layers.Tracer(spark, spark._jvm.java.lang.ProcessHandle.current().pid())
+    names = [
+        n for n in sorted(registry.QUERIES)
+        if not n.startswith("g_") and (not args.names or any(a in n for a in args.names))
+    ]
+    for name in names:
+        try:
+            row = profile(spark, tracer, registry.QUERIES[name], args.sf)
+        except Exception as e:  # diagnostic tool: report, keep going
+            print(json.dumps({"entry": name, "error": f"{type(e).__name__}: {e}"[:500]}), flush=True)
+            continue
+        print(json.dumps({"entry": name, **row}), flush=True)
+        if flag(row, args.threshold):
+            wall, stages, single = _totals(row)
+            print(f"FLAG {name}: {wall:.2f}s, {single:.0f}/{stages:.0f} single-task stages",
+                  file=sys.stderr)
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
