@@ -594,10 +594,12 @@ _RG_BUCKETS = 16
 def q141_rowgroup_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
+    from hive_clone_spark.sources.txlog import _column_max
+
     dest = _warehouse(sf_dir, "rgskip_q141")
     os.makedirs(dest, exist_ok=True)
     o = table(spark, sf_dir, "orders").select("o_orderkey")
-    m = int(o.agg(F.max("o_orderkey")).collect()[0][0])
+    m = _column_max(o, "o_orderkey")
     lo, hi = m // 3, m // 2
     bucketed = o.withColumn(
         "bucket",

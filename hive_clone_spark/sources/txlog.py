@@ -11,11 +11,12 @@ atomic set of add/remove file actions. Everything the format guarantees
 falls out of two properties:
 
   * **commits are ordinal and exclusive** — commit N is the file
-    `_txlog/{N:08d}.json`, created with O_CREAT|O_EXCL, so two writers
-    racing for version N get exactly one winner (optimistic
-    concurrency; the loser re-reads and retries). On HDFS and local
-    filesystems create-exclusive is atomic; object stores need a
-    conditional-put / lock-service variant of the same contract.
+    `_txlog/{N:08d}.json`, written whole to a temp file and then
+    hard-linked to its final name, so two writers racing for version N
+    get exactly one winner (optimistic concurrency; the loser re-reads
+    and retries) and a crashed writer leaves no partial commit. On HDFS
+    and local filesystems link-if-absent is atomic; object stores need
+    a conditional-put / lock-service variant of the same contract.
   * **the active file set at version V is a pure fold over commits
     0..V** — so any reader can reconstruct any historical snapshot
     (time travel) without coordination, and concurrent readers never
@@ -42,6 +43,7 @@ warehouse surface the driver contract adds.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import pathlib
@@ -55,6 +57,23 @@ from hive_clone_spark.catalog import table
 from hive_clone_spark.registry import register
 
 _CHECKPOINT_EVERY = 8
+
+
+def _publish(path: pathlib.Path, payload: dict) -> None:
+    """Write ``payload`` as JSON to ``path`` whole or not at all: into a
+    temp file that no ``*.json`` glob matches, fsync'd, then hard-linked
+    to ``path``. The link is an atomic put-if-absent (FileExistsError
+    when ``path`` exists), so a writer that dies mid-write leaves at most
+    an unreferenced temp file, never a torn ``path``."""
+    tmp = path.with_name(f".{path.name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.link(tmp, path)
+    finally:
+        tmp.unlink(missing_ok=True)
 
 
 def _footer_minmax(path, col: str) -> tuple[int, int] | None:
@@ -194,14 +213,9 @@ class TxLog:
         travel to an empty snapshot resolves the schema AS OF that
         version, never a later writer's."""
         if version in self._replay_cache:
-            files, stats, dvs, cons, schema, meta = self._replay_cache[
-                version
-            ]
-            # shallow copies: callers treat the containers as their own
-            return (
-                set(files), dict(stats), dict(dvs), dict(cons), schema,
-                dict(meta),
-            )
+            # deep copies: callers treat the fold, down to each file's
+            # stats dict and the schema, as their own
+            return copy.deepcopy(self._replay_cache[version])
         start, active, stats, dvs, cons, schema, meta = (
             0, [], {}, {}, {}, None, {},
         )
@@ -252,11 +266,9 @@ class TxLog:
                 schema = c["schema"]
             if "meta" in c:
                 meta = dict(c["meta"])
-        self._replay_cache[version] = (
-            set(files), dict(stats), dict(dvs), dict(cons), schema,
-            dict(meta),
-        )
-        return files, stats, dvs, cons, schema, meta
+        fold = (files, stats, dvs, cons, schema, meta)
+        self._replay_cache[version] = copy.deepcopy(fold)
+        return fold
 
     def active_files(self, version: int | None = None) -> list[str]:
         """Fold add/remove actions up to ``version`` (default latest),
@@ -602,7 +614,7 @@ class TxLog:
         ``expected_version`` is the optimistic-concurrency token: the
         version the writer READ before preparing its change. If someone
         else committed since (latest != expected), or two writers race
-        for the same slot (O_EXCL loses), CommitConflictError — the
+        for the same slot (the link loses), CommitConflictError — the
         caller re-reads, revalidates, and retries. ``txn`` stamps the
         commit with an application transaction id (see
         commit_idempotent). ``schema`` (default: the schema stashed by
@@ -638,15 +650,12 @@ class TxLog:
             payload["meta"] = meta
         if txn is not None:
             payload["txn"] = txn
-        path = self.log_dir / self._commit_name(version)
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            _publish(self.log_dir / self._commit_name(version), payload)
         except FileExistsError:
             raise CommitConflictError(
                 f"txlog: version {version} was committed concurrently"
             ) from None
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
         self._staged_schema = None
         if version % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
             self._write_checkpoint(version)
@@ -777,8 +786,10 @@ class TxLog:
         a sidecar file; a sorted position list is the same contract at
         the fidelity this log needs."""
         name = f"{uuid.uuid4().hex}.json"
-        with open(self.dv_dir / name, "w") as f:
-            json.dump({"file": data_file, "positions": sorted(positions)}, f)
+        _publish(
+            self.dv_dir / name,
+            {"file": data_file, "positions": sorted(positions)},
+        )
         return f"dv/{name}"
 
     def delete_where_mor(
@@ -1051,14 +1062,12 @@ class TxLog:
         if self._staged_schema is not None:
             payload["schema"] = self._staged_schema
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            _publish(path, payload)
         except FileExistsError:
             raise CommitConflictError(
                 f"txlog branch {name}: version {version} committed "
                 "concurrently"
             ) from None
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
         self._staged_schema = None
         return version
 
@@ -2027,6 +2036,13 @@ def _footer_max(df: DataFrame, col: str) -> int | None:
     return hi
 
 
+def _column_max(df: DataFrame, col: str) -> int:
+    """max(``col``) of a parquet scan: from the footers when they vouch
+    for it (_footer_max), else one aggregate job."""
+    m = _footer_max(df, col)
+    return int(df.agg(F.max(col)).collect()[0][0]) if m is None else m
+
+
 def _stage_bucketed_orders(
     spark: SparkSession, sf_dir: str, name: str
 ) -> tuple[TxLog, int]:
@@ -2035,9 +2051,7 @@ def _stage_bucketed_orders(
     the orders footers; the max aggregate is only the fallback."""
     tl = TxLog(_warehouse_dir(sf_dir, name)).create()
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    m = _footer_max(o, "o_orderkey")
-    if m is None:
-        m = int(o.agg(F.max("o_orderkey")).collect()[0][0])
+    m = _column_max(o, "o_orderkey")
     bucketed = _with_bucket(o, m)
     tl.commit(
         "append",

@@ -1,7 +1,8 @@
 """Bench regression gate (tools/bench_gate.py) + performance-posture
-assertions the round-4 verdict asked for: the gate's compare logic,
-the committed baseline snapshot's integrity, AQE skew-join being on in
-the tuned session, and q37's salt surviving in the physical join keys.
+assertions: the gate's counter checks and wall-time advisories, the
+committed baseline snapshot's integrity and the committed run passing it,
+AQE skew-join being on in the tuned session, and q37's salt surviving in
+the physical join keys.
 """
 
 from __future__ import annotations
@@ -9,42 +10,106 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from tools.bench_gate import ABS_FLOOR_SEC, THRESHOLD, compare
+from tools import bench_gate
+from tools.bench_gate import ABS_FLOOR_SEC, GATED, THRESHOLD, advisories, compare
 
 REPO = Path(__file__).resolve().parents[1]
+WORK = {"body.sql_execs": 3, "body.jobs": 9, "collect.jobs": 8, "body.stages": 9,
+        "collect.stages": 8, "txlog.commits": 3}
 
 
-def _detail(queries, total=None, sf=0.1):
-    return {"queries": queries, "value": total, "sf": sf}
+def _detail(queries, sf=0.1, cold=(), **work_changes):
+    """A run (or baseline) over ``queries``: wall medians plus a trace
+    record (and ``work`` entry) of WORK for every entry not in ``cold``.
+    ``work_changes`` maps an entry to counter overrides for its trace."""
+    trace = {n: {**WORK, "body.s": v / 2, "collect.s": v / 2, **work_changes.get(n, {})}
+             for n, v in queries.items() if n not in cold}
+    return {"queries": queries, "sf": sf, "cold_only_queries": list(cold), "trace": trace,
+            "work": bench_gate.snapshot_work({"trace": trace})}
+
+
+def _many(n, wall=2.0):
+    return {f"q{i}": wall for i in range(n)}
 
 
 def test_gate_passes_identical_run():
-    base = _detail({"q1": 1.0, "q2": 4.0}, total=5.0)
-    assert compare(_detail({"q1": 1.0, "q2": 4.0}, total=5.0), base) == []
+    base = _detail({"q1": 1.0, "q2": 4.0})
+    assert compare(_detail({"q1": 1.0, "q2": 4.0}), base) == []
+
+
+def test_gate_flags_one_extra_body_job():
+    base = _detail({"q1": 1.0, "q2": 4.0})
+    out = compare(_detail({"q1": 1.0, "q2": 4.0}, q2={"body.jobs": 10}), base)
+    assert out == ["q2: work grew: body.jobs 9->10"]
+
+
+def test_gate_passes_fewer_jobs():
+    base = _detail({"q1": 1.0})
+    fewer = _detail({"q1": 1.0}, q1={"body.jobs": 7, "body.sql_execs": 2, "stream.batches": 0})
+    assert compare(fewer, base) == []
+
+
+def test_gate_ignores_ungated_counters():
+    """tasks and bytes move with the core count and from run to run."""
+    base = _detail({"q1": 1.0})
+    run = _detail({"q1": 1.0}, q1={"collect.tasks": 64, "collect.shuffle_bytes": 1e9})
+    assert "collect.tasks" not in GATED and compare(run, base) == []
 
 
 def test_gate_flags_large_regression():
-    base = _detail({"q1": 1.0, "q2": 4.0}, total=5.0)
-    out = compare(_detail({"q1": 1.0, "q2": 14.0}, total=15.0), base)
-    assert any(p.startswith("q2:") for p in out)
-    assert any(p.startswith("TOTAL(") for p in out)
-    assert not any(p.startswith("q1:") for p in out)
+    """A 3.5x wall regression on one entry is advised, never failed."""
+    base = _detail(_many(30))
+    run = _detail({**_many(30), "q2": 7.0})
+    assert compare(run, base) == []
+    out = advisories(run, base)
+    assert [a.split(":")[0] for a in out] == ["q2"]
+
+
+def test_gate_wall_only_slowdown_exits_zero_with_advisory(tmp_path, monkeypatch, capsys):
+    base, run = tmp_path / "base.json", tmp_path / "run.json"
+    base.write_text(json.dumps(_detail(_many(30))))
+    run.write_text(json.dumps(_detail({**_many(30), "q5": 6.0})))
+    monkeypatch.setattr("sys.argv", ["bench_gate.py", str(run), str(base)])
+    assert bench_gate.main() == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert [ln for ln in lines if ln.startswith("ADVISORY")] == [
+        "ADVISORY q5: 6.00s vs baseline 2.00s (3.00x, threshold 1.50x at median ratio 1.00)"
+    ]
+    assert lines[-1].startswith("bench gate pass")
 
 
 def test_gate_total_compares_shared_queries_only():
-    """13 new entries must not read as a 'total regression': the total
-    is compared over the intersection of baseline and run queries."""
-    base = _detail({"q1": 6.0, "q2": 6.0}, total=12.0)
-    grown = _detail({"q1": 6.0, "q2": 6.0, "new1": 30.0, "new2": 30.0}, total=72.0)
-    assert compare(grown, base) == []
+    """New entries, however slow, neither advise nor move the median ratio
+    the shared entries are judged by."""
+    base = _detail(_many(30))
+    grown = _detail({**_many(30), **{f"new{i}": 30.0 for i in range(40)}})
+    assert compare(grown, base) == [] and advisories(grown, base) == []
 
 
 def test_gate_ignores_subsecond_jitter():
-    """A 0.1s -> 0.4s blip is 4x but under the absolute floor — noise,
+    """A 0.1s -> 0.4s blip is 4x but under the absolute floor: noise,
     not a plan regression."""
-    base = _detail({"tiny": 0.1}, total=0.1)
+    base = _detail({**_many(30), "tiny": 0.1})
     assert ABS_FLOOR_SEC > 0.3
-    assert compare(_detail({"tiny": 0.4}, total=0.4), base) == []
+    assert advisories(_detail({**_many(30), "tiny": 0.4}), base) == []
+
+
+def test_gate_self_normalizes_by_median_shared_ratio():
+    """A uniform machine-speed shift moves the median ratio and with it
+    the advisory threshold; one slow entry cannot move the median."""
+    base = _detail(_many(30))
+    epoch = _detail({**_many(30, 2.4), "q0": 3.7})  # 1.85x raw, 1.54x of the 1.2x epoch
+    assert [a.split(":")[0] for a in advisories(epoch, base)] == ["q0"]
+    epoch = _detail({**_many(30, 2.4), "q0": 3.5})  # 1.46x of the epoch
+    assert advisories(epoch, base) == []
+
+
+def test_gate_cold_only_entry_needs_no_trace():
+    base = _detail({"q1": 1.0, "q2": 4.0})
+    assert compare(_detail({"q1": 1.0, "q2": 40.0}, cold=["q2"]), base) == []
+    warm = _detail({"q1": 1.0, "q2": 4.0})
+    del warm["trace"]["q2"]
+    assert compare(warm, base) == ["q2: no trace record"]
 
 
 def test_gate_flags_missing_query():
@@ -66,51 +131,32 @@ def test_gate_rejects_sf_mismatch():
 
 def test_committed_baseline_snapshot_is_usable():
     """The checked-in snapshot must stay a valid gate reference: parses,
-    carries the full query set at the bench sf, sane medians."""
+    carries the full query set at the bench sf, sane medians, and a work
+    record for every bench entry."""
+    from hive_clone_spark import registry
+
     base = json.loads((REPO / "tools" / "bench_baseline.json").read_text())
     assert base["sf"] == 0.1
     assert len(base["queries"]) >= 90
     assert all(0 < v < 60 for v in base["queries"].values())
-    assert THRESHOLD >= 1.2  # gate is a regression catch, not a noise trap
+    assert THRESHOLD >= 1.2  # advisory flags a regression, not noise
+    registry.load_all_modules()
+    bench = {n for n in registry.QUERIES if not n.startswith("g_")}
+    assert bench <= set(base["work"])
+    assert all(set(w) == set(GATED) for w in base["work"].values())
 
 
 def test_gate_green_on_committed_artifacts():
-    """Round-8 gap: the CLI gate failed on the repo's actual artifacts
-    while 1218 unit tests stayed green, because nothing in CI ever ran
-    compare() on the committed bench_detail.json vs the committed
-    baseline. This test IS that run. Skips (with reason) only when the
-    artifacts are absent or not comparable (different sf); a genuine
-    per-query regression in the committed detail file is now a red test.
-    """
-    import pytest
-
-    detail_path = REPO / "bench_detail.json"
-    base_path = REPO / "tools" / "bench_baseline.json"
-    if not detail_path.exists() or not base_path.exists():
-        pytest.skip("bench artifacts absent (fresh clone before first bench run)")
-    run = json.loads(detail_path.read_text())
-    base = json.loads(base_path.read_text())
-    if run.get("sf") != base.get("sf"):
-        pytest.skip(
-            f"bench_detail sf={run.get('sf')} vs baseline sf={base.get('sf')}"
-            " — artifacts from different scales, not comparable"
-        )
-    # cold-degraded entries are budget artifacts, not plan regressions:
-    # the detail file tags them, so the gate view excludes them here the
-    # same way a human reading the file would
-    cold = set(run.get("cold_only_queries", []))
-    if cold:
-        run = dict(run, queries={
-            k: v for k, v in run.get("queries", {}).items() if k not in cold
-        })
-        base = dict(base, queries={
-            k: v for k, v in base.get("queries", {}).items() if k not in cold
-        })
+    """compare() on the committed bench_detail.json vs the committed
+    baseline: the CLI gate on the repo's own artifacts, run in CI. The two
+    come from different bench runs, so this also checks that the gated
+    counters repeat."""
+    run = json.loads((REPO / "bench_detail.json").read_text())
+    base = json.loads((REPO / "tools" / "bench_baseline.json").read_text())
     problems = compare(run, base)
     assert problems == [], (
-        "committed bench_detail.json regresses vs tools/bench_baseline.json — "
-        "re-measure (warm x3), fix the plan or re-snapshot honestly:\n"
-        + "\n".join(problems)
+        "committed bench_detail.json does more work than tools/bench_baseline.json — "
+        "fix the entry or re-snapshot honestly:\n" + "\n".join(problems)
     )
 
 
@@ -140,191 +186,3 @@ def test_salted_join_salt_survives_in_plan(spark):
     assert len(key_lines) >= 2, plan
     for ln in key_lines:
         assert "salt" in ln and "hot_key" in ln, ln
-
-
-def test_gate_self_normalizes_by_median_shared_ratio():
-    """Round-9 driver epoch: every query ~12% slow while the scan probe
-    read FASTER than baseline — probe-based scaling is blind to
-    parallel/shuffle-regime slowdowns. With enough shared queries the
-    gate normalizes by the run's own median per-query ratio: a uniform
-    epoch shift loosens the threshold, a single genuinely regressed
-    plan cannot move the median and is still flagged."""
-    from tools.bench_gate import CAL_SCALE_CAP, MIN_SELF_NORM_QUERIES
-
-    n = MIN_SELF_NORM_QUERIES + 10
-    base = _detail({f"q{i}": 2.0 for i in range(n)})
-    # uniform 1.2x epoch, probe reading fast (would NOT loosen): the
-    # 1.55x query is epoch noise and must pass under the 1.5*1.2 gate
-    epoch = {f"q{i}": 2.4 for i in range(n)}
-    epoch["q0"] = 3.1  # 1.55x raw, ~1.29x regime-corrected
-    assert compare(
-        dict(_detail(epoch), calibration_sec=0.30),
-        dict(base, calibration_sec=0.40),
-    ) == []
-    # same epoch, one genuinely broken plan at 2.0x: median unmoved by
-    # one offender -> still flagged
-    broken = {f"q{i}": 2.4 for i in range(n)}
-    broken["q0"] = 4.0
-    out = compare(dict(_detail(broken)), base)
-    assert [p.split(":")[0] for p in out if not p.startswith("TOTAL")] == ["q0"]
-    # cap: a uniform 2x "epoch" is NOT forgiven wholesale — the scale
-    # clamps at CAL_SCALE_CAP, so every query trips the capped gate
-    slow_all = _detail({f"q{i}": 4.3 for i in range(n)})
-    assert 4.3 / 2.0 > 1.5 * CAL_SCALE_CAP
-    assert len(compare(slow_all, base)) >= n
-    # fast epoch never tightens: 1.4x on a run whose median is 0.8x
-    fast = {f"q{i}": 1.6 for i in range(n)}
-    fast["q0"] = 2.8  # 1.4x vs baseline, under the un-tightened 1.5
-    assert compare(_detail(fast), base) == []
-
-
-def test_end_of_suite_retry_lane_defeats_contention_window():
-    """Round-10 adjudication: all three gate flags were one localized
-    contention window — schedule-adjacent queries whose warmup, sample
-    AND immediate retry all landed slow, while warm re-measures read
-    0.83-1.09x. bench.py's end-of-suite lane re-runs every would-be
-    flagged query once (via the gate's own flagged_queries criteria)
-    and keeps the MIN of all samples. This test drives that exact
-    logic: a contention trio whose end-run sample is fast must clear
-    the gate; a genuinely regressed plan stays flagged because its
-    end-run sample is slow too."""
-    from tools.bench_gate import flagged_queries, norm_scale
-
-    n = 40
-    base_q = {f"q{i}": 2.0 for i in range(n)}
-    medians = {f"q{i}": 2.0 for i in range(n)}
-    # contention window hits three adjacent queries; one real regression
-    for name in ("q5", "q6", "q7", "q30"):
-        medians[name] = 4.0
-    scale = norm_scale(medians, base_q)
-    flagged = flagged_queries(medians, base_q, scale)
-    assert flagged == ["q30", "q5", "q6", "q7"]  # lane input (sorted)
-    # end-of-suite re-measure: contention trio runs fast again, the
-    # regressed plan is slow in both windows; lane keeps the MIN
-    end_run = {"q5": 2.1, "q6": 1.9, "q7": 2.2, "q30": 3.9}
-    for name in flagged:
-        medians[name] = min(medians[name], end_run[name])
-    out = compare(_detail(medians), _detail(base_q))
-    assert [p.split(":")[0] for p in out if not p.startswith("TOTAL")] == ["q30"]
-
-
-def test_end_of_suite_lane_iterates_to_fixed_point():
-    """Round-11 advice: re-measures lower the regime median, which
-    tightens the gate threshold at gate time — a query under threshold
-    when the lane selected its first set can be NEWLY flagged after
-    the re-measures and must get its own end-of-suite sample. A
-    contention epoch inflates half the suite; clearing it drops the
-    normalization scale from 1.4 to 1.0, newly exposing a genuine
-    1.6x regression that the inflated threshold had hidden."""
-    from tools.bench_gate import end_of_suite_lane
-
-    base = {f"q{i}": 1.0 for i in range(23)}
-    base["sneak"] = 2.0
-    medians = {f"q{i}": 2.6 if i < 12 else 1.0 for i in range(23)}
-    medians["sneak"] = 3.2  # 1.6x: under the contended 2.1x threshold
-    runs = {n: [v] for n, v in medians.items()}
-    rerun_calls: list[str] = []
-
-    def rerun(name):
-        rerun_calls.append(name)
-        return 1.0 if name.startswith("q") else 3.2  # sneak is genuine
-
-    retried, dropped = end_of_suite_lane(
-        medians, runs, base, rerun, lambda: True
-    )
-    assert "sneak" in retried  # picked up only by the fixed-point pass
-    assert "sneak" == rerun_calls[-1]  # ...in a later pass than the epoch
-    assert dropped == []
-    assert medians["sneak"] == 3.2  # slow in both windows: stays flagged
-    assert medians["q0"] == 1.0  # contention cleared by the re-measure
-
-
-def test_end_of_suite_lane_records_dropped_names():
-    """Names the retry cap (or budget) forces the lane to skip are
-    returned for the detail JSON — never silently truncated (the old
-    [:16] slice dropped them invisibly)."""
-    from tools.bench_gate import end_of_suite_lane
-
-    n = 40
-    base = {f"q{i}": 1.0 for i in range(n)}
-    medians = dict(base)
-    for i in range(5):
-        medians[f"q{i}"] = 3.0  # five genuine 3x regressions
-    runs = {k: [v] for k, v in medians.items()}
-    retried, dropped = end_of_suite_lane(
-        medians, runs, base, lambda name: 3.0, lambda: True, max_retries=2
-    )
-    assert len(retried) == 2
-    assert sorted(retried + dropped) == [f"q{i}" for i in range(5)]
-
-
-def test_end_of_suite_lane_contract_property():
-    """Property (Hypothesis): for ANY run/baseline medians, the lane
-    terminates and leaves no query that the gate would flag at the
-    final normalization scale without an end-of-suite sample — unless
-    the lane itself recorded it as dropped (cap/budget) or it was
-    excluded (cold-only). This IS the 'slow in both windows' contract."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from tools.bench_gate import end_of_suite_lane, flagged_queries, norm_scale
-
-    med = st.floats(min_value=0.05, max_value=30.0)
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        pairs=st.lists(st.tuples(med, med), min_size=1, max_size=60),
-        rerun_ratio=st.floats(min_value=0.3, max_value=1.5),
-        max_retries=st.integers(min_value=0, max_value=8),
-    )
-    def run(pairs, rerun_ratio, max_retries):
-        base = {f"q{i}": b for i, (b, _) in enumerate(pairs)}
-        medians = {f"q{i}": r for i, (_, r) in enumerate(pairs)}
-        runs = {k: [v] for k, v in medians.items()}
-        retried, dropped = end_of_suite_lane(
-            medians,
-            runs,
-            base,
-            lambda name: base[name] * rerun_ratio,
-            lambda: True,
-            max_retries=max_retries,
-        )
-        scale = norm_scale(medians, base)
-        unserved = [
-            n
-            for n in flagged_queries(medians, base, scale)
-            if n not in retried and n not in dropped
-        ]
-        assert unserved == [], (unserved, retried, dropped)
-        assert len(retried) <= max_retries
-        assert not (set(retried) & set(dropped))
-
-    run()
-
-
-def test_gate_scales_threshold_by_calibration_ratio():
-    """A run on a measurably slower machine (calibration probe) gets a
-    proportionally looser per-query threshold — the same-day 0.38 ->
-    0.66 epoch swing flagged q152 at 1.51x with zero code change. The
-    scaling caps at CAL_SCALE_CAP so a genuinely broken plan can never
-    hide behind a slow host, and a faster machine never tightens the
-    gate."""
-    from tools.bench_gate import CAL_SCALE_CAP
-
-    base = dict(_detail({"q1": 2.0}), calibration_sec=0.40)
-    # 1.6x on a 1.3x-slower machine: within scaled threshold -> pass
-    slow = dict(_detail({"q1": 3.2}), calibration_sec=0.52)
-    assert compare(slow, base) == []
-    # same 1.6x on an equal-speed machine -> regression
-    same = dict(_detail({"q1": 3.2}), calibration_sec=0.40)
-    assert len(compare(same, base)) == 1
-    # cap: even a 3x-slower probe cannot excuse a 2.2x query
-    crawl = dict(_detail({"q1": 4.4}), calibration_sec=1.20)
-    assert CAL_SCALE_CAP < 2.2 / 1.5
-    assert len(compare(crawl, base)) == 1
-    # faster machine: plain threshold still applies (no tightening)
-    fast = dict(_detail({"q1": 2.9}), calibration_sec=0.20)
-    assert compare(fast, base) == []
-    # artifacts without calibration fields fall back to the plain gate
-    legacy = _detail({"q1": 3.2})
-    assert len(compare(legacy, _detail({"q1": 2.0}))) == 1

@@ -49,7 +49,7 @@ def test_concurrent_append_conflict(spark, tmp_path):
 
 def test_exclusive_create_guards_same_slot(spark, tmp_path, monkeypatch):
     """Even when the expected_version check passes (both writers read
-    the log at the same instant), O_EXCL on the commit file itself
+    the log at the same instant), publishing the commit file itself
     rejects the second writer of a slot — the true race window."""
     tl = _mk(tmp_path)
     df = spark.range(3).withColumnRenamed("id", "k")
@@ -63,6 +63,50 @@ def test_exclusive_create_guards_same_slot(spark, tmp_path, monkeypatch):
     )
     with pytest.raises(CommitConflictError):
         tl.commit("append", add=adds, expected_version=0)
+
+
+def test_commit_interrupted_mid_write_is_never_visible(spark, tmp_path, monkeypatch):
+    """A writer that dies while serializing commit 1 leaves no torn
+    ``00000001.json``: readers still see version 0, and the next writer
+    commits version 1 on a clean log."""
+    tl = _mk(tmp_path)
+    df = spark.range(3).withColumnRenamed("id", "k")
+    tl.append(df, n_files=1)
+    adds = tl.stage_data(df, n_files=1)
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("writer died mid-write")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError):
+            tl.commit("append", add=adds)
+    assert tl.latest_version() == 0
+    assert sorted(p.name for p in tl.log_dir.glob("*.json")) == [tl._commit_name(0)]
+    assert tl.read(spark).count() == 3
+    assert tl.commit("append", add=adds) == 1
+    assert tl._read_commit(1)["add"] == adds
+    assert tl.read(spark).count() == 6
+
+
+def test_replay_memo_hands_out_private_copies(tmp_path):
+    """Mutating what _replay returns, down to a file's stats dict and the
+    schema, never reaches the memo or a later caller."""
+    tl = _mk(tmp_path)
+    schema = {"type": "struct", "fields": [{"name": "k", "type": "long", "nullable": True, "metadata": {}}]}
+    tl.commit("append", add=[{"file": "data/a.parquet", "stats": {"min": 1, "max": 5}}],
+              schema=schema, meta={"ids": {"k": 1}})
+    for _ in range(2):  # the call that fills the memo, then one served by it
+        files, stats, _, _, got_schema, meta = tl._replay(0)
+        stats["data/a.parquet"]["max"] = 99
+        got_schema["fields"].append({"name": "x"})
+        meta["ids"]["k"] = 7
+        files.add("data/b.parquet")
+    files, stats, _, _, got_schema, meta = tl._replay(0)
+    assert files == {"data/a.parquet"}
+    assert stats == {"data/a.parquet": {"min": 1, "max": 5}}
+    assert got_schema == schema and meta == {"ids": {"k": 1}}
 
 
 def test_time_travel_and_remove_visibility(spark, tmp_path):

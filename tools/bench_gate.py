@@ -1,20 +1,29 @@
-"""Bench regression gate (round-4 verdict item 6).
+"""Bench regression gate: per-entry work counters, wall-time advisories.
 
-Round 3 shipped a bench that crashed and nothing caught it between
-rounds; this gate makes per-query performance a checked contract, like
-correctness. It compares a bench_detail.json (fresh run) against the
-committed reference snapshot `tools/bench_baseline.json` (the last
-good round's per-query medians) and fails on:
+Compares a bench_detail.json (fresh run) against the committed reference
+snapshot ``tools/bench_baseline.json`` and fails on:
 
-  * any query whose median regressed more than THRESHOLD x (default
-    1.5) AND by more than ABS_FLOOR seconds (0.75 s — sub-second
-    queries jitter by scheduler noise, not by plan regressions);
-  * any query present in the baseline but missing from the run
-    (a silently dropped bench entry is how a crash hides);
-  * a total that regressed more than THRESHOLD x.
+  * an sf mismatch (the runs are not comparable);
+  * an entry present in the baseline but missing from the run (a silently
+    dropped bench entry is how a crash hides);
+  * an entry with no trace record, unless the run lists it as cold-only
+    (its budget-forced warm-up is its only, untraced, sample);
+  * any GATED counter of an entry's trace above the baseline ``work`` map.
 
-New queries (in the run, not the baseline) pass — they get gated once
-the baseline is re-snapshotted after a green round.
+The GATED counters count Spark actions, jobs and stages that ran, txlog
+commits and micro-batches. They repeat exactly for the same code on the
+same data at any core count, so they are compared exactly: a throttled or
+contended host cannot trip them, and one extra action in an entry body
+does. Fewer is a pass.
+
+Wall time only advises: an entry whose median grew past THRESHOLD x and by
+more than ABS_FLOOR_SEC, both scaled by the run's median per-entry ratio
+over the shared entries, is printed as an ``ADVISORY`` line and leaves the
+exit code alone. A machine-speed shift moves every entry's ratio together
+and so the median; one slow entry cannot.
+
+New entries (in the run, not the baseline) pass; they are gated once the
+baseline is re-snapshotted (``snapshot_work``).
 
 Usage:
     python tools/bench_gate.py [bench_detail.json] [baseline.json]
@@ -24,189 +33,84 @@ Exit code 0 = pass, 1 = regression (offenders printed).
 from __future__ import annotations
 
 import json
+import statistics
 import sys
 from pathlib import Path
 
+GATED = (
+    "body.sql_execs",
+    "body.jobs",
+    "collect.jobs",
+    "body.stages",
+    "collect.stages",
+    "txlog.commits",
+    "stream.batches",
+)
 THRESHOLD = 1.5
 ABS_FLOOR_SEC = 0.75
-# Machine-speed normalization, round 10 revision. Round 9's probe-based
-# scaling (two warm single-stage count()s) measured scan-bound
-# single-thread speed and was blind to parallel/shuffle-regime
-# slowdowns: the r9 driver epoch ran EVERY query ~12% slow (median
-# per-query ratio 1.12x over 381 shared queries) while the probe read
-# 0.82x — FASTER than baseline — so the gate flagged 4 queries that
-# re-measured at 0.78-1.29x on a calibration-matched machine. The
-# regime-proof signal is the run itself: the MEDIAN per-query ratio
-# over the shared set. One genuinely regressed plan cannot move the
-# median of hundreds of queries, but a machine-epoch shift moves all
-# of them together. The probe stays recorded in the artifacts as a
-# diagnostic and as the fallback scale when the shared set is too
-# small for a regime estimate (unit-test-sized inputs).
-# The scale caps at CAL_SCALE_CAP so a broad real regression (a bad
-# session config slowing everything) can never fully hide behind
-# "the machine was slow", and clamps at 1.0 so a fast epoch never
-# tightens the gate below THRESHOLD.
-CAL_SCALE_CAP = 1.4
-# Self-normalization needs enough shared queries that one offender
-# cannot drag the median; below this, fall back to the probe.
-MIN_SELF_NORM_QUERIES = 20
 
 _REPO = Path(__file__).resolve().parent.parent
 DEFAULT_RUN = _REPO / "bench_detail.json"
 DEFAULT_BASELINE = _REPO / "tools" / "bench_baseline.json"
 
 
-def norm_scale(
-    run_q: dict[str, float],
-    base_q: dict[str, float],
-    run_cal: float | None = None,
-    base_cal: float | None = None,
-) -> float:
-    """Machine-speed normalization scale (see header comment): the
-    median per-query ratio over the shared set, clamped to [1.0,
-    CAL_SCALE_CAP]; probe-ratio fallback when the shared set is too
-    small for a regime estimate."""
-    shared_named = [
-        n for n in base_q if n in run_q and base_q[n] > 0 and run_q[n] > 0
-    ]
-    if len(shared_named) >= MIN_SELF_NORM_QUERIES:
-        import statistics
-
-        regime = statistics.median(run_q[n] / base_q[n] for n in shared_named)
-        return min(max(regime, 1.0), CAL_SCALE_CAP)
-    if run_cal and base_cal and run_cal > base_cal:
-        return min(run_cal / base_cal, CAL_SCALE_CAP)
-    return 1.0
-
-
-def flagged_queries(
-    run_q: dict[str, float], base_q: dict[str, float], cal_scale: float
-) -> list[str]:
-    """Queries the gate would flag at ``cal_scale``: regressed past
-    THRESHOLDx AND past the absolute floor. Shared between the gate
-    itself and bench.py's end-of-suite re-measure lane, so both apply
-    the same criteria."""
-    threshold = THRESHOLD * cal_scale
-    return [
-        n
-        for n in sorted(base_q)
-        if n in run_q
-        and run_q[n] > base_q[n] * threshold
-        and run_q[n] - base_q[n] > ABS_FLOOR_SEC * cal_scale
-    ]
-
-
-def end_of_suite_lane(
-    medians: dict[str, float],
-    runs: dict[str, list[float]],
-    base_medians: dict[str, float],
-    rerun,
-    within_budget,
-    exclude=(),
-    max_retries: int = 16,
-    max_passes: int = 8,
-) -> tuple[list[str], list[str]]:
-    """bench.py's end-of-suite re-measure lane, iterated to a FIXED
-    POINT (round-11 advice): each re-measure can lower a median, which
-    lowers the self-normalization regime median, which tightens the
-    threshold — a query under threshold when the lane first selected
-    its set can be NEWLY flagged afterwards, and must get its own
-    end-of-suite sample or the gate's "flagged only if slow in BOTH
-    windows" contract breaks. Returns (re-measured names, names the
-    cap/budget forced the lane to skip — recorded, never silent).
-
-    ``rerun(name)`` executes the query once and returns its seconds;
-    ``within_budget()`` says whether another run may be spent. Mutates
-    ``medians``/``runs`` in place (MIN of all samples, matching the
-    suite's one-sided-jitter protocol).
-
-    Termination is structural, not cap-dependent: every pass either
-    breaks (nothing newly flagged / budget exhausted) or moves at
-    least one query into retried/dropped — sets queries never leave —
-    so the loop runs at most len(base_medians)+1 passes; ``max_passes``
-    is a pure safety valve sized above that bound."""
-    end_retried: list[str] = []
-    end_dropped: list[str] = []
-    for _ in range(max(max_passes, len(base_medians) + 1)):
-        scale = norm_scale(medians, base_medians)
-        flagged = [
-            n
-            for n in flagged_queries(medians, base_medians, scale)
-            if n not in exclude
-            and n not in end_retried
-            and n not in end_dropped
-        ]
-        if not flagged:
-            break  # fixed point: nothing newly flagged
-        exhausted = False
-        for name in flagged:
-            if len(end_retried) >= max_retries or not within_budget():
-                exhausted = True
-                end_dropped.append(name)
-                continue
-            dt = rerun(name)
-            runs[name].append(round(dt, 4))
-            medians[name] = round(min(runs[name]), 4)
-            end_retried.append(name)
-        if exhausted:
-            # no budget for further re-measures — but re-measures THIS
-            # pass may have tightened the scale and newly flagged more
-            # queries; record them as dropped too (medians are frozen
-            # now, so one final sweep reaches the fixed point)
-            scale = norm_scale(medians, base_medians)
-            for name in flagged_queries(medians, base_medians, scale):
-                if (
-                    name not in exclude
-                    and name not in end_retried
-                    and name not in end_dropped
-                ):
-                    end_dropped.append(name)
-            break
-    return end_retried, end_dropped
+def snapshot_work(run: dict) -> dict[str, dict[str, int]]:
+    """The baseline ``work`` map of a run: each traced entry's GATED
+    counters (a counter the trace leaves out is 0)."""
+    return {
+        name: {k: int(rec.get(k, 0)) for k in GATED}
+        for name, rec in sorted(run.get("trace", {}).items())
+    }
 
 
 def compare(run: dict, baseline: dict) -> list[str]:
     """Return a list of human-readable regression findings (empty = pass)."""
-    problems: list[str] = []
-    run_q: dict[str, float] = run.get("queries", {})
-    base_q: dict[str, float] = baseline.get("queries", {})
     if run.get("sf") != baseline.get("sf"):
-        problems.append(
+        return [
             f"sf mismatch: run {run.get('sf')} vs baseline {baseline.get('sf')}"
-            " — medians are not comparable"
-        )
-        return problems
-    cal_scale = norm_scale(
-        run_q, base_q, run.get("calibration_sec"), baseline.get("calibration_sec")
-    )
-    threshold = THRESHOLD * cal_scale
-    for name in sorted(base_q):
+            " — runs are not comparable"
+        ]
+    problems: list[str] = []
+    run_q = run.get("queries", {})
+    cold = set(run.get("cold_only_queries", []))
+    got = snapshot_work(run)
+    base_work = baseline.get("work", {})
+    for name in sorted(set(baseline.get("queries", {})) | set(base_work)):
         if name not in run_q:
             problems.append(f"{name}: present in baseline but missing from run")
-    for name in flagged_queries(run_q, base_q, cal_scale):
-        b, r = base_q[name], run_q[name]
-        problems.append(
-            f"{name}: {r:.2f}s vs baseline {b:.2f}s ({r / b:.2f}x, "
-            f"threshold {threshold:.2f}x at scale {cal_scale:.2f})"
-        )
-    # totals compare over the SHARED query set only: a registry that
-    # grew since the snapshot raises the raw run total without any
-    # query regressing (how the gate once flagged 13 new entries as a
-    # 1.6x "total regression")
-    shared = set(base_q) & set(run_q)
-    total_b = sum(base_q[n] for n in shared)
-    total_r = sum(run_q[n] for n in shared)
-    if (
-        total_b
-        and total_r
-        and total_r > total_b * threshold
-        and total_r - total_b > 5.0 * cal_scale
-    ):
-        problems.append(
-            f"TOTAL(shared {len(shared)}q): {total_r:.2f}s vs baseline "
-            f"{total_b:.2f}s ({total_r / total_b:.2f}x)"
-        )
+        elif name in cold:
+            continue
+        elif name not in got:
+            problems.append(f"{name}: no trace record")
+        elif name in base_work:
+            grew = [
+                f"{k} {base_work[name][k]}->{got[name][k]}"
+                for k in GATED
+                if got[name][k] > base_work[name][k]
+            ]
+            if grew:
+                problems.append(f"{name}: work grew: {', '.join(grew)}")
     return problems
+
+
+def advisories(run: dict, baseline: dict) -> list[str]:
+    """Wall-time regressions, scaled by the run's median per-entry ratio."""
+    base_q = baseline.get("queries", {})
+    cold = set(run.get("cold_only_queries", []))
+    run_q = {n: v for n, v in run.get("queries", {}).items() if n not in cold}
+    shared = [n for n in sorted(base_q) if n in run_q and base_q[n] > 0]
+    if run.get("sf") != baseline.get("sf") or not shared:
+        return []
+    scale = statistics.median(run_q[n] / base_q[n] for n in shared)
+    out = []
+    for n in shared:
+        b, r = base_q[n], run_q[n]
+        if r > b * THRESHOLD * scale and r - b > ABS_FLOOR_SEC * scale:
+            out.append(
+                f"{n}: {r:.2f}s vs baseline {b:.2f}s ({r / b:.2f}x, "
+                f"threshold {THRESHOLD * scale:.2f}x at median ratio {scale:.2f})"
+            )
+    return out
 
 
 def main() -> int:
@@ -214,13 +118,15 @@ def main() -> int:
     base_path = Path(sys.argv[2]) if len(sys.argv) > 2 else DEFAULT_BASELINE
     run = json.loads(run_path.read_text())
     baseline = json.loads(base_path.read_text())
+    for a in advisories(run, baseline):
+        print(f"ADVISORY {a}")
     problems = compare(run, baseline)
     for p in problems:
         print(f"REGRESSION {p}")
     if not problems:
         print(
-            f"bench gate pass: {len(run.get('queries', {}))} queries vs "
-            f"baseline {base_path.name} (threshold {THRESHOLD}x)"
+            f"bench gate pass: {len(run.get('trace', {}))} traced entries' work "
+            f"counters vs baseline {base_path.name}"
         )
     return 1 if problems else 0
 

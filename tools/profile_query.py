@@ -5,12 +5,13 @@ Usage:
 
 For each registry entry whose name contains one of the substrings (every
 entry when none is given; the fixture-scale ``g_*`` entries are left out),
-one discarded warm-up request, then one request bracketed by
-``perfbench/layers.Tracer`` marks: before the entry call, when it returns its
-frame (the *body*) and after ``.collect()`` (the *collect* phase). Work is
-attributed by Spark's monotonic job, stage and SQL-execution ids, so jobs
-submitted from helper threads count, and only stages that ran are counted
-(a job's skipped stages, whose shuffle output is reused, are not).
+one discarded warm-up request, then one request traced as ``bench.py`` traces
+its measured one (``bench.traced_request``): ``perfbench/layers.Tracer`` marks
+before the entry call, when it returns its frame (the *body*) and after
+``.collect()`` (the *collect* phase). Work is attributed by Spark's monotonic
+job, stage and SQL-execution ids, so jobs submitted from helper threads count,
+and only stages that ran are counted (a job's skipped stages, whose shuffle
+output is reused, are not).
 
 stdout carries one JSON line per entry: the Tracer counters plus
 ``body.sql``, the call site (``description``) of each SQL execution the body
@@ -30,6 +31,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import traced_request  # noqa: E402
 from hive_clone_spark import catalog, registry  # noqa: E402
 from perfbench import layers  # noqa: E402
 from perfbench.run import calibration_probe, quiet  # noqa: E402
@@ -52,19 +54,7 @@ def flag(c: dict, threshold: float) -> bool:
 def profile(spark, tracer: layers.Tracer, fn, sf_dir: str) -> dict:
     """Counters of one traced request of ``fn``, after one discarded warm-up."""
     fn(spark, sf_dir).collect()
-    tracer.start_pass()
-    try:
-        b0 = tracer.mark()
-        df = fn(spark, sf_dir)
-        b1 = tracer.mark()
-        df.collect()
-        b2 = tracer.mark()
-    finally:
-        tracer.end_pass()
-    # read right after the request, so the newest executions are its own
-    executions = tracer._last_executions(b2["exec"] - b0["exec"])
-    body_sql = [ex["description"] for ex in executions if ex["executionId"] < b1["exec"]]
-    return {**tracer.record(df, b0, b1, b2), "body.sql": body_sql}
+    return traced_request(spark, tracer, fn, sf_dir)
 
 
 def main(argv=None) -> int:
