@@ -8,10 +8,10 @@ every component of `base` touches (or contains) `to`.
 
 The component labeling is an iterative min-label propagation fixpoint —
 the one genuinely iterative operator Spark lacks built-in. Each
-iteration is a self-join on the (piece_id, cell) key; `localCheckpoint`
-keeps lineage bounded (SURVEY.md §7 M3). At hypertable scale the
-frontier stays hash-partitioned on the same key across iterations, so
-iterations are co-partitioned joins.
+`operators/iterate.fixpoint` round is one aggregation on the
+(piece_id, cell) key, checkpointed with its change count observed in
+the same action (SURVEY.md §7 M3). At hypertable scale the labels stay
+hash-partitioned on that key across rounds.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hive_clone_spark.hive_game.board import DQS, DRS, pack_cell
+from hive_clone_spark.operators.iterate import fixpoint
 
 
 def base_cells(movers: DataFrame, occ: DataFrame) -> DataFrame:
@@ -37,44 +38,41 @@ def base_cells(movers: DataFrame, occ: DataFrame) -> DataFrame:
     )
 
 
-def component_labels(base: DataFrame, max_iterations: int = 64) -> DataFrame:
+def component_labels(base: DataFrame) -> DataFrame:
     """(piece_id, q, r, label): connected-component label per cell via
     min-label propagation over hex adjacency."""
-    labels = base.withColumn("label", pack_cell(F.col("q"), F.col("r"))).localCheckpoint()
-    for _ in range(max_iterations):
-        # propagate each cell's label to its 6 neighbors (that exist)
-        prop = None
+
+    def step(labels: DataFrame) -> DataFrame:
+        # each cell's label goes to its 6 neighbors (null `own`) and to
+        # itself (`own` = its old label); min per cell. Only cells of
+        # `base` have an `own` row, so that filter drops the empty
+        # neighbors without a join back to `base`.
+        prop = labels.select(
+            "piece_id", "q", "r", "label", F.col("label").alias("own")
+        )
         for dq, dr in zip(DQS, DRS):
-            shifted = labels.select(
-                "piece_id",
-                (F.col("q") + dq).alias("q"),
-                (F.col("r") + dr).alias("r"),
-                "label",
+            prop = prop.unionByName(
+                labels.select(
+                    "piece_id",
+                    (F.col("q") + dq).alias("q"),
+                    (F.col("r") + dr).alias("r"),
+                    "label",
+                    F.lit(None).alias("own"),
+                )
             )
-            prop = shifted if prop is None else prop.unionByName(shifted)
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("piece_id", "q", "r")
-            .agg(F.min("label").alias("label"))
-            .join(base, ["piece_id", "q", "r"], "left_semi")
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(
-                labels.alias("o"),
-                (F.col("n.piece_id") == F.col("o.piece_id"))
-                & (F.col("n.q") == F.col("o.q"))
-                & (F.col("n.r") == F.col("o.r"))
-                & (F.col("n.label") != F.col("o.label")),
-                "left_semi",
+        return (
+            prop.groupBy("piece_id", "q", "r")
+            .agg(F.min("label").alias("label"), F.min("own").alias("own"))
+            .where(F.col("own").isNotNull())
+            .select(
+                "piece_id", "q", "r", "label",
+                (F.col("label") != F.col("own")).alias("chg"),
             )
-            .isEmpty()
         )
-        labels = new_labels
-        if changed:
-            return labels
-    raise RuntimeError("component_labels did not converge")
+
+    return fixpoint(
+        base.withColumn("label", pack_cell(F.col("q"), F.col("r"))), step, 64
+    )
 
 
 def filter_hive_connected(cands: DataFrame, movers: DataFrame, occ: DataFrame) -> DataFrame:

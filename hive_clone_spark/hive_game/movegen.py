@@ -55,6 +55,7 @@ from hive_clone_spark.hive_game.board import (
 )
 from hive_clone_spark.hive_game.connectivity import filter_hive_connected
 from hive_clone_spark.hive_game.fixtures import directions_df
+from hive_clone_spark.operators.iterate import fixpoint
 
 MOVE_COLS = ["piece_id", "from_q", "from_r", "to_q", "to_r", "kind", "steps"]
 
@@ -223,10 +224,10 @@ def _slide_step(cells: DataFrame, occ: DataFrame, nbr: DataFrame, cq: str, cr: s
 
 # ---------------------------------------------------------------------------
 # R10 — ant: unbounded slide = BFS fixpoint over empty perimeter cells
-# (rules.cpp:196-264). Driver-side loop, one co-partitioned join per
-# iteration, localCheckpoint to bound lineage (SURVEY.md §7 M3).
+# (rules.cpp:196-264). One `fixpoint` round per BFS level: the state is
+# the visited set, `chg` marks the level's frontier (SURVEY.md §7 M3).
 # ---------------------------------------------------------------------------
-def ant_moves(movers: DataFrame, occ: DataFrame, nbr: DataFrame, max_iterations: int = 128) -> DataFrame:
+def ant_moves(movers: DataFrame, occ: DataFrame, nbr: DataFrame) -> DataFrame:
     m = movers.where(F.col("bug") == "Ant")
     start = m.select(
         "piece_id",
@@ -236,31 +237,25 @@ def ant_moves(movers: DataFrame, occ: DataFrame, nbr: DataFrame, max_iterations:
         F.col("from_q").alias("cq"),
         F.col("from_r").alias("cr"),
     )
-    seeds = (
-        _slide_step(start, occ, nbr, "cq", "cr", "a0")
-        .select("piece_id", "from_q", "from_r", "from_emptied",
-                F.col("nq").alias("cq"), F.col("nr").alias("cr"))
-        .dropDuplicates(["piece_id", "cq", "cr"])
-        .localCheckpoint(eager=True)
-    )
-    visited = seeds
-    frontier = seeds
-    for _ in range(max_iterations):
-        if frontier.isEmpty():
-            break
-        expanded = (
-            _slide_step(frontier, occ, nbr, "cq", "cr", "ax")
+
+    def slide(cells: DataFrame, tag: str) -> DataFrame:
+        return (
+            _slide_step(cells, occ, nbr, "cq", "cr", tag)
             .select("piece_id", "from_q", "from_r", "from_emptied",
                     F.col("nq").alias("cq"), F.col("nr").alias("cr"))
             .dropDuplicates(["piece_id", "cq", "cr"])
-            .join(visited, ["piece_id", "cq", "cr"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        frontier = expanded
-        if not frontier.isEmpty():
-            visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    else:
-        raise RuntimeError("ant_moves BFS did not converge")
+
+    def step(visited: DataFrame) -> DataFrame:
+        # expand this round's frontier (chg), keep only unvisited cells
+        reached = slide(visited.where("chg"), "ax").join(
+            visited, ["piece_id", "cq", "cr"], "left_anti"
+        )
+        return visited.withColumn("chg", F.lit(False)).unionByName(
+            reached.withColumn("chg", F.lit(True))
+        )
+
+    visited = fixpoint(slide(start, "a0").withColumn("chg", F.lit(True)), step, 128)
     cand = (
         visited
         # deviation (see module docstring): never emit the start cell

@@ -7,9 +7,9 @@ one-hive rule (R6, rules.cpp:61-133), here applied to a graph derived
 from `orders`: customers are vertices; an edge links two customers who
 ordered on the same day in 1995-Q1 (a co-activity graph — date
 equality is bucketing both engines compute identically). Labels start
-as each vertex's own id and every iteration takes the min over
-neighbors — O(diameter) Spark jobs, each one shuffle on the vertex id,
-lineage cut by localCheckpoint per round.
+as each vertex's own id and every round takes the min over
+neighbors — O(diameter) `fixpoint` rounds, each one Spark action (a
+shuffle on the vertex id, checkpointed, change count observed).
 
 At 100 TB: min-label propagation is the scalable CC algorithm
 (GraphFrames uses the same shape); the per-iteration shuffle is on
@@ -19,10 +19,11 @@ by graph diameter, not row count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.operators.iterate import fixpoint
 from hive_clone_spark.registry import register
 
 
@@ -44,46 +45,37 @@ _ACTIVE_SQL = """
 """
 
 
-def connected_components(
-    vertices: DataFrame, edges: DataFrame, max_iterations: int = 32
-) -> DataFrame:
+def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Min-label propagation: vertices(id), edges(src, dst) undirected.
     Returns (id, component) where component = min vertex id reachable.
 
-    Deliberately a driver loop, not a recursive CTE: Spark 4.1's
-    WITH RECURSIVE is UNION ALL-only and bars aggregates over the
-    recursive reference, so a label flood on a cyclic graph never
-    terminates (see operators/iterate.py's module docstring; the
-    monotone-recursion CTE path lives there as q64)."""
-    labels = vertices.select("id", F.col("id").alias("component"))
-    # Materialize the edge set ONCE before iterating: the loop joins
-    # against it every round, and without the checkpoint each iteration
-    # re-executes the caller's full edge-producing DAG (for
-    # p_dedup_resolve that DAG is the entire MinHash+LSH pipeline).
+    One `fixpoint` round per propagation step. Deliberately a driver
+    loop, not a recursive CTE: Spark 4.1's WITH RECURSIVE is UNION
+    ALL-only and bars aggregates over the recursive reference, so a
+    label flood on a cyclic graph never terminates (see
+    operators/iterate.py's module docstring; the monotone-recursion CTE
+    path lives there as q64)."""
+    # Materialize the edge set ONCE before iterating: every round joins
+    # against it, and without the checkpoint each round re-executes the
+    # caller's full edge-producing DAG (for p_dedup_resolve that DAG is
+    # the entire MinHash+LSH pipeline).
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    for _ in range(max_iterations):
-        # neighbor labels + own label, min per vertex; checkpoint cuts
-        # the per-iteration lineage growth (the classic iterative-Spark
-        # failure mode)
-        prop = (
+
+    def step(labels: DataFrame) -> DataFrame:
+        # neighbor labels + own label, min per vertex; the vertex's old
+        # label rides through the same groupBy as `own`
+        return (
             sym.join(labels, sym.src == labels.id)
-            .select(F.col("dst").alias("id"), "component")
-            .unionByName(labels)
+            .select(F.col("dst").alias("id"), "component", F.lit(None).alias("own"))
+            .unionByName(labels.select("id", "component", F.col("component").alias("own")))
             .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            prop.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.component") != F.col("o.component"))
+            .agg(F.min("component").alias("component"), F.min("own").alias("own"))
+            .select("id", "component", (F.col("component") != F.col("own")).alias("chg"))
         )
-        converged = changed.isEmpty()
-        labels = prop
-        if converged:
-            return labels
-    raise RuntimeError(f"CC did not converge in {max_iterations} iterations")
+
+    return fixpoint(vertices.select("id", F.col("id").alias("component")), step, 32)
 
 
 @register(
@@ -911,30 +903,35 @@ def q218_handshake_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the full live edge set per round cost more than these groupBy
     # nominations, whose outputs are endpoint-sized and broadcast back.
     # 5.7 -> 6.5 s; kept the nomination/anti-join shape.)
+    # each round's statistics are observed metrics of its two
+    # checkpoints, so a round is exactly those two actions
     for k in range(1, _HSM_ROUNDS + 1):
         smin = live.groupBy("s").agg(F.min(ekey).alias("ms"))
         pmin = live.groupBy("p").agg(F.min(ekey).alias("mp"))
+        m_obs, l_obs = Observation(), Observation()
         matched = (
             live.join(smin, "s")
             .join(pmin, "p")
             .where((ekey == F.col("ms")) & (ekey == F.col("mp")))
             .select("s", "p")
+            .observe(
+                m_obs,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum(F.col("s") * F.col("p")), F.lit(0)).alias("ck"),
+            )
             .localCheckpoint(eager=True)
         )
-        stats = matched.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.col("s") * F.col("p")), F.lit(0)).alias("ck"),
-        ).collect()[0]
         live = (
             live.join(matched.select("s"), "s", "left_anti")
             .join(matched.select("p"), "p", "left_anti")
+            .observe(l_obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        n_live = live.count()
-        cum_matched += int(stats["n"])
-        cum_checksum += int(stats["ck"])
+        stats, n_live = m_obs.get, l_obs.get["n"]
+        cum_matched += stats["n"]
+        cum_checksum += stats["ck"]
         rows.append(
-            (k, int(stats["n"]), cum_matched, n_live, n_live == 0, cum_checksum)
+            (k, stats["n"], cum_matched, n_live, n_live == 0, cum_checksum)
         )
     return spark.createDataFrame(
         rows,

@@ -3,12 +3,14 @@
 documented.
 
 The reference's BFS/connectivity computations (R6 keepsHiveConnectedAfter,
-rules.cpp:61-133; R10 antMoves, rules.cpp:196-264) are iterative queries
-Spark has no single built-in for. `fixpoint` provides the driver-side
-loop machinery they share: each iteration is one Spark job over a
-frontier DataFrame, with `localCheckpoint()` every few iterations so the
-lineage (and thus task-serialization cost) stays bounded — the classic
-failure mode of naive iterative Spark.
+rules.cpp:61-133; R10 antMoves, rules.cpp:196-264) and the warehouse-scale
+min-label and relaxation loops are iterative queries Spark has no single
+built-in for. `fixpoint` is the engine's only convergence loop: each round
+is ONE Spark action, an eager `localCheckpoint` of the step's output that
+also carries the round's change count as an observed metric
+(`Dataset.observe`), so convergence costs no second probe action and the
+lineage (and thus task-serialization cost) is cut every round — the
+classic failure mode of naive iterative Spark.
 
 WHY CONNECTED COMPONENTS KEEPS THE DRIVER LOOP (verified on Spark
 4.1.2, round 5): Spark's recursive CTEs support only UNION ALL —
@@ -28,44 +30,46 @@ step key that strictly increases so each row derives exactly once.
 (order-date chain extension, row_number strictly increasing), with the
 DuckDB oracle running the structurally identical recursive SQL.
 
-On a cluster the frontier stays partitioned by its join key across
-iterations, so each step is a co-partitioned join, not a full reshuffle.
+On a cluster the state stays partitioned by its key across rounds, so
+each step is a co-partitioned join, not a full reshuffle.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
 from hive_clone_spark.registry import register
 
 
 def fixpoint(
-    seed: DataFrame,
-    step: Callable[[DataFrame, DataFrame], DataFrame],
-    max_iterations: int = 64,
-    checkpoint_every: int = 4,
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
 ) -> DataFrame:
-    """Iterate ``frontier = step(frontier, visited)`` until the frontier
-    is empty; return the accumulated ``visited`` DataFrame.
+    """Replace ``state`` by ``step(state)`` until a round changes nothing;
+    return the final state without its ``chg`` column.
 
-    ``step`` receives (frontier, visited) and must return the *new*
-    frontier — rows not yet in ``visited`` (the runner does not dedup
-    for you; deduplication belongs inside ``step`` where the join keys
-    are known, typically a ``left_anti`` against ``visited``).
+    ``step`` receives the previous round's state (round one: ``state``
+    as given) and returns the next one with a boolean ``chg`` column
+    that is true on every row the round changed or added. Each round is
+    one action: the checkpoint that materializes the new state also
+    counts its changed rows. Raises ``RuntimeError`` when round
+    ``max_rounds`` still changed a row.
     """
-    visited = seed.localCheckpoint(eager=True)
-    frontier = visited
-    for i in range(max_iterations):
-        frontier = step(frontier, visited)
-        if i % checkpoint_every == checkpoint_every - 1:
-            frontier = frontier.localCheckpoint(eager=True)
-        if frontier.isEmpty():
-            return visited
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    raise RuntimeError(f"fixpoint did not converge in {max_iterations} iterations")
+    for _ in range(max_rounds):
+        obs = Observation()
+        state = (
+            step(state)
+            .observe(obs, F.count_if("chg").alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        if obs.get["n"] == 0:
+            return state.drop("chg")
+    raise RuntimeError(f"fixpoint did not converge in {max_rounds} rounds")
 
 
 # ---------------------------------------------------------------------------
@@ -231,8 +235,7 @@ def q166_bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no row changes — O(V) state and O(E) work per round for
 # critical-path-length rounds (~log2 N here), each step one broadcast
 # edge join + map-side-combinable max over a union, K steps fused per
-# materialization round, lineage cut by localCheckpoint (the
-# fixpoint() discipline above). Enumerating
+# fixpoint() round (one checkpoint per round). Enumerating
 # root-to-node paths instead multiplies rows by the path count
 # (superpolynomial on converging DAGs) — the oracle CAN afford it at
 # test scale via DuckDB's deduplicating recursive UNION on (node,
@@ -261,8 +264,6 @@ def q166_bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q204_topo_generations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     p = table(spark, sf_dir, "part").where(F.col("p_partkey") >= 1)
     edges = (
         p.select(
@@ -288,15 +289,14 @@ def q204_topo_generations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(0).cast("int").alias("g"))
         .localCheckpoint(eager=True)
     )
-    # Fuse K relaxation steps into each materialized round: the relax
+    # Fuse K relaxation steps into each fixpoint round: the relax
     # operator is monotone and idempotent at the fixpoint, so applying
     # it K times before checking convergence reaches the same fixpoint
-    # in ceil(D/K) rounds instead of D — the scheduling/action count
-    # (the dominant cost of an iterative job: one checkpoint + one
-    # convergence probe per round) drops by ~K while total join work is
-    # unchanged. The old generation rides along as a g0 column so the
-    # convergence probe is a scan of the checkpointed frame, not a
-    # separate self-join (guide §2.4: remove shuffles outright).
+    # in ceil(D/K) rounds instead of D — the action count (one
+    # checkpoint per round) drops by ~K while total join work is
+    # unchanged. The round's starting generation rides along as a g0
+    # column, so chg is a column of the same aggregate, not a separate
+    # self-join (guide §2.4: remove shuffles outright).
     # Each step is ONE aggregation instead of a join+agg+left-join
     # chain: g'(n) = max over the union of (n, g(n)) and, per edge
     # par->n, (n, g(par)+1) — the same relaxation with half the
@@ -305,7 +305,8 @@ def q204_topo_generations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle; at cluster scale the planner falls back to a shuffle
     # join automatically if edges outgrow the broadcast threshold).
     K = 4
-    for _ in range(64):
+
+    def relax(gen: DataFrame) -> DataFrame:
         cur = gen.select("node", "g", F.col("g").alias("g0"))
         for _ in range(K):
             bump = F.broadcast(edges).join(
@@ -323,18 +324,9 @@ def q204_topo_generations(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("g0").alias("g0"),
                 )
             )
-        new_gen = (
-            cur.select(
-                "node", "g", (F.col("g") != F.col("g0")).alias("chg")
-            )
-            .localCheckpoint(eager=True)
-        )
-        stable = new_gen.where("chg").isEmpty()
-        gen = new_gen.drop("chg")
-        if stable:
-            break
-    else:
-        raise RuntimeError("topo relaxation did not converge")
+        return cur.select("node", "g", (F.col("g") != F.col("g0")).alias("chg"))
+
+    gen = fixpoint(gen, relax, 64)
     return (
         gen.groupBy(F.col("g").cast("long").alias("generation"))
         .agg(

@@ -148,12 +148,13 @@ class TxLog:
         # schema of the most recent stage_data* on THIS writer, pending
         # publication by its commit (see the schema-record section)
         self._staged_schema: dict | None = None
-        # per-version fold memo: a commit, once written, is immutable
-        # (vacuum only deletes versions below the checkpoint floor,
-        # never changes a surviving fold), so _replay(v) is a pure
-        # function of v for the life of this handle. The change feed
-        # and the version ledger replay the same versions repeatedly —
-        # O(window x log) driver JSON parsing without this (r13 advice).
+        # per-version fold memo: a commit, once written, is immutable,
+        # so _replay(v) is a pure function of v while v exists. Only
+        # THIS handle's vacuum drops entries: another TxLog on the same
+        # root keeps serving memoized folds of versions vacuumed here.
+        # The change feed and the version ledger replay the same
+        # versions repeatedly — O(window x log) driver JSON parsing
+        # without this (r13 advice).
         self._replay_cache: dict[int, tuple] = {}
 
     # -- log layout ---------------------------------------------------
@@ -1143,7 +1144,9 @@ class TxLog:
         commits themselves (a checkpoint is first pinned at the cutoff
         so retained replay never needs them). Time travel below the
         cutoff becomes a clean error; this is the trade every
-        production format's VACUUM makes explicit."""
+        production format's VACUUM makes explicit. The error is this
+        handle's only: another TxLog on the same root still serves the
+        folds it memoized for vacuumed versions (files may be gone)."""
         if retain_versions < 1:
             raise ValueError("txlog: must retain at least 1 version")
         latest = self.latest_version()

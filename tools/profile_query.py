@@ -17,9 +17,8 @@ stdout carries one JSON line per entry: the Tracer counters plus
 ``body.sql``, the call site (``description``) of each SQL execution the body
 ran. stderr gets the machine-speed calibration probe first, then a ``FLAG``
 line for each slow entry whose stages are mostly single-task. A flag is a
-lead, not a verdict: final limits, 1-row aggregates and driver-bounded
-fixpoint probes legitimately run single-task stages. Formatted plans come
-from ``tools/explain_audit.py``.
+lead, not a verdict: final limits and 1-row aggregates legitimately run
+single-task stages. Formatted plans come from ``tools/explain_audit.py``.
 """
 
 from __future__ import annotations
