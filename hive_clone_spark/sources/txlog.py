@@ -2278,7 +2278,7 @@ def q126_txlog_merge_minimal_rewrite(
 def q128_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from hive_clone_spark.streaming.streams import read_events_stream
+    from hive_clone_spark.streaming.streams import read_events_stream, run_foreach
 
     tl = TxLog(_warehouse_dir(sf_dir, "txlog_q128")).create()
     ckpt = _warehouse_dir(sf_dir, "txlog_q128_ckpt")
@@ -2297,13 +2297,7 @@ def q128_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(sf_dir, "events.parque[t]"),
         max_files_per_trigger=None,
     )
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach(src, sink, ckpt)
     versions_after_drain = tl.latest_version() + 1
     # at-least-once failure injection: redeliver EVERY batch (staged
     # again, as a crashed-after-write retry would), all must be dropped
@@ -3528,7 +3522,7 @@ def q187_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from hive_clone_spark.catalog import table as _table
-    from hive_clone_spark.streaming.streams import EVENTS_SCHEMA
+    from hive_clone_spark.streaming.streams import EVENTS_SCHEMA, run_foreach
 
     # stage the events into 4 files -> a genuine 4-batch stream
     staged = _warehouse_dir(sf_dir, "cdc_q187_src")
@@ -3585,13 +3579,7 @@ def q187_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(staged, "*.parquet"))
     )
-    q = (
-        src.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach(src, upsert, ckpt)
 
     versions_after_drain = tl.latest_version() + 1
     # full redelivery through the sink; the events payload is read only

@@ -2009,6 +2009,7 @@ def q256_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         _warehouse_dir,
         _with_bucket,
     )
+    from hive_clone_spark.streaming.streams import run_foreach
 
     # version 0: the capped orders slice, bucketed (q254's layout)
     tl = TxLog(_warehouse_dir(sf_dir, "txlog_q256")).create()
@@ -2107,13 +2108,7 @@ def q256_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             " WHEN NOT MATCHED AND s.op = 'I' THEN INSERT *",
         )
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_foreach(stream, apply_batch, ckpt_dir)
     return _version_ledger(spark, tl)
 
 

@@ -241,12 +241,7 @@ def q80_stream_countdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(sf_dir, "events.parque[t]"),
         columns=["user_id", "event_id", "ts"],
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(countdown_stream(src), "q80_countdown", output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(countdown_stream(src), "q80_countdown", output_mode="update")
     t = spark.table("q80_countdown")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
@@ -390,19 +385,13 @@ def q94_stream_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = read_events_stream(
         spark, os.path.join(sf_dir, "events.parque[t]"),
         max_files_per_trigger=None,
         columns=["user_id", "event_id", "ts"],
     )
     stream = session_ttl_stream(src.withWatermark("ts", "10 minutes"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(stream, "q94_sessions", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(stream, "q94_sessions", output_mode="append")
     return spark.table("q94_sessions").orderBy("user_id", "sid")
 
 
@@ -528,12 +517,7 @@ def q138_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, src_dir, max_files_per_trigger=1,
         columns=["event_id", "user_id", "event_type", "value"],
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(topk_stream(src), "q138_topk", output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(topk_stream(src), "q138_topk", output_mode="update")
     t = spark.table("q138_topk")
     w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
     final = (
@@ -663,12 +647,7 @@ def q177_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(sf_dir, "events.parque[t]"),
         columns=["user_id", "event_id", "ts"],
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(throttle_stream(src), "q177_throttle", output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(throttle_stream(src), "q177_throttle", output_mode="update")
     t = spark.table("q177_throttle")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_total"))
     return (
@@ -811,12 +790,7 @@ def q205_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(kmv_stream(src), "q205_kmv", output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(kmv_stream(src), "q205_kmv", output_mode="update")
     t = spark.table("q205_kmv")
     w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
     final = (
@@ -975,12 +949,7 @@ def q228_stream_composite_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, src_dir, max_files_per_trigger=1,
         columns=["user_id", "event_type", "value"],
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(user_census(src), "q228_census", output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    run_to_memory(user_census(src), "q228_census", output_mode="update")
     t = spark.table("q228_census")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (

@@ -17,6 +17,14 @@ Scale notes (100 TB / day feeds):
     batch twin uses;
   * `availableNow` trigger gives exactly-once batch-boundary semantics
     for backfills over file listings (the test path here).
+
+Every availableNow drain in the engine goes through one of two runners:
+  * `run_to_memory` drains into an in-memory table and pins the state
+    partition count (`STATE_PARTITIONS`) for the drain, restoring the
+    session value afterwards;
+  * `run_foreach` drains through a foreachBatch sink and changes no
+    conf, because those sinks shuffle inside each batch and a pin would
+    change their plans.
 """
 
 from __future__ import annotations
@@ -31,6 +39,15 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+# Each stateful operator materializes one state store PER shuffle
+# partition; a stream-stream join keeps two sides. Size the stream's
+# partition count to key cardinality (a few hundred users here), not the
+# batch default — on a production feed this is the knob you RAISE to
+# spread state across executors. Dedup and windowed state are sized the
+# same way as join state. The conf is read once, at stream start, so
+# only the drain needs it.
+STATE_PARTITIONS = 8
 
 EVENTS_SCHEMA = StructType(
     [
@@ -63,7 +80,14 @@ def read_events_stream(
     workers downstream (applyInPandasWithState) are opaque to the
     optimizer, so every column of their input is read from parquet,
     shuffled on the state key and shipped across the Python boundary —
-    declaring only what the worker touches prunes all three."""
+    declaring only what the worker touches prunes all three.
+
+    Sets the session zone to UTC under the harness contract that
+    `catalog.table` documents: drained timestamps render as strings
+    downstream, so the wall clock must match DuckDB's naive read under
+    any caller session. Deliberately not restored — the zone resolves
+    lazily at execution."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = EVENTS_SCHEMA
     if columns is not None:
         want = set(columns)
@@ -112,16 +136,45 @@ def session_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFram
 
 
 def run_to_memory(
-    stream_df: DataFrame, query_name: str, output_mode: str = "append"
+    stream_df: DataFrame,
+    query_name: str,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
 ):
     """Drain the stream into an in-memory table with the availableNow
-    trigger (process-everything-then-stop — the backfill pattern).
-    Returns the finished StreamingQuery so callers can inspect
-    lastProgress (state-store sizes, watermark)."""
+    trigger (process-everything-then-stop — the backfill pattern), with
+    `spark.sql.shuffle.partitions` pinned to `STATE_PARTITIONS` for the
+    drain. `checkpoint` is the checkpoint directory a restarted query
+    resumes from. Returns the finished StreamingQuery so callers can
+    inspect lastProgress (state-store sizes, watermark)."""
+    conf = stream_df.sparkSession.conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        writer = (
+            stream_df.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+        )
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        q = writer.start()
+        q.awaitTermination()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
+    return q
+
+
+def run_foreach(stream_df: DataFrame, sink, checkpoint: str):
+    """Drain the stream through the foreachBatch `sink(batch_df,
+    batch_id)` with the availableNow trigger, checkpointing to
+    `checkpoint`. Changes no conf: the sinks shuffle inside each batch
+    under the session's own partition count. Returns the finished
+    StreamingQuery."""
     q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
+        stream_df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
@@ -202,18 +255,13 @@ def write_stream_exactly_once(
     single-directory layout doesn't fit (e.g. per-batch compaction or
     merge-into targets).
 
-    Returns the started StreamingQuery (availableNow trigger: drain
+    Returns the drained StreamingQuery (availableNow trigger: drain
     everything, then stop)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach(stream_df, sink, checkpoint_dir)
 
 
 def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:

@@ -184,9 +184,6 @@ def q59_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    # the drained timestamps render as strings below — pin UTC so the
-    # wall clock matches DuckDB's naive read under any caller session
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # glob, not the bare file path: the file-stream source requires its
     # basePath to be a directory, and a glob anchors it to sf_dir
     src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
@@ -194,18 +191,7 @@ def q59_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         src.where(F.col("event_type") == "click"),
         src.where(F.col("event_type") == "purchase"),
     )
-    # Each stateful operator materializes one state store PER shuffle
-    # partition; a stream-stream join keeps two sides. Size the stream's
-    # partition count to key cardinality (a few hundred users here), not
-    # the batch default — on a production feed this is the knob you
-    # RAISE to spread state across executors. Scoped save/restore: the
-    # conf is read once at stream start.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(joined, "q59_pairs", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(joined, "q59_pairs", output_mode="append")
     pairs = spark.table("q59_pairs")
     return (
         pairs.groupBy("user_id")
@@ -252,7 +238,6 @@ def q60_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
     dim = table(spark, sf_dir, "customer")
     run_to_memory(enrich_with_dim(src, dim), "q60_enriched", output_mode="append")
@@ -283,8 +268,7 @@ def q60_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale design: dedup state is one row per event_id only within the
 # watermark horizon (10 min of event time), not per stream-lifetime —
 # the property that makes ingestion dedup feasible on an unbounded
-# feed. Shuffle partitions are sized to the stream's key spread the
-# same way q59 sizes its join state.
+# feed.
 # ---------------------------------------------------------------------------
 @register(
     "q66_stream_dedup",
@@ -320,12 +304,7 @@ def q66_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream(spark, path, max_files_per_trigger=None)
     )
     deduped = dedup_stream(redelivered)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(deduped, "q66_dedup", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(deduped, "q66_dedup", output_mode="append")
     t = spark.table("q66_dedup")
     return (
         t.groupBy("event_type")
@@ -388,12 +367,7 @@ def q68_stream_stateful_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(sf_dir, "events.parque[t]"),
         columns=["user_id", "event_id", "ts", "value"],
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(ema_stream(src), "q68_ema", output_mode="update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(ema_stream(src), "q68_ema", output_mode="update")
     t = spark.table("q68_ema")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
     return (
@@ -443,8 +417,7 @@ def q72_stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = _warehouse(sf_dir, "q72_sink")
     ckpt_dir = _warehouse(sf_dir, "q72_ckpt")
     src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
-    q = write_stream_exactly_once(src, out_dir, ckpt_dir)
-    q.awaitTermination()
+    write_stream_exactly_once(src, out_dir, ckpt_dir)
     back = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
     return (
         back.groupBy("event_type")
@@ -521,7 +494,6 @@ def q88_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_clone_spark.catalog import table as _table
     from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
     c = (
         src.where(F.col("event_type") == "click")
@@ -548,12 +520,7 @@ def q88_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 hour")),
         "leftOuter",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(joined, "q88_outer", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(joined, "q88_outer", output_mode="append")
     drained = spark.table("q88_outer")
     # settled-region boundary from the batch table (a 1-row broadcast):
     # min of the two sides' own max event times − delay − horizon − 1 s
@@ -673,7 +640,6 @@ def q102_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_clone_spark.catalog import table as _table
     from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
     c = (
         src.where(F.col("event_type") == "click")
@@ -701,12 +667,7 @@ def q102_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 hour")),
         "fullOuter",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(joined, "q102_full_outer", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(joined, "q102_full_outer", output_mode="append")
     drained = spark.table("q102_full_outer")
     ev = _table(spark, sf_dir, "events")
     wm = ev.agg(
@@ -850,12 +811,7 @@ def q146_stream_dedup_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(agg, "q146_dedup_windowed", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(agg, "q146_dedup_windowed", output_mode="append")
     return (
         spark.table("q146_dedup_windowed")
         .orderBy("window_start", "event_type")
@@ -931,7 +887,7 @@ def q162_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from hive_clone_spark.sources.queries import _warehouse
-    from hive_clone_spark.streaming.streams import read_events_stream
+    from hive_clone_spark.streaming.streams import read_events_stream, run_foreach
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
@@ -989,15 +945,7 @@ def q162_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state["max_ms"] = mx_ms
 
     src = read_events_stream(spark, src_dir, max_files_per_trigger=1)
-    q = (
-        src.writeStream.foreachBatch(route)
-        .option(
-            "checkpointLocation", os.path.join(src_dir, "_chk")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach(src, route, os.path.join(src_dir, "_chk"))
     input_rows = ev.count()
     out = spark.createDataFrame(
         [
@@ -1085,12 +1033,7 @@ def q212_stream_complete_leaderboard(spark: SparkSession, sf_dir: str) -> DataFr
         F.sum("cents").alias("sum_cents"),
         F.max("cents").alias("max_cents"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(agg, "q212_leader", output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(agg, "q212_leader", output_mode="complete")
     return (
         spark.table("q212_leader")
         .select("event_type", "n_events", "sum_cents", "max_cents")
@@ -1134,6 +1077,7 @@ def q217_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
 
     from hive_clone_spark.sources.queries import _warehouse
+    from hive_clone_spark.streaming.streams import run_to_memory
 
     src_dir = _warehouse(sf_dir, "ckpt_q217_src")
     ckpt_dir = _warehouse(sf_dir, f"ckpt_q217_wal_{os.getpid()}")
@@ -1163,18 +1107,8 @@ def q217_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFram
             F.count("*").alias("n_events"),
             F.sum("cents").alias("sum_cents"),
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_memory(agg, name, "complete", checkpoint=ckpt_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         run("q217_run1")
         # the process "redeploys"; phase B lands while it is down
@@ -1183,7 +1117,6 @@ def q217_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFram
         ).parquet(src_dir)
         run("q217_run2")  # same checkpoint: restore state, read only new files
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt_dir, ignore_errors=True)
     return (
         spark.table("q217_run2")
@@ -1241,7 +1174,6 @@ def q240_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
     clicks = (
         src.where(F.col("event_type") == "click")
@@ -1260,12 +1192,7 @@ def q240_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_semi",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        run_to_memory(semi, "q240_semi", output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_to_memory(semi, "q240_semi", output_mode="append")
     out = spark.table("q240_semi")
     return (
         out.groupBy("user_id")

@@ -189,3 +189,57 @@ def test_ema_batch_boundary_carry(spark, sf_dir):
         assert ok, msg
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_run_to_memory_pins_state_partitions(spark, events_time_split_dir):
+    """The memory runner drains under STATE_PARTITIONS and hands the
+    session its own partition count back, also when a batch raises."""
+    from pyspark.errors import StreamingQueryException
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        q = streams.run_to_memory(
+            streams.tumbling_counts(
+                streams.read_events_stream(spark, events_time_split_dir)
+            ),
+            "pin_sink",
+            output_mode="complete",
+        )
+        assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 8
+        assert spark.conf.get(key) == "3"
+
+        failing = streams.read_events_stream(spark, events_time_split_dir).select(
+            F.raise_error(F.lit("batch fails")).cast("long").alias("x")
+        )
+        with pytest.raises(StreamingQueryException):
+            streams.run_to_memory(failing, "pin_fail_sink")
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stream_drains_live_only_in_streams_module():
+    """Every availableNow drain goes through `streams.run_to_memory` or
+    `streams.run_foreach`, and only the session factory and the memory
+    runner set the shuffle-partition count."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(streams.__file__).resolve().parent.parent
+    sets_parts = re.compile(
+        r"(\.set|\.config)\(\s*[\"']spark\.sql\.shuffle\.partitions"
+        r"|\bSET\s+spark\.sql\.shuffle\.partitions",
+        re.IGNORECASE,
+    )
+    drains, pins = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        if rel != "streaming/streams.py" and "writeStream" in text:
+            drains.append(rel)
+        if rel not in ("session.py", "streaming/streams.py") and sets_parts.search(text):
+            pins.append(rel)
+    assert drains == [], f"writeStream outside streams.py: {drains}"
+    assert pins == [], f"shuffle.partitions set outside streams.py: {pins}"

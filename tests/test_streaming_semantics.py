@@ -239,10 +239,9 @@ def test_foreach_batch_sink_exactly_once(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "fb_out")
     ckpt = str(tmp_path / "fb_ckpt")
-    q = streams.write_stream_exactly_once(
+    streams.write_stream_exactly_once(
         streams.read_events_stream(spark, src), out, ckpt
     )
-    q.awaitTermination()
 
     def read_all():
         return {
