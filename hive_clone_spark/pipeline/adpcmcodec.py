@@ -17,10 +17,12 @@ accumulated |error| (the lossy part, pinned as data rather than
 waved at).
 
 Scale design (p_audio_adpcm): one Arrow mapInPandas pass, codec
-by-value in the closure; per-row cost linear in sample count; no
-shuffle. At 100 TB ADPCM is the "cheap speech archive" lane — 4:1,
-integer-only, state O(1) per stream so blocks decode independently
-(the parallel-decode property the 4-byte header exists to provide).
+by-value in the closure; per-row cost linear in sample count; the
+only shuffles are spread() before it and the single-partition final
+sort (`common.ordered`) after it. At 100 TB ADPCM is the "cheap speech
+archive" lane — 4:1, integer-only, state O(1) per stream so blocks
+decode independently (the parallel-decode property the 4-byte header
+exists to provide).
 """
 
 from __future__ import annotations
@@ -182,7 +184,7 @@ def p_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import cloudpickle as _cp
 
     import hive_clone_spark.pipeline.adpcmcodec as _mod
-    from hive_clone_spark.pipeline.common import spread
+    from hive_clone_spark.pipeline.common import ordered, spread
 
     _cp.register_pickle_by_value(_mod)
 
@@ -245,4 +247,4 @@ def p_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, n_samples BIGINT, final_pred BIGINT, "
         "final_idx BIGINT, code_checksum BIGINT, recon_checksum BIGINT, "
         "abs_error_sum BIGINT, n_bytes BIGINT, decode_matches BOOLEAN",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

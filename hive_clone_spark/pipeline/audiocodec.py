@@ -19,6 +19,11 @@ Scale notes: identical plumbing to the image path — bytes cross into
 Python once per Arrow batch, numpy de-interleaves vectorized, only
 narrow typed stats flow back. Closures reach this module's functions
 via cloudpickle register_pickle_by_value (see imagecodec.py).
+p_audio_decode, p_audio_framestats and p_audio_tone_detect end in
+`common.ordered`, a single-partition sort: an `orderBy` would first
+run a range-sampling job over the synth + decode stage, so each clip
+would be synthesized and decoded twice. The other entries here still
+end in `orderBy` (PYRESAMPLE_OK in tests/test_plan_audit.py).
 """
 
 from __future__ import annotations
@@ -30,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
-from hive_clone_spark.pipeline.common import spread
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 
 
@@ -198,7 +203,7 @@ def p_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, sample_rate INT, n_channels INT, n_frames INT, "
         "duration_us BIGINT, n_bytes BIGINT, sum_ch0 BIGINT, sum_ch1 BIGINT"
     )
-    return payloads.mapInPandas(decode_batches, schema).orderBy("doc_id")
+    return payloads.mapInPandas(decode_batches, schema).transform(ordered, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -300,7 +305,9 @@ def p_audio_framestats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, win_id INT, win_start INT, win_len INT, "
         "sum_abs BIGINT, n_zc BIGINT"
     )
-    return payloads.mapInPandas(stats_batches, schema).orderBy("doc_id", "win_id")
+    return payloads.mapInPandas(stats_batches, schema).transform(
+        ordered, "doc_id", "win_id"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -567,8 +574,8 @@ def p_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale design: synth + decode are Arrow mapInPandas stages behind
 # spread(); the correlation is pure JVM (three 64-term folds per row at
-# the scan, no shuffle until the final orderBy). At 100 TB each clip is
-# independent — embarrassingly parallel, no state.
+# the scan, no shuffle until the final single-partition sort). At
+# 100 TB each clip is independent — embarrassingly parallel, no state.
 # ---------------------------------------------------------------------------
 _TONE_N = 64
 _TONE_BINS = (4, 8, 16)
@@ -704,7 +711,7 @@ def p_audio_tone_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         detected.alias("detected_k"),
         (detected == F.lit(_TONE_N) / F.col("period")).alias("correct"),
         F.round(F.greatest("p4", "p8", "p16"), 4).alias("power"),
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -858,7 +865,7 @@ def p_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale notes: per-payload vectorized numpy over the PCM block; one
 # output row per (doc, channel). The normalize-then-clamp pipeline is
-# a pure map — no shuffle until the bounded per-channel aggregate.
+# a pure map — no shuffle until the final sort.
 # ---------------------------------------------------------------------------
 _LOUD_TARGET = 20000  # target mean-abs level: gain ~20x, real clipping
 

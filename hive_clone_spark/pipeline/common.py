@@ -76,20 +76,45 @@ def sql_cosine(a: str, b: str) -> str:
     )
 
 
-def spread(df):
-    """Round-robin repartition to the session's core count, used right
-    before Python-heavy (mapInPandas codec) stages.
+def spread(df, *keys):
+    """Repartition to the session's core count, used right before
+    Python-heavy (Arrow) stages.
 
-    The driver testdata ships each table as ONE tiny parquet file
-    (documents.parquet at sf0.1 is 0.6 MB), so the scan is a single
-    split and everything downstream of it — including a per-image
-    decode — would run on ONE core. In production the payload scan has
-    hundreds of natural splits and this is redundant; here it shuffles
-    a handful of id/payload rows once, orders of magnitude less work
-    than the decode it parallelizes. (Round-6 fix: the PNG mix-in made
-    single-threaded decode visible — p_image_decode 1.2 s → 7.9 s —
-    because the whole codec family inherited the 1-split scan.)"""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    Without keys it is a round-robin repartition, for `mapInPandas`
+    codec stages. The driver testdata ships each table as ONE tiny
+    parquet file (documents.parquet at sf0.1 is 0.6 MB), so the scan is
+    a single split and everything downstream of it — including a
+    per-image decode — would run on ONE core. In production the payload
+    scan has hundreds of natural splits and this is redundant; here it
+    shuffles a handful of id/payload rows once, orders of magnitude less
+    work than the decode it parallelizes. (Round-6 fix: the PNG mix-in
+    made single-threaded decode visible — p_image_decode 1.2 s → 7.9 s —
+    because the whole codec family inherited the 1-split scan.)
+
+    With keys it hash-partitions on them, for a following
+    `groupBy(*keys).applyInPandas`. The groupBy reuses this
+    partitioning, so no second exchange appears, and an explicit-count
+    repartition is exempt from AQE coalescing. The groupBy's own
+    ENSURE_REQUIREMENTS shuffle is not: AQE folds its few small
+    partitions into one, and every group (p_knn_hnsw's four shard
+    indexes) then runs one after another in a single task. Keys hash
+    onto partitions, so two groups may still share one."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+
+
+def ordered(df, *cols):
+    """Final sort of a Python-pipeline result: one partition, sorted
+    inside it.
+
+    `orderBy` plans a range-partitioning exchange, and its
+    `RangePartitioner` first runs a sampling job over the exchange's
+    child, so a `mapInPandas` chain under it runs twice. A single
+    partition needs no range bounds, so the Python stage runs once. It
+    stays correct at any scale: the entry's result is collected to the
+    driver anyway, and one sorted partition is what that collect
+    receives. Entries with a limit keep `orderBy(...).limit(k)`
+    (TakeOrderedAndProject takes no sample)."""
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def py_portable_hash(s: str) -> int:

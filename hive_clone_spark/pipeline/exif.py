@@ -35,7 +35,7 @@ import pandas as pd  # noqa: F401  (worker-side import parity)
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_clone_spark.catalog import table
-from hive_clone_spark.pipeline.common import spread
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.pipeline.jpegcodec import decode_jpeg, synth_jpeg
 from hive_clone_spark.registry import register
 
@@ -289,4 +289,4 @@ def p_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, byte_order STRING, orientation INT, x_res BIGINT, "
         "make STRING, pixel_x INT, pixel_y INT, exif_matches_px BOOLEAN"
     )
-    return ids.mapInPandas(exif_batches, schema).orderBy("doc_id")
+    return ids.mapInPandas(exif_batches, schema).transform(ordered, "doc_id")

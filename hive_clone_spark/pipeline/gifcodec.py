@@ -36,7 +36,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_clone_spark.catalog import table
-from hive_clone_spark.pipeline.common import spread
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 
 _GIF_MAX_CODE = 4096
@@ -339,4 +339,4 @@ def p_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(
         decode_batches,
         "doc_id BIGINT, interlaced BOOLEAN, width INT, height INT, sum_v BIGINT",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

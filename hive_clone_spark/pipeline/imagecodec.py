@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
-from hive_clone_spark.pipeline.common import spread
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -709,7 +709,7 @@ def p_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, format STRING, width INT, height INT, channels INT, "
         "n_bytes BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT"
     )
-    return payloads.mapInPandas(decode_batches, schema).orderBy("doc_id")
+    return payloads.mapInPandas(decode_batches, schema).transform(ordered, "doc_id")
 
 
 @register(
@@ -899,7 +899,7 @@ def p_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, src_width INT, src_height INT, "
         "dst_width INT, dst_height INT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT"
     )
-    return payloads.mapInPandas(resize_batches, schema).orderBy("doc_id")
+    return payloads.mapInPandas(resize_batches, schema).transform(ordered, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1002,4 +1002,4 @@ def p_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
         patch_batches,
         "doc_id BIGINT, py BIGINT, n_patches_x BIGINT, patch_h BIGINT, "
         "mean_luma BIGINT, band_uniform BOOLEAN",
-    ).orderBy("doc_id", "py")
+    ).transform(ordered, "doc_id", "py")

@@ -63,7 +63,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_clone_spark.catalog import table
-from hive_clone_spark.pipeline.common import spread
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1167,4 +1167,4 @@ def p_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_blocks BIGINT, sum_r BIGINT, sum_g BIGINT, sum_b BIGINT, "
         "min_px BIGINT, max_px BIGINT"
     )
-    return payloads.mapInPandas(decode_batches, schema).orderBy("doc_id")
+    return payloads.mapInPandas(decode_batches, schema).transform(ordered, "doc_id")

@@ -35,7 +35,9 @@ dependency; tests additionally round-trip real DEFLATE from stdlib
 zlib as an adversarial cross-check.
 
 Scale design (p_pdf_extract): one Arrow mapInPandas pass, codec
-shipped by-value; per-row cost linear in document size, no shuffle.
+shipped by-value; per-row cost linear in document size; the only
+shuffles are spread() before it and the single-partition final sort
+(`common.ordered`, which runs the pass once) after it.
 """
 
 from __future__ import annotations
@@ -644,7 +646,7 @@ def p_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import hive_clone_spark.pipeline.pdfcodec as _mod
     import hive_clone_spark.sources.inflate as _inf
-    from hive_clone_spark.pipeline.common import spread
+    from hive_clone_spark.pipeline.common import ordered, spread
 
     _cp.register_pickle_by_value(_mod)
     _cp.register_pickle_by_value(_inf)
@@ -686,4 +688,4 @@ def p_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         codec_batches,
         "doc_id BIGINT, n_pages INT, extracted_len BIGINT, "
         "extracted_md5 STRING, roundtrip_ok BOOLEAN",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

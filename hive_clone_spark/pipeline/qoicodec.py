@@ -14,7 +14,9 @@ sits under the DuckDB value hash), encodes, decodes, and checksums the
 round trip.
 
 Scale design: one Arrow mapInPandas pass; codec shipped by value into
-the closure; per-row cost linear in pixel count; no shuffle.
+the closure; per-row cost linear in pixel count; the only shuffles
+are spread() before it and the single-partition final sort
+(`common.ordered`, which runs the pass once) after it.
 """
 
 from __future__ import annotations
@@ -212,7 +214,7 @@ def p_qoi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import cloudpickle as _cp
 
     import hive_clone_spark.pipeline.qoicodec as _mod
-    from hive_clone_spark.pipeline.common import spread
+    from hive_clone_spark.pipeline.common import ordered, spread
 
     _cp.register_pickle_by_value(_mod)
 
@@ -258,4 +260,4 @@ def p_qoi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         codec_batches,
         "doc_id BIGINT, width INT, height INT, channels INT, "
         "n_pixels BIGINT, pixel_checksum BIGINT, roundtrip_ok BOOLEAN",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

@@ -23,6 +23,7 @@ from hive_clone_spark.pipeline.common import (
     cosine_col,
     dot_col,
     py_portable_hash,
+    spread,
     sql_cosine,
     sql_dot,
 )
@@ -1029,8 +1030,6 @@ _MRL_DIMS = (32, 16)
 
 
 def _mrl_pairs(spark: SparkSession, sf_dir: str, d: int) -> DataFrame:
-    from hive_clone_spark.pipeline.common import spread
-
     # spread: the 1-split embeddings scan ran every truncation's
     # corpus-side cosine pass on one core (round-9 parallelism audit:
     # 33/33 single-task stages); results unchanged, scan parallel
@@ -1142,9 +1141,13 @@ def p_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # priority-queue ef-search inside one Arrow applyInPandas stage, and
 # a tiny global top-k merge combines the per-shard results. At 100 TB
 # this is exactly how distributed vector search runs (per-partition
-# index + scatter-gather), and the expensive part (index build +
-# search) is embarrassingly parallel with NO shuffle beyond the
-# shard partitioning.
+# index + scatter-gather; REPOSE, ICDE 2021). The expensive part
+# (index build + search) runs in parallel only because the shard
+# partitioning is an explicit `spread(sharded, "shard")`: a bare
+# groupBy's shuffle is coalesced by AQE into ONE partition, and the
+# four shard indexes are then built and searched one after another
+# in a single task. Keys hash onto partitions, so at 4 shards on
+# 4 cores 3 tasks carry work (shards 0 and 1 share one).
 #
 # Everything is deterministic: insertion order = vec_id order, layer
 # draws from the md5-based portable hash (p=1/4 geometric), all ties
@@ -1242,7 +1245,11 @@ def p_knn_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = _topk(queries, ids, raw, unit, layers, entry, levels, top_k)
         return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
-    per_shard = sharded.groupBy("shard").applyInPandas(search_shard, out_schema)
+    per_shard = (
+        spread(sharded, "shard")
+        .groupBy("shard")
+        .applyInPandas(search_shard, out_schema)
+    )
     return _hnsw_merge_topk(per_shard)
 
 
@@ -1262,8 +1269,9 @@ def p_knn_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale design: the index table is tiny relative to the corpus
 # (M*levels ints per vector vs the vector itself) and partitions by
-# shard, so the search stage is one co-partitioned join + an
-# embarrassingly parallel applyInPandas — the scatter-gather serving
+# shard, so the search stage is one join + a shard-parallel
+# applyInPandas (both the build and the search go through
+# `spread(..., "shard")`, as in p_knn_hnsw) — the scatter-gather serving
 # shape, with the build cost paid once at ingest, exactly how a
 # 100 TB vector store deploys (build on append, serve from the stored
 # graph).
@@ -1327,7 +1335,8 @@ def p_knn_hnsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx_path = _warehouse(sf_dir, "hnsw_index")
     (
-        sharded.groupBy("shard")
+        spread(sharded, "shard")
+        .groupBy("shard")
         .applyInPandas(build_shard, idx_schema)
         .write.mode("overwrite")
         .partitionBy("shard")
@@ -1360,7 +1369,9 @@ def p_knn_hnsw_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = _topk(queries, ids, raw, unit, layers, entry, levels, top_k)
         return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
-    per_shard = joined.groupBy("shard").applyInPandas(
-        search_stored_shard, out_schema
+    per_shard = (
+        spread(joined, "shard")
+        .groupBy("shard")
+        .applyInPandas(search_stored_shard, out_schema)
     )
     return _hnsw_merge_topk(per_shard)

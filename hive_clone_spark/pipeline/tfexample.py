@@ -32,7 +32,7 @@ oracle's DOUBLE arithmetic matches bit for bit.
 Scale notes: encode and parse are separate Arrow stages (the proto
 bytes demonstrably cross the JVM boundary as a `binary` column,
 imagecodec's two-stage pattern); both are per-row vectorized walks
-with no shuffle until the final bounded aggregate.
+with no shuffle until the final sort.
 
 Reference parity: none (1.4k-line game engine, SURVEY.md §0); this is
 the training-data interchange surface of the driver contract.

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
-from hive_clone_spark.pipeline.common import spread
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 
 _MAGIC = b"YUV4MPEG2"
@@ -228,7 +228,7 @@ def p_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, width INT, height INT, n_frames INT, fps_x1 INT, "
         "fps_den INT, n_bytes BIGINT, sum_y BIGINT, sum_u BIGINT, sum_v BIGINT"
     )
-    return payloads.mapInPandas(decode_batches, schema).orderBy("doc_id")
+    return payloads.mapInPandas(decode_batches, schema).transform(ordered, "doc_id")
 
 @register(
     "p_video_framestats",
@@ -304,7 +304,9 @@ def p_video_framestats(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = (
         "doc_id BIGINT, frame_idx INT, sum_y BIGINT, sum_u BIGINT, sum_v BIGINT"
     )
-    return payloads.mapInPandas(frame_batches, schema).orderBy("doc_id", "frame_idx")
+    return payloads.mapInPandas(frame_batches, schema).transform(
+        ordered, "doc_id", "frame_idx"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -542,9 +544,9 @@ def p_keyframe_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale design: one Arrow pass synthesizes, decodes, and searches
 # (49 offsets x 16 pixels per doc — integer SIMD inside numpy);
-# per-payload work is independent, shuffle-free, and the returned
-# census is one row per document. At 100 TB the search is the same
-# embarrassingly parallel map over shards.
+# per-payload work is independent, shuffle-free up to the final
+# sort, and the returned census is one row per document. At 100 TB
+# the search is the same embarrassingly parallel map over shards.
 # ---------------------------------------------------------------------------
 _ME_BLOCK = 4
 _ME_ANCHOR = 6
@@ -647,4 +649,4 @@ def p_motion_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_batches,
         "doc_id BIGINT, dx_est BIGINT, dy_est BIGINT, sad_min BIGINT, "
         "moved BOOLEAN, block_sum BIGINT",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

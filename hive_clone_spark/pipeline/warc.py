@@ -52,7 +52,9 @@ from pyspark.sql import functions as F
 from hive_clone_spark.catalog import table
 from hive_clone_spark.pipeline.common import (
     SQL_WORDS,
+    ordered,
     portable_hash,
+    spread,
     sql_portable_hash,
     words_col,
 )
@@ -356,11 +358,10 @@ def p_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return pd.DataFrame({"bucket": [bucket], "payload": [payload]})
 
-    # bucket-keyed repartition (exempt from AQE coalescing) so the
-    # per-file build + parse parallelize despite the 1-split testdata
-    # scan; groupBy reuses the same hash partitioning — no 2nd exchange
+    # per-file build + parse run in parallel despite the 1-split
+    # testdata scan
     files = (
-        docs.repartition(spark.sparkContext.defaultParallelism, "bucket")
+        spread(docs, "bucket")
         .groupBy("bucket")
         .applyInPandas(build_files, "bucket BIGINT, payload BINARY")
     )
@@ -419,7 +420,7 @@ def p_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_links",
         F.size(words_col(F.col("extracted"))).cast("long").alias("n_words"),
         portable_hash(F.col("extracted")).alias("text_hash"),
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")
 
 
 @register(
@@ -813,8 +814,6 @@ def p_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _cp.register_pickle_by_value(_mod)
 
-    from hive_clone_spark.pipeline.common import portable_hash, spread, words_col
-
     docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
 
     def strip_batches(batches):
@@ -868,4 +867,4 @@ def p_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dropped_density_permille",
         F.size(words_col(F.col("kept"))).cast("long").alias("n_words"),
         portable_hash(F.col("kept")).alias("kept_hash"),
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

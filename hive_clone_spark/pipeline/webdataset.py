@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.pipeline.jpegcodec import decode_jpeg, synth_jpeg
 from hive_clone_spark.registry import register
 
@@ -190,7 +191,7 @@ def p_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     shards = (
-        docs.repartition(spark.sparkContext.defaultParallelism, "shard")
+        spread(docs, "shard")
         .groupBy("shard")
         .applyInPandas(build_shards, "shard BIGINT, payload BINARY")
     )
@@ -232,4 +233,4 @@ def p_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id BIGINT, shard BIGINT, width INT, height INT, channels INT, "
         "caption_len INT, sum_r BIGINT",
     )
-    return parsed.orderBy("doc_id")
+    return parsed.transform(ordered, "doc_id")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.pipeline.common import ordered
 from hive_clone_spark.registry import register
 
 # RFC 1951 3.2.5: length codes 257..285 -> (extra bits, base length)
@@ -285,4 +286,4 @@ def p_inflate_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         codec_batches,
         "doc_id BIGINT, orig_len BIGINT, decoded_len BIGINT, "
         "decoded_md5 STRING, roundtrip_ok BOOLEAN, zlevel STRING",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

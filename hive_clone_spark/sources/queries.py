@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 from hive_clone_spark.sources.io import write_bucketed, write_zordered
 
@@ -555,9 +556,10 @@ def q127_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # filter; this entry makes that decision auditable row-group by
 # row-group.
 #
-# Scale design: write and footer-scan are both per-file tasks
-# (embarrassingly parallel); footer cost is KB per file regardless of
-# data size; the matched count reads only overlapping groups. The
+# Scale design: write and footer-scan are both per-file tasks, spread
+# over the cores by a bucket-keyed `spread` (AQE would coalesce a bare
+# groupBy's shuffle into one task); footer cost is KB per file regardless
+# of data size; the matched count reads only overlapping groups. The
 # ledger itself is metadata-sized (files x groups), the thing a table
 # format would persist.
 # ---------------------------------------------------------------------------
@@ -624,8 +626,10 @@ def q141_rowgroup_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.replace(tmp, path)  # idempotent under task retries
         return pd.DataFrame({"bucket": [b], "path": [path]})
 
-    files = bucketed.groupBy("bucket").applyInPandas(
-        write_group, "bucket INT, path STRING"
+    files = (
+        spread(bucketed, "bucket")
+        .groupBy("bucket")
+        .applyInPandas(write_group, "bucket INT, path STRING")
     )
 
     def scan_footers(batches):
@@ -674,7 +678,7 @@ def q141_rowgroup_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         scan_footers,
         "bucket INT, rg_idx INT, n_rows BIGINT, kmin BIGINT, kmax BIGINT, "
         "chosen BOOLEAN, matched BIGINT",
-    ).orderBy("bucket", "rg_idx")
+    ).transform(ordered, "bucket", "rg_idx")
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,8 @@ tests pin: same input -> same bytes, every run, every worker.
 
 Scale design (p_snappy_roundtrip): one Arrow mapInPandas pass, the
 whole codec by-value in the closure (workers have no repo sys.path);
-per-row cost linear in payload, no shuffle anywhere.
+per-row cost linear in payload; the only shuffles are spread() before
+it and the final sort after it.
 """
 
 from __future__ import annotations

@@ -42,7 +42,9 @@ the input, the contract all clean-room codecs here pin in tests):
 
 Scale design (p_zstd_roundtrip): one Arrow mapInPandas pass, the
 whole codec shipped by-value in the closure (workers have no repo
-sys.path); per-row cost linear in payload, no shuffle anywhere.
+sys.path); per-row cost linear in payload; the only shuffles are
+spread() before it and the single-partition final sort
+(`common.ordered`, which runs the pass once) after it.
 """
 
 from __future__ import annotations
@@ -50,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.pipeline.common import ordered
 from hive_clone_spark.registry import register
 
 _MAGIC = 0xFD2FB528
@@ -938,4 +941,4 @@ def p_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         codec_batches,
         "doc_id BIGINT, orig_len BIGINT, decoded_len BIGINT, "
         "decoded_md5 STRING, roundtrip_ok BOOLEAN",
-    ).orderBy("doc_id")
+    ).transform(ordered, "doc_id")

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
-from hive_clone_spark.pipeline.common import sql_portable_hash
+from hive_clone_spark.pipeline.common import ordered, sql_portable_hash
 from hive_clone_spark.registry import register
 
 ALPHA = 0.2  # reference smoothing rate (ui_app.cpp:15)
@@ -93,7 +93,9 @@ def p_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    return part.mapInPandas(ema_batches, EMA_SCHEMA).orderBy("user_id", "seq")
+    return part.mapInPandas(ema_batches, EMA_SCHEMA).transform(
+        ordered, "user_id", "seq"
+    )
 
 
 # ---------------------------------------------------------------------------

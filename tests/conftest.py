@@ -59,7 +59,6 @@ _SLOW_LANE = {
     "test_plan_audit.py::test_plan_has_no_scale_antipatterns[g_spider_moves]",  # 51.5s
     "test_plan_audit.py::test_plan_has_no_scale_antipatterns[p_bpe_train]",  # 30.7s
     "test_plan_audit.py::test_plan_has_no_scale_antipatterns[g_legal_moves_all]",  # 27.8s
-    "test_plan_audit.py::test_plan_has_no_scale_antipatterns[p_audio_tone_detect]",  # 18.4s
     "test_plan_audit.py::test_plan_has_no_scale_antipatterns[p_dedup_incremental]",  # 15.1s
     "test_plan_audit.py::test_plan_has_no_scale_antipatterns[q217_stream_checkpoint_restart]",  # 14.8s
     "test_plan_audit.py::test_plan_has_no_scale_antipatterns[q228_stream_composite_state]",  # 13.4s
@@ -67,13 +66,11 @@ _SLOW_LANE = {
     "test_relational_oracle.py::test_query_matches_oracle[p_bpe_apply]",  # 45.3s
     "test_relational_oracle.py::test_query_matches_oracle[p_bpe_train]",  # 44.2s
     "test_relational_oracle.py::test_query_matches_oracle[g_legal_moves_all]",  # 42.6s
-    "test_relational_oracle.py::test_query_matches_oracle[p_audio_tone_detect]",  # 40.4s
     "test_relational_oracle.py::test_query_matches_oracle[p_dedup_resolve]",  # 25.7s
     "test_relational_oracle.py::test_query_matches_oracle[p_bm25_rank]",  # 22.7s
     "test_relational_oracle.py::test_query_matches_oracle[g_grasshopper_moves]",  # 18.3s
     "test_relational_oracle.py::test_query_matches_oracle[q89_analyze_stats]",  # 16.8s
     "test_relational_oracle.py::test_query_matches_oracle[g_spider_moves]",  # 15.3s
-    "test_relational_oracle.py::test_query_matches_oracle[p_boilerplate_strip]",  # 15.2s
     "test_relational_oracle.py::test_query_matches_oracle[p_audio_vad]",  # 13.4s
     "test_relational_oracle.py::test_query_matches_oracle[p_cdc_chunk]",  # 13.3s
     # engine-emission re-measurement duplicated by the q146/q162 oracle

@@ -9,7 +9,11 @@ to CI per the round-1 verdict):
   * BroadcastNestedLoopJoin only where the build side is a literal
     handful of rows (theta joins against tiny dims / fixtures) —
     an explicit allowlist, so a NEW nested-loop join fails the suite;
-  * no parquet Filter without PushedFilters (pushdown lost).
+  * no parquet Filter without PushedFilters (pushdown lost);
+  * no Python operator below a range-partitioning exchange in the same
+    stage (PYRESAMPLE: the sampling job reruns the Python stage);
+  * no grouped Python operator fed by an AQE-coalescible shuffle
+    (PYCOALESCE: every group then runs in one task).
 
 Plans are built (not executed) at the correctness SF, so the whole
 sweep is driver-side Catalyst work.
@@ -18,8 +22,10 @@ sweep is driver-side Catalyst work.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from hive_clone_spark import registry
+from hive_clone_spark.pipeline.common import ordered, spread
 from tools.explain_audit import audit
 
 registry.load_all_modules()
@@ -127,6 +133,10 @@ GLOBALWINDOW_OK = {
     "p_quantile_normalize",  # same <=130-cell histogram cumulative window
     "q200_autocorrelation",  # lead windows over the calendar-bounded
     # day-grain aggregate (~2.4k rows at any data scale)
+    "q201_cusum_changepoint",  # prefix-sum window over the same
+    # calendar-bounded day-grain aggregate (q200 precedent); it sits under
+    # a join's left arm, which the audit's tree walk reads since it takes
+    # each node's depth from its name column
     "q202_gini_split",  # prefix-sum + argmin windows over the 50-row
     # value-domain-bounded quantity histogram
     "q237_abc_classification",  # band-offset cumulative over the <=64-row
@@ -137,16 +147,101 @@ GLOBALWINDOW_OK = {
     # qty and <=11-row discount histograms (q202 precedent, per node)
 }
 
+# Entries whose final orderBy still sits right over a Python stage
+# (PYRESAMPLE). Each takes the same one-line fix as the codec entries
+# already on pipeline.common.ordered. They wait for a later change
+# because a rewritten entry voids its driver-green history, and every
+# entry that needs a re-check must fit in the driver's 50-entry window
+# (tests/test_entry_order.py). These 14 have the least bench wall time
+# (p_audio_decode and p_boilerplate_strip, smaller, went first: one is
+# in the llm_pipeline benchmark, the other's test left the slow lane;
+# q141 was already awaiting a re-check).
+# The list only shrinks.
+PYRESAMPLE_OK = {
+    "p_audio_loudness",
+    "p_audio_mulaw",
+    "p_audio_resample",
+    "p_keyframe_extract",
+    "p_lz4_roundtrip",
+    "p_msgpack_roundtrip",
+    "p_multimodal_decode",
+    "p_multimodal_resize",
+    "p_postings_varint",
+    "p_snappy_roundtrip",
+    "p_tfexample_parse",
+    "p_unicode_nfc",
+    "p_video_scene_detect",
+    "q251_binaryfile_ingest",
+}
+
+# Grouped Python stages left on the groupBy's own (AQE-coalesced)
+# shuffle: a shard-keyed spread made both slower in a same-session
+# sf0.1 A/B at local[4] (q136 2.65 -> 3.26 s, p_tfrecord_roundtrip
+# 3.57 -> 4.29 s, medians of 5), with 4 Python tasks where there was 1.
+# The cause is not pinned down; a one-pass (priority, shard) aggregate,
+# so both consumers share one shuffle, did not help q136 (3.73 s).
+PYCOALESCE_OK = {"p_tfrecord_roundtrip", "q136_avro_roundtrip"}
+
+
+def _formatted(df) -> str:
+    spark = df.sparkSession
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
 
 @pytest.mark.parametrize("name", NAMES)
 def test_plan_has_no_scale_antipatterns(spark, name):
     df = registry.QUERIES[name](spark, "/root/testdata/sf0.01")
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    flags = set(audit(name, plan))
+    flags = set(audit(name, _formatted(df)))
     if name in NESTEDLOOP_OK:
         flags.discard("NESTEDLOOP")
     if name in GLOBALWINDOW_OK:
         flags.discard("GLOBALWINDOW")
+    if name in PYRESAMPLE_OK:
+        flags.discard("PYRESAMPLE")
+    if name in PYCOALESCE_OK:
+        flags.discard("PYCOALESCE")
     assert not flags, f"{name}: plan anti-patterns {sorted(flags)}"
+
+
+def _python_frame(spark):
+    """A 4-partition mapInPandas output whose sort key has ties."""
+
+    def scramble(batches):
+        for pdf in batches:
+            yield pdf.assign(v=(pdf["id"] * 7919) % 13)
+
+    return spark.range(0, 200, numPartitions=4).mapInPandas(
+        scramble, "id BIGINT, v BIGINT"
+    )
+
+
+def test_pyresample_flags_orderby_over_python(spark):
+    df = _python_frame(spark)
+    assert "PYRESAMPLE" in audit("synthetic", _formatted(df.orderBy("v", "id")))
+    assert "PYRESAMPLE" not in audit("synthetic", _formatted(ordered(df, "v", "id")))
+
+
+def test_pycoalesce_flags_bare_grouped_python(spark):
+    df = spark.range(0, 64, numPartitions=4).withColumn("k", F.col("id") % 4)
+
+    def per_key(pdf):
+        return pdf
+
+    bare = df.groupBy("k").applyInPandas(per_key, df.schema)
+    keyed = spread(df, "k").groupBy("k").applyInPandas(per_key, df.schema)
+    assert "PYCOALESCE" in audit("synthetic", _formatted(bare))
+    plan = _formatted(keyed)
+    assert "PYCOALESCE" not in audit("synthetic", plan)
+    assert plan.count("Exchange (") == 1  # the groupBy reuses spread's
+
+
+def test_ordered_matches_orderby(spark):
+    df = _python_frame(spark)
+    assert df.rdd.getNumPartitions() > 1
+    expected = df.orderBy("v", "id").collect()
+    assert ordered(df, "v", "id").collect() == expected
+    assert ordered(df, F.desc("v"), "id").collect() == df.orderBy(
+        F.desc("v"), "id"
+    ).collect()

@@ -8,7 +8,13 @@ Red flags hunted:
     ArrowEvalPython / FlatMapGroupsInPandas are acceptable Python
     boundaries);
   * parquet scans without PushedFilters when the query filters on a
-    scanned column (pushdown lost).
+    scanned column (pushdown lost);
+  * PYRESAMPLE — a Python operator in the stage right below a
+    range-partitioning exchange: the exchange's sampling job runs the
+    Python stage a second time (fix: `pipeline.common.ordered`);
+  * PYCOALESCE — a grouped Python operator fed by an
+    ENSURE_REQUIREMENTS exchange, which AQE coalesces into one task
+    (fix: `pipeline.common.spread(df, *keys)` before the groupBy).
 
 NESTEDLOOP is a review flag, not an automatic failure: a
 BroadcastNestedLoopJoin whose build side is a literal handful of rows
@@ -41,7 +47,7 @@ from hive_clone_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
-_TREE_NODE = re.compile(r"^(\s*)(?:[+\-:*\s]*)\s*([A-Za-z][A-Za-z0-9]*) \((\d+)\)\s*$")
+_TREE_NODE = re.compile(r"^(\s*)(?:[+\-:*\s]*)\s*([A-Za-z][^()]*?) +\((\d+)\)\s*$")
 
 # Nodes that pass their input through 1:1 (or shrink it) — walking the
 # direct child chain of a Window through these finds what actually
@@ -78,6 +84,39 @@ def _split_toplevel_lists(s: str) -> list[str]:
     return groups
 
 
+def _parse(plan: str) -> tuple[list[list[tuple[int, str, str]]], dict[str, str]]:
+    """Split a formatted plan into its operator trees and node details.
+
+    Trees: the main '== Physical Plan ==' tree first, then one per
+    'Subquery:' section; each is a list of (depth, node_name, node_id)
+    in print order, where depth is the column of the node name, so a
+    node's subtree is the run of deeper nodes that follows it. Details:
+    node id -> the text of its '(N) NodeName' block."""
+    trees: list[list[tuple[int, str, str]]] = []
+    details: dict[str, str] = {}
+    tree, cur = None, None
+    for ln in plan.splitlines():
+        if ln.startswith("== Physical Plan") or ln.startswith("Subquery:"):
+            tree, cur = [], None
+            trees.append(tree)
+            continue
+        if tree is not None:
+            m = _TREE_NODE.match(ln)
+            if m:
+                tree.append((m.start(2), m.group(2), m.group(3)))
+                continue
+            if not ln.strip():
+                tree = None
+            continue
+        m = re.match(r"^\((\d+)\) [A-Za-z]", ln)
+        if m:
+            cur = m.group(1)
+            details[cur] = ""
+        elif cur is not None:
+            details[cur] += ln + "\n"
+    return trees, details
+
+
 def _unbounded_global_windows(plan: str) -> bool:
     """True iff the plan has a Window with an EMPTY partition spec whose
     input is fed by an Exchange SinglePartition with no limit node on the
@@ -85,29 +124,10 @@ def _unbounded_global_windows(plan: str) -> bool:
     single-partition an unbounded input at scale. A global window whose
     chain shows TakeOrderedAndProject/GlobalLimit first is bounded and
     fine (the p_vocab_build limit-first shape)."""
-    lines = plan.splitlines()
-    # tree section: from '== Physical Plan ==' to the first blank line
-    try:
-        t0 = next(i for i, ln in enumerate(lines) if ln.startswith("== Physical Plan"))
-    except StopIteration:
+    trees, details = _parse(plan)
+    if not trees:
         return False
-    tree = []  # (indent, node_name, node_id)
-    for ln in lines[t0 + 1 :]:
-        if not ln.strip():
-            break
-        m = _TREE_NODE.match(ln)
-        if m:
-            tree.append((len(ln) - len(ln.lstrip()), m.group(2), m.group(3)))
-    # node details: '(N) NodeName' blocks -> their text
-    details: dict[str, str] = {}
-    cur = None
-    for ln in lines:
-        m = re.match(r"^\((\d+)\) [A-Za-z]", ln)
-        if m:
-            cur = m.group(1)
-            details[cur] = ""
-        elif cur is not None:
-            details[cur] += ln + "\n"
+    tree = trees[0]
     for idx, (indent, nm, nid) in enumerate(tree):
         if nm != "Window":
             continue
@@ -135,6 +155,69 @@ def _unbounded_global_windows(plan: str) -> bool:
     return False
 
 
+# Python (Arrow) operators: MapInPandas, FlatMapGroupsInPandas,
+# ArrowEvalPython, MapInArrow, ...
+_PYTHON_NODE = re.compile(r"Pandas|Python|Arrow")
+# Nodes that end a stage below them: a shuffle or broadcast, or a cache
+# whose first materialization the later jobs reuse.
+_STAGE_BOUNDARY = {
+    "Exchange",
+    "BroadcastExchange",
+    "ReusedExchange",
+    "InMemoryTableScan",
+}
+
+
+def _stage_nodes(tree, idx):
+    """The nodes below tree[idx] that run in its stage, in print order,
+    plus the stage-boundary nodes where that stage's inputs come from
+    (whose own subtrees are not entered)."""
+    depth = tree[idx][0]
+    inside, boundaries, cut = [], [], None
+    for node in tree[idx + 1 :]:
+        if node[0] <= depth:
+            break
+        if cut is not None and node[0] > cut:
+            continue
+        cut = None
+        if node[1] in _STAGE_BOUNDARY:
+            boundaries.append(node)
+            cut = node[0]
+        else:
+            inside.append(node)
+    return inside, boundaries
+
+
+def _python_resamples(plan: str) -> bool:
+    """True iff a Python operator runs in the stage right below a
+    range-partitioning exchange (an `orderBy` over `mapInPandas`).
+    `RangePartitioner` first runs a sampling job over the exchange's
+    child, so that stage, Python workers included, runs twice."""
+    trees, details = _parse(plan)
+    for tree in trees:
+        for idx, (_, nm, nid) in enumerate(tree):
+            if nm == "Exchange" and "rangepartitioning(" in details.get(nid, ""):
+                inside, _ = _stage_nodes(tree, idx)
+                if any(_PYTHON_NODE.search(n[1]) for n in inside):
+                    return True
+    return False
+
+
+def _python_coalesced(plan: str) -> bool:
+    """True iff a grouped Python operator is fed by an ENSURE_REQUIREMENTS
+    exchange: AQE coalesces that shuffle's small partitions, so every
+    group runs one after another in a single task. An explicit-count
+    `repartition(n, *keys)` (`pipeline.common.spread`) is exempt."""
+    trees, details = _parse(plan)
+    for tree in trees:
+        for idx, (_, nm, _) in enumerate(tree):
+            if nm in ("FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"):
+                _, feeds = _stage_nodes(tree, idx)
+                if any("ENSURE_REQUIREMENTS" in details.get(n[2], "") for n in feeds):
+                    return True
+    return False
+
+
 def audit(name: str, plan: str) -> list[str]:
     flags = []
     if "CartesianProduct" in plan:
@@ -152,6 +235,12 @@ def audit(name: str, plan: str) -> list[str]:
         # round-5 defect. Fix shape: orderBy().limit(k) first
         # (TakeOrderedAndProject), THEN rank over the k survivors.
         flags.append("GLOBALWINDOW")
+    if _python_resamples(plan):
+        # fix shape: pipeline.common.ordered, a single-partition sort
+        flags.append("PYRESAMPLE")
+    if _python_coalesced(plan):
+        # fix shape: pipeline.common.spread(df, *keys) before the groupBy
+        flags.append("PYCOALESCE")
     if name == "q37_salted_join":
         # the manual salt must survive into the physical join keys —
         # if an optimizer change or refactor drops it, the hot key
