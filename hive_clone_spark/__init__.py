@@ -6,7 +6,8 @@ Spark DataFrame/SQL engine, plus the driver-mandated relational,
 streaming, and LLM-data-pipeline operator surface.
 
 Layout:
-  session.py    SparkSession factory (AQE, Arrow, UTC, tuned shuffle)
+  session.py    SparkSession factory (AQE, Arrow, UTC, tuned shuffle,
+                checkpoint manager) and `local_rows` driver-row frames
   catalog.py    table loading/registration for the TESTDATA parquet dirs
   registry.py   query + oracle registration (drives __spark_entry__.py)
   operators/    generic relational operator surface (SURVEY.md §2b)

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_clone_spark.session import local_rows
+
 PIECES_SCHEMA = (
     "piece_id INT, bug STRING, color STRING, on_board BOOLEAN, "
     "q INT, r INT, height INT"
@@ -129,7 +131,7 @@ def pieces_df(spark: SparkSession, fixture: str) -> DataFrame:
     rows = [
         (pid, bug, color, True, q, r, h) for pid, bug, color, q, r, h in FIXTURES[fixture]
     ]
-    return spark.createDataFrame(rows, PIECES_SCHEMA)
+    return local_rows(spark, rows, PIECES_SCHEMA)
 
 
 def pieces_values_cte(fixture: str) -> str:
@@ -164,4 +166,4 @@ DIRECTIONS_CTE = (
 
 
 def directions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DIRECTIONS, "dir_idx INT, dq INT, dr INT")
+    return local_rows(spark, DIRECTIONS, "dir_idx INT, dq INT, dr INT")

@@ -28,6 +28,7 @@ from hive_clone_spark.hive_game.placement import (
     reserves,
 )
 from hive_clone_spark.hive_game.state import add_piece, move_piece
+from hive_clone_spark.session import local_rows
 
 # script actions:
 #   ("place", piece_id, bug, color, q, r)
@@ -55,7 +56,7 @@ def play_game(
     per-ply verdicts). Raises IllegalPly on any rule violation —
     including a ply played after the game already ended.
     """
-    board = spark.createDataFrame([], PIECES_SCHEMA)
+    board = local_rows(spark, [], PIECES_SCHEMA)
     turn = "White"
     verdicts: list[str] = []
     verdict = "None"

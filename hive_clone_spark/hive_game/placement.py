@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from hive_clone_spark.hive_game.board import occupancy, tops
 from hive_clone_spark.hive_game.fixtures import directions_df
+from hive_clone_spark.session import local_rows
 
 # Base-game reserve seed: 1Q/2S/2B/3G/3A per color (ui_app.cpp:500,
 # README.md:25).
@@ -16,7 +17,8 @@ RESERVE_SEED = [("Queen", 1), ("Spider", 2), ("Beetle", 2), ("Grasshopper", 3), 
 def reserves(spark: SparkSession, pieces: DataFrame) -> DataFrame:
     """(color, bug, remaining): seed minus already-placed counts
     (P1, ui_app.cpp:498-510)."""
-    seed = spark.createDataFrame(
+    seed = local_rows(
+        spark,
         [(c, b, n) for c in ("White", "Black") for b, n in RESERVE_SEED],
         "color STRING, bug STRING, seeded INT",
     )
@@ -63,7 +65,7 @@ def placement_targets(spark: SparkSession, pieces: DataFrame, color: str) -> Dat
     top = tops(pieces)
 
     if occ.isEmpty():  # empty board special case (literal 1-row DF)
-        return spark.createDataFrame([(0, 0)], "to_q INT, to_r INT")
+        return local_rows(spark, [(0, 0)], "to_q INT, to_r INT")
 
     cands = (
         occ.join(dirs)

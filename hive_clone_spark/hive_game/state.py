@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_clone_spark.hive_game.fixtures import PIECES_SCHEMA
+from hive_clone_spark.session import local_rows
 
 
 def _renumber(pieces: DataFrame) -> DataFrame:
@@ -47,7 +48,8 @@ def add_piece(
     heights (2h) and slots the insert at 2h-1 — strictly between the
     incumbent below and the one displaced up."""
     ins_key = 2 * 10**6 if height is None or height < 0 else 2 * height - 1
-    new_row = spark.createDataFrame(
+    new_row = local_rows(
+        spark,
         [(piece_id, bug, color, True, q, r, ins_key)],
         PIECES_SCHEMA,
     )

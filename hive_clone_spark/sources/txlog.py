@@ -54,7 +54,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.pipeline.common import spread
 from hive_clone_spark.registry import register
+from hive_clone_spark.session import local_rows
 
 _CHECKPOINT_EVERY = 8
 
@@ -342,7 +344,7 @@ class TxLog:
         schema = self.table_schema(spark, version)
         if schema is None:
             raise ValueError("txlog: empty table with no recorded schema")
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
 
     def alter_add_column(self, spark: SparkSession, name: str, ddl_type: str) -> int:
         """Metadata-only schema evolution (Delta/Iceberg ADD COLUMN):
@@ -526,10 +528,14 @@ class TxLog:
         stats_values: "range | list[int] | None" = None,
     ) -> list[dict]:
         """Stage one parquet file PER distinct value of
-        ``partition_col`` (repartition-by-value + partitionBy write:
-        each value lives in exactly one task, so each value dir gets
-        exactly one file) and attach per-file column stats to the add
-        actions — the data-skipping index every table format keeps.
+        ``partition_col`` (hash repartition on the value + partitionBy
+        write: each value lives in exactly one task, so each value dir
+        gets exactly one file) and attach per-file column stats to the
+        add actions — the data-skipping index every table format keeps.
+        The repartition is ``pipeline.common.spread``'s explicit
+        core-count one: AQE coalesces a bare ``repartition(col)`` of a
+        small frame into ONE partition, and q148's 16 bucket files were
+        then written one after another by a single 485 ms task at sf0.1.
         ``stats_by_value`` maps partition value -> {col: [min, max]}.
 
         ``stats_col`` harvests those per-file [min, max] stats straight
@@ -553,7 +559,7 @@ class TxLog:
         self._staged_schema = json.loads(df.drop(partition_col).schema.json())
         stage = self.root / f"_stage-{uuid.uuid4().hex}"
         (
-            df.repartition(partition_col)
+            spread(df, partition_col)
             .write.mode("overwrite")
             .partitionBy(partition_col)
             .parquet(str(stage))
@@ -756,10 +762,15 @@ class TxLog:
         production reader consumes roaring-bitmap DVs. ``__file`` is
         the DATA file's basename (what ``_apply_dvs`` matches on); the
         sidecar-to-data-file binding is METADATA (O(files touched), a
-        commit-log fact), so the tiny local binding relation is the
-        only driver-side piece. FAILFAST: a corrupt sidecar must fail
-        the read, never parse as null positions and un-delete rows."""
-        binding = spark.createDataFrame(
+        commit-log fact), so the tiny binding relation is the only
+        driver-side piece. It is a ``LocalRelation`` (``local_rows``):
+        the broadcast reads it in the JVM with no Python stage, where a
+        ``createDataFrame(list)`` binding ran a 4-task Python-worker
+        stage on every action, 0.5–0.7 s per collect of q148 at sf0.1.
+        FAILFAST: a corrupt sidecar must fail the read, never parse as
+        null positions and un-delete rows."""
+        binding = local_rows(
+            spark,
             [
                 (pathlib.Path(dv).name, pathlib.Path(f).name)
                 for f, dv in dvs.items()
@@ -1077,7 +1088,7 @@ class TxLog:
 
         files, _, dvs, schema = self.branch_replay(name)
         if not files and schema is not None:
-            return spark.createDataFrame([], StructType.fromJson(schema))
+            return local_rows(spark, [], StructType.fromJson(schema))
         return self._read_files(spark, sorted(files), dvs)
 
     def publish_branch(
@@ -4312,12 +4323,13 @@ _Q232_BUCKETS = 4
 
 def _stage_sorted_buckets(tl: TxLog, df: DataFrame, bucket_col: str, order_col: str) -> list[tuple[int, str, int]]:
     """One sorted parquet file per bucket value; returns
-    (bucket, relpath, n_rows) in bucket order."""
+    (bucket, relpath, n_rows) in bucket order. Staged on every core,
+    as in ``TxLog.stage_data_partitioned``."""
     import pyarrow.parquet as pq
 
     stage = tl.root / f"_stage-{uuid.uuid4().hex}"
     (
-        df.repartition(F.col(bucket_col))
+        spread(df, bucket_col)
         .sortWithinPartitions(bucket_col, order_col)
         .write.mode("overwrite")
         .partitionBy(bucket_col)

@@ -18,12 +18,16 @@ Scale notes (100 TB / day feeds):
   * `availableNow` trigger gives exactly-once batch-boundary semantics
     for backfills over file listings (the test path here).
 
-Every availableNow drain in the engine goes through one of two runners:
-  * `run_to_memory` drains into an in-memory table and pins the state
-    partition count (`STATE_PARTITIONS`) for the drain, restoring the
-    session value afterwards;
-  * `run_foreach` drains through a foreachBatch sink and changes no
-    conf, because those sinks shuffle inside each batch and a pin would
+Every availableNow drain in the engine goes through one of two runners.
+Both take the checkpoint file manager from the session:
+`session.get_spark` sets `FileSystemBasedCheckpointFileManager` (plain
+create + rename for offsets, commits and state deltas), read once when
+a query starts. Beyond that:
+  * `run_to_memory` drains into an in-memory table and pins
+    `spark.sql.shuffle.partitions` to `STATE_PARTITIONS` for the drain,
+    restoring the session value afterwards;
+  * `run_foreach` drains through a foreachBatch sink and sets no conf,
+    because those sinks shuffle inside each batch and a pin would
     change their plans.
 """
 

@@ -243,3 +243,57 @@ def test_stream_drains_live_only_in_streams_module():
             pins.append(rel)
     assert drains == [], f"writeStream outside streams.py: {drains}"
     assert pins == [], f"shuffle.partitions set outside streams.py: {pins}"
+
+
+def test_session_sets_filesystem_checkpoint_manager(spark):
+    from hive_clone_spark.session import CHECKPOINT_FILE_MANAGER
+
+    assert CHECKPOINT_FILE_MANAGER.endswith(".FileSystemBasedCheckpointFileManager")
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+
+
+def test_foreach_restart_delivers_only_new_file(
+    spark, events_time_split_dir, tmp_path
+):
+    """A foreachBatch drain restarted on the same checkpoint after one
+    new source file lands delivers exactly that file as one new batch,
+    and the checkpoint's offsets/ and commits/ logs hold only finished
+    batch files: the manager's temp-file-then-rename left nothing
+    behind."""
+    import os
+    import shutil
+
+    src = tmp_path / "src"
+    src.mkdir()
+    files = sorted(os.listdir(events_time_split_dir))
+    ckpt = str(tmp_path / "ckpt")
+    seen: list[tuple[int, int]] = []
+
+    def sink(batch_df, batch_id):
+        seen.append((batch_id, batch_df.count()))
+
+    def drain():
+        streams.run_foreach(streams.read_events_stream(spark, str(src)), sink, ckpt)
+
+    def n_rows(name):
+        path = os.path.join(events_time_split_dir, name)
+        return spark.read.schema(streams.EVENTS_SCHEMA).parquet(path).count()
+
+    shutil.copy(os.path.join(events_time_split_dir, files[0]), src / files[0])
+    drain()
+    assert seen == [(0, n_rows(files[0]))]
+
+    shutil.copy(os.path.join(events_time_split_dir, files[1]), src / files[1])
+    drain()
+    assert seen == [(0, n_rows(files[0])), (1, n_rows(files[1]))]
+
+    for log in ("offsets", "commits"):
+        names = sorted(os.listdir(os.path.join(ckpt, log)))
+        finished = [n for n in names if n.isdigit()]
+        assert finished == ["0", "1"], (log, names)
+        # the rest may only be the local filesystem's ".<batch>.crc"
+        # checksums of those files, never a ".tmp" from a write
+        assert sorted(set(names) - set(finished)) == [
+            f".{n}.crc" for n in finished
+        ], (log, names)

@@ -14,7 +14,13 @@ Red flags hunted:
     Python stage a second time (fix: `pipeline.common.ordered`);
   * PYCOALESCE — a grouped Python operator fed by an
     ENSURE_REQUIREMENTS exchange, which AQE coalesces into one task
-    (fix: `pipeline.common.spread(df, *keys)` before the groupBy).
+    (fix: `pipeline.common.spread(df, *keys)` before the groupBy);
+  * PYROWS — a `Scan ExistingRDD` over `applySchemaToPythonRDD`: driver
+    rows from `createDataFrame(list)`, which every action that reads
+    them re-serialises through a Python-worker stage (fix:
+    `session.local_rows`, a LocalTableScan). A `localCheckpoint` is an
+    ExistingRDD scan too, but of rows already in the JVM, so it is not
+    flagged.
 
 NESTEDLOOP is a review flag, not an automatic failure: a
 BroadcastNestedLoopJoin whose build side is a literal handful of rows
@@ -218,6 +224,17 @@ def _python_coalesced(plan: str) -> bool:
     return False
 
 
+def _python_rows(plan: str) -> bool:
+    """True iff the plan scans driver rows that PySpark ships through
+    Python workers: an ExistingRDD scan built by applySchemaToPythonRDD."""
+    trees, details = _parse(plan)
+    return any(
+        nm == "Scan ExistingRDD" and "applySchemaToPythonRDD" in details.get(nid, "")
+        for tree in trees
+        for _, nm, nid in tree
+    )
+
+
 def audit(name: str, plan: str) -> list[str]:
     flags = []
     if "CartesianProduct" in plan:
@@ -241,6 +258,9 @@ def audit(name: str, plan: str) -> list[str]:
     if _python_coalesced(plan):
         # fix shape: pipeline.common.spread(df, *keys) before the groupBy
         flags.append("PYCOALESCE")
+    if _python_rows(plan):
+        # fix shape: session.local_rows, a LocalTableScan
+        flags.append("PYROWS")
     if name == "q37_salted_join":
         # the manual salt must survive into the physical join keys —
         # if an optimizer change or refactor drops it, the hot key
