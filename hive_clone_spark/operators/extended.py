@@ -17,12 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.operators.relational import _dec
 from hive_clone_spark.pipeline.common import spread, sql_portable_hash
 from hive_clone_spark.registry import register
-
-
-def _dec(col: str):
-    return F.col(col).cast("decimal(18,2)")
 
 
 # ---------------------------------------------------------------------------

@@ -28,11 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.operators.relational import _dec
 from hive_clone_spark.registry import register
-
-
-def _dec(col: str, scale: int = 2) -> F.Column:
-    return F.col(col).cast(f"decimal(18,{scale})")
 
 
 def _rate(col: str) -> F.Column:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.operators.relational import _dec
 from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 from hive_clone_spark.sources.io import write_bucketed, write_zordered
@@ -53,10 +54,6 @@ def _warehouse(sf_dir: str, name: str) -> str:
     if dest.exists():
         shutil.rmtree(dest)
     return str(dest)
-
-
-def _dec(col: str, scale: int = 2) -> F.Column:
-    return F.col(col).cast(f"decimal(18,{scale})")
 
 
 # ---------------------------------------------------------------------------

@@ -49,16 +49,21 @@ import os
 import pathlib
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_clone_spark.catalog import table
+from hive_clone_spark.operators.relational import _dec
 from hive_clone_spark.pipeline.common import spread
 from hive_clone_spark.registry import register
 from hive_clone_spark.session import local_rows
 
 _CHECKPOINT_EVERY = 8
+# a fold's fields, in the order _replay returns them; the names are the
+# checkpoint file's keys
+_FOLD_KEYS = ("active", "stats", "dvs", "constraints", "schema", "meta")
 
 
 def _publish(path: pathlib.Path, payload: dict) -> None:
@@ -170,12 +175,18 @@ class TxLog:
         self.dv_dir.mkdir(parents=True, exist_ok=True)
         return self
 
-    def versions(self) -> list[int]:
+    @staticmethod
+    def _chain_versions(chain: pathlib.Path) -> list[int]:
+        """Committed versions of one commit chain: main's ``_txlog/``
+        or a branch's ``commits/`` directory."""
         return sorted(
             int(p.name[:8])
-            for p in self.log_dir.glob("*.json")
+            for p in chain.glob("*.json")
             if not p.name.endswith(".checkpoint.json")
         )
+
+    def versions(self) -> list[int]:
+        return self._chain_versions(self.log_dir)
 
     def latest_version(self) -> int:
         vs = self.versions()
@@ -207,35 +218,30 @@ class TxLog:
         (table_meta delegates here), so a snapshot read parses the
         checkpoint JSON exactly once.
 
-        A ``dv`` action REBINDS a data file to a new deletion-vector
-        sidecar (the writer merged old + new positions before writing
-        it — Delta's DV protocol does the same superset-replace);
-        removing a data file drops its DV binding. A ``schema`` action
-        (Delta's metaData, Iceberg's per-snapshot schema-id) REPLACES
-        the table's logical schema — versioned per commit, so time
-        travel to an empty snapshot resolves the schema AS OF that
-        version, never a later writer's."""
+        Each commit folds by ``_apply``'s rules. A ``dv`` action's
+        sidecar already holds the merged old + new positions (Delta's
+        DV protocol does the same superset-replace). A ``schema``
+        action (Delta's metaData, Iceberg's per-snapshot schema-id) is
+        versioned per commit, so time travel to an empty snapshot
+        resolves the schema AS OF that version, never a later
+        writer's."""
         if version in self._replay_cache:
             # deep copies: callers treat the fold, down to each file's
             # stats dict and the schema, as their own
             return copy.deepcopy(self._replay_cache[version])
-        start, active, stats, dvs, cons, schema, meta = (
-            0, [], {}, {}, {}, None, {},
-        )
+        state, start = {
+            "active": set(), "stats": {}, "dvs": {},
+            "constraints": {}, "schema": None, "meta": {},
+        }, 0
         for v in range(version, -1, -1):
             ckpt = self.log_dir / f"{v:08d}.checkpoint.json"
             if ckpt.exists():
                 with open(ckpt) as f:
                     d = json.load(f)
-                active = list(d["active"])
-                stats = dict(d.get("stats", {}))
-                dvs = dict(d.get("dvs", {}))
-                cons = dict(d.get("constraints", {}))
-                schema = d.get("schema")
-                meta = dict(d.get("meta", {}))
+                state.update((k, d[k]) for k in _FOLD_KEYS if k in d)
+                state["active"] = set(state["active"])
                 start = v + 1
                 break
-        files = set(active)
         for v in range(start, version + 1):
             try:
                 c = self._read_commit(v)
@@ -247,31 +253,37 @@ class TxLog:
                 raise ValueError(
                     f"txlog: no commit {v} (vacuumed or never written)"
                 ) from None
-            for a in c.get("add", []):
-                files.add(a["file"])
-                if "stats" in a:
-                    stats[a["file"]] = a["stats"]
-            for r in c.get("remove", []):
-                files.discard(r)
-                stats.pop(r, None)
-                dvs.pop(r, None)
-            for d in c.get("dv", []):
-                # dv: None UNBINDS (Delta's null deletionVector on a
-                # re-add) — restore() uses it to re-expose rows a
-                # post-target MoR delete had hidden
-                if d["dv"] is None:
-                    dvs.pop(d["file"], None)
-                else:
-                    dvs[d["file"]] = d["dv"]
-            if "constraints" in c:
-                cons = dict(c["constraints"])
-            if "schema" in c:
-                schema = c["schema"]
-            if "meta" in c:
-                meta = dict(c["meta"])
-        fold = (files, stats, dvs, cons, schema, meta)
+            self._apply(state, c)
+        fold = tuple(state[k] for k in _FOLD_KEYS)
         self._replay_cache[version] = copy.deepcopy(fold)
         return fold
+
+    @staticmethod
+    def _apply(state: dict, c: dict) -> None:
+        """Fold one commit's actions into ``state``: the action rules
+        main replay and branch replay share. ``add`` activates a file
+        (and records its stats); ``remove`` drops the file, its stats
+        and its DV binding; ``dv`` rebinds a file to a new sidecar, and
+        ``dv: None`` UNBINDS it (Delta's null deletionVector on a
+        re-add — restore() uses it to re-expose rows a post-target MoR
+        delete had hidden). ``constraints``, ``schema`` and ``meta``
+        replace the previous value whole."""
+        for a in c.get("add", []):
+            state["active"].add(a["file"])
+            if "stats" in a:
+                state["stats"][a["file"]] = a["stats"]
+        for r in c.get("remove", []):
+            state["active"].discard(r)
+            state["stats"].pop(r, None)
+            state["dvs"].pop(r, None)
+        for d in c.get("dv", []):
+            if d["dv"] is None:
+                state["dvs"].pop(d["file"], None)
+            else:
+                state["dvs"][d["file"]] = d["dv"]
+        for k in ("constraints", "schema", "meta"):
+            if k in c:
+                state[k] = c[k]
 
     def active_files(self, version: int | None = None) -> list[str]:
         """Fold add/remove actions up to ``version`` (default latest),
@@ -354,8 +366,8 @@ class TxLog:
         at 100 TB this is the difference between a millisecond commit
         and rewriting the table.
 
-        Read-modify-write on the schema, so it uses the same optimistic
-        expected_version + retry loop as every other RMW path: without
+        Read-modify-write on the schema, so it runs through
+        ``transact`` like every other RMW path: without
         the token, a schema-publishing commit landing between the read
         and this commit (another ALTER, a MERGE rewrite) would be
         silently clobbered — its column lost from the published schema.
@@ -364,8 +376,8 @@ class TxLog:
 
         # resolve the DDL type string through the engine's own parser
         dtype = spark.sql(f"SELECT CAST(NULL AS {ddl_type})").schema[0].dataType
-        while True:
-            expected = self.latest_version()
+
+        def attempt(expected: int) -> int:
             schema = self.table_schema(spark, expected if expected >= 0 else None)
             if schema is None:
                 raise ValueError("txlog: ALTER on a table with no schema")
@@ -383,15 +395,14 @@ class TxLog:
                 mapping = dict(meta["mapping"])
                 mapping[name] = f"c-{uuid.uuid4().hex[:12]}"
                 kwargs["meta"] = {**meta, "mapping": mapping}
-            try:
-                return self.commit(
-                    "alter-add-column",
-                    expected_version=expected,
-                    schema=json.loads(new.json()),
-                    **kwargs,
-                )
-            except CommitConflictError:
-                continue
+            return self.commit(
+                "alter-add-column",
+                expected_version=expected,
+                schema=json.loads(new.json()),
+                **kwargs,
+            )
+
+        return self.transact(attempt)
 
     def alter_rename_column(
         self, spark: SparkSession, old: str, new: str
@@ -409,8 +420,7 @@ class TxLog:
         to physical names via ``to_physical`` before staging."""
         from pyspark.sql.types import StructField, StructType
 
-        while True:
-            expected = self.latest_version()
+        def attempt(expected: int) -> int:
             schema = self.table_schema(spark, expected if expected >= 0 else None)
             if schema is None:
                 raise ValueError("txlog: ALTER on a table with no schema")
@@ -435,15 +445,14 @@ class TxLog:
                     for f in schema.fields
                 ]
             )
-            try:
-                return self.commit(
-                    "alter-rename-column",
-                    expected_version=expected,
-                    schema=json.loads(renamed.json()),
-                    meta={**meta, "mapping": mapping},
-                )
-            except CommitConflictError:
-                continue
+            return self.commit(
+                "alter-rename-column",
+                expected_version=expected,
+                schema=json.loads(renamed.json()),
+                meta={**meta, "mapping": mapping},
+            )
+
+        return self.transact(attempt)
 
     def alter_drop_column(self, spark: SparkSession, name: str) -> int:
         """Metadata-only DROP COLUMN: shrink the logical schema and
@@ -454,8 +463,7 @@ class TxLog:
         name and can never resurrect the dropped column's data."""
         from pyspark.sql.types import StructType
 
-        while True:
-            expected = self.latest_version()
+        def attempt(expected: int) -> int:
             schema = self.table_schema(spark, expected if expected >= 0 else None)
             if schema is None:
                 raise ValueError("txlog: ALTER on a table with no schema")
@@ -470,15 +478,14 @@ class TxLog:
             )
             mapping.pop(name, None)
             shrunk = StructType([f for f in schema.fields if f.name != name])
-            try:
-                return self.commit(
-                    "alter-drop-column",
-                    expected_version=expected,
-                    schema=json.loads(shrunk.json()),
-                    meta={**meta, "mapping": mapping},
-                )
-            except CommitConflictError:
-                continue
+            return self.commit(
+                "alter-drop-column",
+                expected_version=expected,
+                schema=json.loads(shrunk.json()),
+                meta={**meta, "mapping": mapping},
+            )
+
+        return self.transact(attempt)
 
     def to_physical(
         self, df: DataFrame, version: int | None = None
@@ -490,7 +497,13 @@ class TxLog:
         appending to a mapped table must pass the LOGICAL schema to
         commit() explicitly (or schema=None when unchanged) so the
         physical names never leak into the schema action."""
-        mapping = self.table_meta(version).get("mapping")
+        return self._rename(df, self.table_meta(version).get("mapping") or {})
+
+    @staticmethod
+    def _rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
+        """Rename ``df``'s columns by ``mapping`` (a column it does not
+        name keeps its name): the one logical<->physical frame rename.
+        ``df`` itself when the mapping is empty."""
         if not mapping:
             return df
         return df.select(
@@ -621,8 +634,8 @@ class TxLog:
         ``expected_version`` is the optimistic-concurrency token: the
         version the writer READ before preparing its change. If someone
         else committed since (latest != expected), or two writers race
-        for the same slot (the link loses), CommitConflictError — the
-        caller re-reads, revalidates, and retries. ``txn`` stamps the
+        for the same slot (the link loses), CommitConflictError —
+        ``transact`` re-reads, revalidates, and retries. ``txn`` stamps the
         commit with an application transaction id (see
         commit_idempotent). ``schema`` (default: the schema stashed by
         this writer's latest stage_data*) publishes the table's logical
@@ -633,18 +646,7 @@ class TxLog:
         commit does not change the table's logical schema (the
         publish-branch / insert-only-MERGE contract); only the omitted
         default reaches for the stash."""
-        latest = self.latest_version()
-        if expected_version is not None and latest != expected_version:
-            raise CommitConflictError(
-                f"txlog: expected version {expected_version}, found {latest}"
-            )
-        version = latest + 1
-        payload = {
-            "version": version,
-            "op": op,
-            "add": add or [],
-            "remove": remove or [],
-        }
+        payload = {"op": op, "add": add or [], "remove": remove or []}
         if schema is _SCHEMA_UNSET:
             schema = self._staged_schema
         if schema is not None:
@@ -657,40 +659,72 @@ class TxLog:
             payload["meta"] = meta
         if txn is not None:
             payload["txn"] = txn
-        try:
-            _publish(self.log_dir / self._commit_name(version), payload)
-        except FileExistsError:
-            raise CommitConflictError(
-                f"txlog: version {version} was committed concurrently"
-            ) from None
-        self._staged_schema = None
+        version = self._write_commit(self.log_dir, expected_version, payload)
         if version % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
             self._write_checkpoint(version)
         return version
 
-    def _write_checkpoint(self, version: int) -> None:
-        # fold BEFORE publishing, and publish via rename: a reader
-        # (or this fold itself) must never observe a half-written
-        # checkpoint — only the commit log is load-bearing, the
-        # checkpoint is a cache and appears atomically or not at all.
-        # Per-file stats are folded in too, so scan_files never needs
-        # commits below the checkpoint floor (they may be vacuumed).
-        files, stats, dvs, cons, schema, meta = self._replay(version)
-        tmp = self.log_dir / f".{version:08d}.checkpoint.tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "active": sorted(files),
-                    "stats": stats,
-                    "dvs": dvs,
-                    "constraints": cons,
-                    "schema": schema,
-                    "meta": meta,
-                },
-                f,
+    def _write_commit(
+        self, chain: pathlib.Path, expected_version: int | None, payload: dict
+    ) -> int:
+        """Publish ``payload`` as the next version of one commit chain
+        (main's ``_txlog/`` or a branch's ``commits/``): the one commit
+        writer. A stale ``expected_version`` token, or a racing writer
+        that links the same slot first, raises CommitConflictError; a
+        won commit clears this writer's staged-schema stash."""
+        vs = self._chain_versions(chain)
+        latest = vs[-1] if vs else -1
+        if expected_version is not None and latest != expected_version:
+            raise CommitConflictError(
+                f"txlog {chain}: expected version {expected_version}, "
+                f"found {latest}"
             )
-        os.replace(tmp, self.log_dir / f"{version:08d}.checkpoint.json")
+        version = latest + 1
+        try:
+            _publish(
+                chain / self._commit_name(version),
+                {"version": version, **payload},
+            )
+        except FileExistsError:
+            raise CommitConflictError(
+                f"txlog {chain}: version {version} was committed concurrently"
+            ) from None
+        self._staged_schema = None
+        return version
+
+    def transact(self, attempt: Callable[[int], int]) -> int:
+        """The optimistic-concurrency retry driver every read-modify-
+        write path runs through: call ``attempt(expected)`` with the
+        latest version, and on CommitConflictError (another writer
+        committed since ``expected``) re-read the log and call it
+        again. ``attempt`` reads AT ``expected``, prepares its change
+        and commits with ``expected_version=expected``, returning the
+        version it committed (or ``expected`` when it has nothing to
+        commit); data a losing attempt staged stays unreferenced, for
+        vacuum."""
+        while True:
+            try:
+                return attempt(self.latest_version())
+            except CommitConflictError:
+                continue
+
+    def _write_checkpoint(self, version: int) -> None:
+        # fold BEFORE publishing, and publish like a commit (_publish:
+        # fsync'd, then linked whole): vacuum() deletes the commits
+        # below a checkpoint, so after a crash it may be the only copy
+        # of the fold. Per-file stats are folded in too, so scan_files
+        # never needs commits below the checkpoint floor. A checkpoint
+        # is a pure function of its version, so one already in place
+        # (FileExistsError) is this one.
+        state = dict(zip(_FOLD_KEYS, self._replay(version)))
+        state["active"] = sorted(state["active"])
+        try:
+            _publish(
+                self.log_dir / f"{version:08d}.checkpoint.json",
+                {"version": version, **state},
+            )
+        except FileExistsError:
+            pass
 
     def table_meta(self, version: int | None = None) -> dict:
         """Table-level metadata (column mapping, identity high-water
@@ -827,12 +861,12 @@ class TxLog:
         is fully distributed and split-safe. When ``stats_col``/lo/hi
         are given, skipping stats bound the scan to candidate files —
         metadata-only pruning before any data read. Commits use the
-        optimistic-concurrency retry loop; a new DV for a file REPLACES
+        ``transact`` retry driver; a new DV for a file REPLACES
         the old one after merging positions (superset-replace, like
         Delta's DV protocol), so concurrent deletes serialize cleanly.
         """
-        while True:
-            expected = self.latest_version()
+
+        def attempt(expected: int) -> int:
             if stats_col is not None:
                 _all, cand = self.scan_files(
                     stats_col, lo, hi, version=expected
@@ -847,14 +881,8 @@ class TxLog:
             # and a binding keyed any other way would be invisible to
             # dvs()'s active-file filter
             base_map = {pathlib.Path(f).name: f for f in cand}
-            src = spark.read.parquet(
-                *[str(self.root / f) for f in cand]
-            ).select(
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("__file"),
-                F.col("_metadata.row_index").alias("__pos"),
-                "*",
+            src = self._with_row_ids(
+                spark.read.parquet(*[str(self.root / f) for f in cand])
             )
             hits = (
                 src.where(predicate)
@@ -876,12 +904,9 @@ class TxLog:
                         "n_deleted": len(merged),
                     }
                 )
-            try:
-                return self.commit(
-                    op, dv=actions, expected_version=expected
-                )
-            except CommitConflictError:
-                continue  # orphaned DV sidecars await vacuum
+            return self.commit(op, dv=actions, expected_version=expected)
+
+        return self.transact(attempt)
 
     # -- CHECK constraints (commit-time enforcement) ------------------
     def constraints(self, version: int | None = None) -> dict[str, str]:
@@ -940,14 +965,9 @@ class TxLog:
             # constraints speak LOGICAL names; staged files on a
             # column-mapped table carry physical ones
             mapping = self.table_meta().get("mapping") or {}
-            inv = {v: k for k, v in mapping.items() if v != k}
-            if inv:
-                staged = staged.select(
-                    *[
-                        F.col(c).alias(inv.get(c, c))
-                        for c in staged.columns
-                    ]
-                )
+            staged = self._rename(
+                staged, {v: k for k, v in mapping.items() if v != k}
+            )
             counts = staged.agg(
                 *[
                     F.sum(
@@ -988,60 +1008,30 @@ class TxLog:
             from_version = self.latest_version()
         d = self._branch_dir(name)
         (d / "commits").mkdir(parents=True, exist_ok=False)
-        with open(d / "ref.json", "w") as f:
-            json.dump({"base": from_version}, f)
+        _publish(d / "ref.json", {"base": from_version})
 
     def branch_base(self, name: str) -> int:
         with open(self._branch_dir(name) / "ref.json") as f:
             return int(json.load(f)["base"])
 
     def branch_versions(self, name: str) -> list[int]:
-        return sorted(
-            int(p.name[:8])
-            for p in (self._branch_dir(name) / "commits").glob("*.json")
-        )
+        return self._chain_versions(self._branch_dir(name) / "commits")
 
     def branch_replay(
         self, name: str, bversion: int | None = None
     ) -> tuple[set[str], dict[str, dict], dict[str, str], dict | None]:
         """Branch snapshot = main fold at the base version, then the
         branch's own commits applied with the same action rules."""
-        base = self.branch_base(name)
-        files, stats, dvs, _, schema, _ = (
-            self._replay(base)
-            if base >= 0
-            else (set(), {}, {}, {}, None, {})
-        )
-        if bversion is None:
-            # a freshly created branch has NO commits yet: its snapshot
-            # is exactly the base fold (upto -1 skips the replay loop)
-            vs = self.branch_versions(name)
-            upto = vs[-1] if vs else -1
-        else:
-            upto = bversion
-        for v in self.branch_versions(name):
-            if v > upto:
+        # a branch cut from an empty table (base -1) starts from the
+        # empty fold, which is what _replay(-1) returns
+        state = dict(zip(_FOLD_KEYS, self._replay(self.branch_base(name))))
+        chain = self._branch_dir(name) / "commits"
+        for v in self._chain_versions(chain):
+            if bversion is not None and v > bversion:
                 break
-            with open(
-                self._branch_dir(name) / "commits" / self._commit_name(v)
-            ) as f:
-                c = json.load(f)
-            for a in c.get("add", []):
-                files.add(a["file"])
-                if "stats" in a:
-                    stats[a["file"]] = a["stats"]
-            for r in c.get("remove", []):
-                files.discard(r)
-                stats.pop(r, None)
-                dvs.pop(r, None)
-            for d in c.get("dv", []):
-                if d["dv"] is None:  # unbind (see _replay)
-                    dvs.pop(d["file"], None)
-                else:
-                    dvs[d["file"]] = d["dv"]
-            if "schema" in c:
-                schema = c["schema"]
-        return files, stats, dvs, schema
+            with open(chain / self._commit_name(v)) as f:
+                self._apply(state, json.load(f))
+        return state["active"], state["stats"], state["dvs"], state["schema"]
 
     def branch_commit(
         self,
@@ -1055,33 +1045,14 @@ class TxLog:
         the branch's chain — concurrent branch writers race on the
         branch slot, never on main's. A staged schema publishes into
         the BRANCH chain only: main's logical schema is untouched until
-        publish_branch carries it over."""
-        vs = self.branch_versions(name)
-        latest = vs[-1] if vs else -1
-        if expected_version is not None and latest != expected_version:
-            raise CommitConflictError(
-                f"txlog branch {name}: expected {expected_version}, "
-                f"found {latest}"
-            )
-        version = latest + 1
-        path = self._branch_dir(name) / "commits" / self._commit_name(version)
-        payload = {
-            "version": version,
-            "op": op,
-            "add": add or [],
-            "remove": remove or [],
-        }
+        publish_branch carries it over. Branch chains keep no
+        checkpoints."""
+        payload = {"op": op, "add": add or [], "remove": remove or []}
         if self._staged_schema is not None:
             payload["schema"] = self._staged_schema
-        try:
-            _publish(path, payload)
-        except FileExistsError:
-            raise CommitConflictError(
-                f"txlog branch {name}: version {version} committed "
-                "concurrently"
-            ) from None
-        self._staged_schema = None
-        return version
+        return self._write_commit(
+            self._branch_dir(name) / "commits", expected_version, payload
+        )
 
     def branch_read(self, spark: SparkSession, name: str) -> DataFrame:
         from pyspark.sql.types import StructType
@@ -1230,8 +1201,8 @@ class TxLog:
         to files that changed since ``to_version``, never to table
         size; zero data files are read or written.
         """
-        while True:
-            expected = self.latest_version()
+
+        def attempt(expected: int) -> int:
             if to_version not in set(self.versions()):
                 raise ValueError(
                     f"txlog: cannot restore to version {to_version} — "
@@ -1286,19 +1257,18 @@ class TxLog:
                         int(tgt_meta.get("identity_next", 0)),
                     ),
                 }
-            try:
-                return self.commit(
-                    "restore",
-                    add=add,
-                    remove=remove,
-                    dv=dv_actions or None,
-                    constraints=tgt_cons,
-                    meta=tgt_meta,
-                    schema=tgt_schema,
-                    expected_version=expected,
-                )
-            except CommitConflictError:
-                continue
+            return self.commit(
+                "restore",
+                add=add,
+                remove=remove,
+                dv=dv_actions or None,
+                constraints=tgt_cons,
+                meta=tgt_meta,
+                schema=tgt_schema,
+                expected_version=expected,
+            )
+
+        return self.transact(attempt)
 
     def reorg_purge(
         self,
@@ -1324,11 +1294,11 @@ class TxLog:
 
         Returns the committed version, or the current version when no
         file is DV-bound (nothing to purge)."""
-        while True:
-            expected = self.latest_version()
+
+        def attempt(expected: int) -> int:
             if expected < 0:
                 return expected
-            files, _, dvs_map, _, _, pmeta = self._replay(expected)
+            files, _, dvs_map, _, _, _ = self._replay(expected)
             bound = sorted(f for f in files if f in dvs_map)
             if not bound:
                 return expected
@@ -1338,27 +1308,21 @@ class TxLog:
                 {f: dvs_map[f] for f in bound},
                 version=expected,
             )
-            mapped = bool(pmeta.get("mapping"))
-            out = (
-                self.to_physical(survivors, expected)
-                if mapped
-                else survivors
-            )
+            out = self.to_physical(survivors, expected)
             adds = (
                 stage(out)
                 if stage is not None
                 else self.stage_data(out, n_files or len(bound))
             )
-            try:
-                return self.commit(
-                    "reorg-purge",
-                    add=adds,
-                    remove=bound,
-                    expected_version=expected,
-                    schema=None,
-                )
-            except CommitConflictError:
-                continue
+            return self.commit(
+                "reorg-purge",
+                add=adds,
+                remove=bound,
+                expected_version=expected,
+                schema=None,
+            )
+
+        return self.transact(attempt)
 
     # -- reading ------------------------------------------------------
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -1407,17 +1371,11 @@ class TxLog:
             if ls is not None:
                 reader = reader.schema(ls)
         df = reader.parquet(*files)
-
-        def _to_logical(out: DataFrame) -> DataFrame:
-            if not mapping:
-                return out
-            inv = {v: k for k, v in mapping.items()}
-            return out.select(
-                *[F.col(c).alias(inv.get(c, c)) for c in out.columns]
-            )
-
         active_dvs = {f: p for f, p in dvs.items() if f in set(rel_files)}
-        return _to_logical(self._apply_dvs(spark, df, active_dvs))
+        return self._rename(
+            self._apply_dvs(spark, df, active_dvs),
+            {v: k for k, v in mapping.items()},
+        )
 
     def _log_schema_at(
         self, version: int
@@ -1485,17 +1443,25 @@ class TxLog:
         absolute paths a shallow clone records both resolve."""
         if not dvs:
             return df
-        dv_df = self._dv_frame(spark, dvs)
-        src = df.select(
+        return self._with_row_ids(df).join(
+            F.broadcast(self._dv_frame(spark, dvs)),
+            ["__file", "__pos"],
+            "left_anti",
+        ).drop("__file", "__pos")
+
+    @staticmethod
+    def _with_row_ids(df: DataFrame) -> DataFrame:
+        """``df`` plus each row's id in its data file: ``__file`` (the
+        file's basename, what DV bindings match on) and ``__pos`` (its
+        ``_metadata.row_index``, stable because data files are
+        immutable). ``df`` must be a raw file-source scan."""
+        return df.select(
             "*",
             F.element_at(
                 F.split(F.col("_metadata.file_path"), "/"), -1
             ).alias("__file"),
             F.col("_metadata.row_index").alias("__pos"),
         )
-        return src.join(
-            F.broadcast(dv_df), ["__file", "__pos"], "left_anti"
-        ).drop("__file", "__pos")
 
     def change_feed(
         self,
@@ -1571,13 +1537,6 @@ class TxLog:
             if p != l
         }
 
-        def _to_log(df: DataFrame) -> DataFrame:
-            if not inv_map:
-                return df
-            return df.select(
-                *[F.col(c).alias(inv_map.get(c, c)) for c in df.columns]
-            )
-
         feeds: list[DataFrame] = []
         for v in vs:
             if v <= from_version or v > to_version:
@@ -1643,19 +1602,15 @@ class TxLog:
                         ["__file", "__pos"],
                         "left_anti",
                     )
-                scan = self._scan_files_at(spark, sorted(pos_bind), v)
-                src = scan.select(
-                    "*",
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
+                src = self._with_row_ids(
+                    self._scan_files_at(spark, sorted(pos_bind), v)
                 )
                 feeds.append(
-                    _to_log(
+                    self._rename(
                         src.join(
                             F.broadcast(pos_df), ["__file", "__pos"], "left_semi"
-                        ).drop("__file", "__pos")
+                        ).drop("__file", "__pos"),
+                        inv_map,
                     ).select(
                         F.lit(v).cast("long").alias("_version"),
                         F.lit(tag).alias("_change_type"),
@@ -1669,23 +1624,25 @@ class TxLog:
             # per-commit footer sweep: adds at v, removes at v-1 (the
             # snapshot they last belonged to)
             a_df = (
-                _to_log(
+                self._rename(
                     self._apply_dvs(
                         spark,
                         self._scan_files_at(spark, adds, v),
                         this_add_dvs,
-                    )
+                    ),
+                    inv_map,
                 )
                 if adds
                 else None
             )
             r_df = (
-                _to_log(
+                self._rename(
                     self._apply_dvs(
                         spark,
                         self._scan_files_at(spark, removes, v - 1),
                         {f: p for f, p in prev_dvs.items() if f in set(removes)},
-                    )
+                    ),
+                    inv_map,
                 )
                 if removes
                 else None
@@ -1788,10 +1745,6 @@ def _warehouse_dir(sf_dir: str, name: str) -> str:
     from hive_clone_spark.sources.queries import _warehouse
 
     return _warehouse(sf_dir, name)
-
-
-def _dec(col: str) -> F.Column:
-    return F.col(col).cast("decimal(18,2)")
 
 
 # ---------------------------------------------------------------------------

@@ -1261,16 +1261,40 @@ def _read_affected(
     return tl.empty_df(spark, version)
 
 
+def _dml_restage(tl, expected: int, aff_df, out, m: int):
+    """The rewrite step DELETE, UPDATE and MERGE share: stage ``out``,
+    the rewritten rows of the affected files ``aff_df`` read at
+    ``expected``, as one stats-carrying file per bucket, and return
+    ``(adds, schema)`` for the commit.
+
+    On a column-mapped table the logical schema is unchanged and the
+    stash holds physical names, so no schema action publishes
+    (``schema`` is None). ``out`` is then cast back to ``aff_df``'s
+    column types, since no schema action may record a type a SET
+    expression drifted, and staged at physical names."""
+    from hive_clone_spark.sources.txlog import _with_bucket
+
+    mapping = tl.table_meta(expected).get("mapping") or {}
+    if mapping:
+        ltypes = dict(aff_df.dtypes)
+        out = out.select(*[F.col(c).cast(ltypes[c]).alias(c) for c in out.columns])
+    adds = tl.stage_data_partitioned(
+        tl.to_physical(_with_bucket(out, m), expected),
+        "bucket",
+        stats_col=mapping.get("o_orderkey", "o_orderkey"),
+        stats_key="o_orderkey",
+    )
+    return adds, None if mapping else tl._staged_schema
+
+
 def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
     """Parse one DML statement and execute it as a txlog commit.
     Returns the op name recorded in the log."""
     import pyarrow.parquet as pq
 
     from hive_clone_spark.sources.txlog import (
-        CommitConflictError,
         ConstraintViolationError,
         _footer_minmax,
-        _with_bucket,
     )
 
     if (mt := _DML_ALTER_ADD_RE.match(statement)) is not None:
@@ -1303,8 +1327,8 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
         # constraint can never be armed over unvalidated rows, and a
         # concurrent constraint change is never clobbered.
         expr = mt["expr"].strip()
-        while True:
-            expected = tl.latest_version()
+
+        def add_constraint(expected: int) -> int:
             snap = tl.read(spark, expected) if expected >= 0 else None
             # CHECK semantics: violated only when strictly FALSE (NULL
             # passes) — same predicate commit_checked counts
@@ -1315,29 +1339,27 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
             )
             if n_bad:
                 raise ConstraintViolationError({mt["name"]: int(n_bad)})
-            try:
-                tl.set_constraints(
-                    {**tl.constraints(expected), mt["name"]: expr},
-                    expected_version=expected,
-                )
-                return "set-constraints"
-            except CommitConflictError:
-                continue
+            return tl.set_constraints(
+                {**tl.constraints(expected), mt["name"]: expr},
+                expected_version=expected,
+            )
+
+        tl.transact(add_constraint)
+        return "set-constraints"
 
     if (mt := _DML_DROP_CONSTRAINT_RE.match(statement)) is not None:
-        while True:
-            expected = tl.latest_version()
+
+        def drop_constraint(expected: int) -> int:
             cons = dict(tl.constraints(expected))
             if mt["name"] not in cons:
                 raise ValueError(
                     f"txlog: no such constraint {mt['name']!r}"
                 )
             del cons[mt["name"]]
-            try:
-                tl.set_constraints(cons, expected_version=expected)
-                return "set-constraints"
-            except CommitConflictError:
-                continue
+            return tl.set_constraints(cons, expected_version=expected)
+
+        tl.transact(drop_constraint)
+        return "set-constraints"
 
     if (mt := _DML_VACUUM_RE.match(statement)) is not None:
         tl.vacuum(int(mt["n"]))
@@ -1353,48 +1375,34 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
         # legal EMPTY version (remove all files, add none)
         where = mt.group("where") or "TRUE"
         lo, hi = _dml_prune_range(where, "o_orderkey", m)
-        while True:
-            expected = tl.latest_version()
-            mapping = tl.table_meta(expected).get("mapping") or {}
-            mapped = bool(mapping)
+
+        def delete(expected: int) -> int:
             all_f, affected = tl.scan_files("o_orderkey", lo, hi, version=expected)
             aff_df = _read_affected(spark, tl, all_f, affected, version=expected)
             # SQL DELETE removes only rows where the predicate is TRUE;
             # a plain ~expr also drops NULL-predicate rows (three-valued
             # logic: NOT NULL = NULL, filtered out). eqNullSafe pins
             # NULL to "not deleted".
-            survivors = _with_bucket(
-                aff_df.where(~F.expr(where).eqNullSafe(F.lit(True))), m
+            adds, schema = _dml_restage(
+                tl, expected, aff_df,
+                aff_df.where(~F.expr(where).eqNullSafe(F.lit(True))), m,
             )
-            # mapped table: stage at PHYSICAL names, publish no schema
-            # action (the logical schema is unchanged; the stash holds
-            # physical names and must not leak into a schema action)
-            adds = tl.stage_data_partitioned(
-                tl.to_physical(survivors, expected) if mapped else survivors,
-                "bucket",
-                stats_col=mapping.get("o_orderkey", "o_orderkey"),
-                stats_key="o_orderkey",
-            )
-            try:
-                # plain commit: a DELETE rewrite stages a SUBSET of
-                # already-valid rows, so CHECK constraints hold by
-                # induction — no staged-file scan needed (UPDATE and
-                # MERGE, which produce new values, go through
-                # commit_checked)
-                tl.commit("delete", add=adds, remove=affected,
-                          expected_version=expected,
-                          **({"schema": None} if mapped else {}))
-                return "delete"
-            except CommitConflictError:
-                continue
+            # plain commit: a DELETE rewrite stages a SUBSET of
+            # already-valid rows, so CHECK constraints hold by
+            # induction — no staged-file scan needed (UPDATE and
+            # MERGE, which produce new values, go through
+            # commit_checked)
+            return tl.commit("delete", add=adds, remove=affected,
+                             expected_version=expected, schema=schema)
+
+        tl.transact(delete)
+        return "delete"
 
     if (mt := _DML_UPDATE_RE.match(statement)) is not None:
         where, sets = mt.group("where"), _split_assignments(mt.group("sets"))
         lo, hi = _dml_prune_range(where, "o_orderkey", m)
-        while True:
-            expected = tl.latest_version()
-            mapping = tl.table_meta(expected).get("mapping") or {}
-            mapped = bool(mapping)
+
+        def update(expected: int) -> int:
             all_f, affected = tl.scan_files("o_orderkey", lo, hi, version=expected)
             aff_df = _read_affected(spark, tl, all_f, affected, version=expected)
             # SQL UPDATE evaluates every SET RHS against the PRE-update
@@ -1405,7 +1413,6 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
             # row is not updated, matching TRUE-only UPDATE semantics.
             set_map = dict(sets)
             cond = F.expr(where)
-            ltypes = dict(aff_df.dtypes)
             upd = aff_df.select(
                 *[
                     F.when(cond, F.expr(set_map[c])).otherwise(F.col(c)).alias(c)
@@ -1414,28 +1421,14 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                     for c in aff_df.columns
                 ]
             )
-            if mapped:
-                # no schema action will publish, so a SET expression
-                # must not drift a column's type under the unchanged
-                # logical schema
-                upd = upd.select(
-                    *[F.col(c).cast(ltypes[c]).alias(c) for c in upd.columns]
-                )
-            rewritten = _with_bucket(upd, m)
-            adds = tl.stage_data_partitioned(
-                tl.to_physical(rewritten, expected) if mapped else rewritten,
-                "bucket",
-                stats_col=mapping.get("o_orderkey", "o_orderkey"),
-                stats_key="o_orderkey",
-            )
-            try:
-                tl.commit_checked(spark, "update", add=adds,
-                                  remove=affected,
-                                  expected_version=expected,
-                                  **({"schema": None} if mapped else {}))
-                return "update"
-            except CommitConflictError:
-                continue
+            adds, schema = _dml_restage(tl, expected, aff_df, upd, m)
+            return tl.commit_checked(spark, "update", add=adds,
+                                     remove=affected,
+                                     expected_version=expected,
+                                     schema=schema)
+
+        tl.transact(update)
+        return "update"
 
     if (mh := _DML_MERGE_HDR_RE.match(statement)) is not None:
         talias = mh.group("talias") or mh.group("tbl")
@@ -1518,10 +1511,8 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
             if has_dup_keys
             else None
         )
-        while True:
-            expected = tl.latest_version()
-            mapping = tl.table_meta(expected).get("mapping") or {}
-            mapped = bool(mapping)
+
+        def merge(expected: int) -> int:
             all_files, pruned = tl.scan_files(
                 tgt_key,
                 int(prof["lo"]) if not src_empty else 0,
@@ -1544,7 +1535,7 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
             aff_df = _read_affected(spark, tl, all_files, affected, version=expected)
             tgt_cols = [c for c in aff_df.columns if c != "bucket"]
             if dup_keys is not None:
-                # SQL-standard cardinality check, INSIDE the retry loop
+                # SQL-standard cardinality check, INSIDE each attempt
                 # and against the SAME snapshot the commit is validated
                 # at (version=expected): a concurrent commit landing a
                 # row that matches a duplicated source key between a
@@ -1607,34 +1598,13 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                                 F.expr(smap[c]),
                             ).otherwise(val)
                     out_cols.append(val.alias(c))
-                out = survivors.select(*out_cols)
-                if mapped:
-                    # no schema action publishes on a mapped table, so
-                    # SET expressions must not drift column types under
-                    # the unchanged logical schema
-                    ltypes = dict(aff_df.dtypes)
-                    out = out.select(
-                        *[
-                            F.col(c).cast(ltypes[c]).alias(c)
-                            for c in out.columns
-                        ]
-                    )
-                rewritten = _with_bucket(out, m)
-                adds = tl.stage_data_partitioned(
-                    tl.to_physical(rewritten, expected)
-                    if mapped
-                    else rewritten,
-                    "bucket",
-                    stats_col=mapping.get("o_orderkey", "o_orderkey"),
-                    stats_key="o_orderkey",
-                )
                 # the table's logical schema is the REWRITTEN target
-                # layout; the insert staging below would otherwise
-                # overwrite the stash with the insert frame's schema
-                # (same names/order today, but source-typed columns).
-                # Mapped tables publish NO schema action — the stash
-                # holds physical names.
-                merge_schema = None if mapped else tl._staged_schema
+                # layout, taken before the insert staging below
+                # overwrites the stash with the insert frame's schema
+                # (same names/order today, but source-typed columns)
+                adds, merge_schema = _dml_restage(
+                    tl, expected, aff_df, survivors.select(*out_cols), m
+                )
                 removes = affected
             # insert-only MERGE: no target row changes, so nothing is
             # rewritten or removed (a rewrite through the join would
@@ -1688,10 +1658,10 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                 # inserted keys NULL) is kept with a stats-less add,
                 # which readers scan conservatively.
                 ins_adds = tl.stage_data(
-                    tl.to_physical(inserts, expected) if mapped else inserts,
-                    n_files=1,
+                    tl.to_physical(inserts, expected), n_files=1
                 )
-                pkey = mapping.get(tgt_key, tgt_key) if mapped else tgt_key
+                mapping = tl.table_meta(expected).get("mapping") or {}
+                pkey = mapping.get(tgt_key, tgt_key)
                 kept = []
                 for a in ins_adds:
                     path = tl.root / a["file"]
@@ -1703,20 +1673,19 @@ def txlog_sql_dml(spark: SparkSession, tl, m: int, statement: str) -> str:
                         a["stats"] = {tgt_key: [mnmx[0], mnmx[1]]}
                     kept.append(a)
                 ins_adds = kept
-            try:
-                # tgt_clauses: publish the REWRITTEN target layout.
-                # insert-only: schema=None publishes NO schema action
-                # and suppresses commit()'s staged-stash fallback — the
-                # stash here holds the INSERT frame's (source-cast)
-                # schema, and an insert-only MERGE never changes the
-                # table's logical schema.
-                tl.commit_checked(spark, "merge", add=adds + ins_adds,
-                                  remove=removes,
-                                  expected_version=expected,
-                                  schema=merge_schema if tgt_clauses else None)
-                return "merge"
-            except CommitConflictError:
-                continue
+            # tgt_clauses: publish the REWRITTEN target layout.
+            # insert-only: schema=None publishes NO schema action and
+            # suppresses commit()'s staged-stash fallback — the stash
+            # here holds the INSERT frame's (source-cast) schema, and
+            # an insert-only MERGE never changes the table's logical
+            # schema.
+            return tl.commit_checked(spark, "merge", add=adds + ins_adds,
+                                     remove=removes,
+                                     expected_version=expected,
+                                     schema=merge_schema)
+
+        tl.transact(merge)
+        return "merge"
 
     raise ValueError(f"unsupported DML statement: {statement[:80]!r}")
 
@@ -2029,10 +1998,10 @@ def q256_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed_dir = _warehouse_dir(sf_dir, "q256_feed")
     ckpt_dir = _warehouse_dir(sf_dir, "q256_ckpt")
 
-    # range-based, not createDataFrame: writing a 1-row LocalTableScan
-    # union to parquet measured ~5 s per batch file in this session
-    # (the createDataFrame row alone wrote in 4.8 s warm; the identical
-    # range(1) projection writes in 0.3 s)
+    # range-based, not createDataFrame: a createDataFrame(list) row is
+    # a Scan ExistingRDD that runs a Python-worker stage on every
+    # action (see session.local_rows). That 1-row sentinel wrote in
+    # 4.8 s warm; the identical range(1) projection writes in 0.3 s
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("o_orderkey"),
         F.lit(0.0).alias("o_totalprice"),
