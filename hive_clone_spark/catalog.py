@@ -7,11 +7,18 @@ table under /root/testdata/sf{0.001,0.01,0.1}/.
 Reading is always `spark.read.parquet` so Catalyst gets predicate
 pushdown + column pruning into the scan; nothing is cached here — the
 query functions decide what to persist.
+
+Writing goes to per-process scratch dirs: `scratch_dir` builds every
+such path and `reap_scratch_dirs` removes those of dead processes.
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
+import re
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,6 +36,69 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Root of every per-process scratch dir (gitignored). Write-path
+# entries, txlog tables, stream checkpoints, MVs and DDL table
+# locations all live at <root>/<name>/<tag>-<pid>.
+_SCRATCH_ROOT = pathlib.Path(__file__).resolve().parents[1] / "spark-warehouse"
+# A scratch dir name: <tag>-<pid>, or <tag>-<pid>-ctl for a control
+# table its owner writes beside it. No '=': a partition dir is not one.
+_SCRATCH_NAME = re.compile(r"[^=]+-(\d+)(?:-ctl)?")
+# Age floors for reaping a dir whose owner the kill-0 probe cannot
+# rule out. Probe inconclusive (owned by another user, or no kill-0 on
+# this platform): 6 h, far past any bench or pytest session. Probe
+# says alive: either pid reuse, or a long-lived session whose lazy
+# plan still reads a fixture written hours ago; writers overwrite
+# their dir on every use, so 7 days clears reuse leaks without racing
+# a plausible live session.
+_REAP_INCONCLUSIVE_AGE_S = 6 * 3600
+_REAP_ALIVE_AGE_S = 7 * 24 * 3600
+_reaped = False
+
+
+def scratch_dir(tag: str, name: str) -> str:
+    """The process's scratch dir ``spark-warehouse/<name>/<tag>-<pid>``
+    under the repo, CLEARED on every call; ``tag`` is the basename of
+    an sf dir or a plain name. The clear keeps files of an earlier
+    layout out of recursiveFileLookup / mergeSchema reads; the pid
+    keeps concurrent processes (oracle suite, plan audit, bench) from
+    racing rmtree-vs-write on one dir. The first call in a process
+    runs ``reap_scratch_dirs``."""
+    global _reaped
+    if not _reaped:
+        _reaped = True
+        reap_scratch_dirs()
+    tag = os.path.basename(tag.rstrip("/"))
+    dest = _SCRATCH_ROOT / name / f"{tag}-{os.getpid()}"
+    if dest.exists():
+        shutil.rmtree(dest)
+    return str(dest)
+
+
+def reap_scratch_dirs() -> None:
+    """Remove the scratch dirs of other processes that are gone: a dead
+    owner's dir can never be read again (its in-memory catalog and
+    plans died with it). A live-looking or unprobeable owner's dir goes
+    only past its age floor; this process's own dirs are never
+    touched."""
+    for d in _SCRATCH_ROOT.glob("*/*"):
+        m = _SCRATCH_NAME.fullmatch(d.name)
+        if m is None or int(m[1]) == os.getpid():
+            continue
+        try:
+            os.kill(int(m[1]), 0)
+            floor = _REAP_ALIVE_AGE_S
+        except ProcessLookupError:
+            shutil.rmtree(d, ignore_errors=True)
+            continue
+        except OSError:
+            floor = _REAP_INCONCLUSIVE_AGE_S
+        try:
+            age = time.time() - d.stat().st_mtime
+        except OSError:
+            continue  # its owner removed it meanwhile
+        if age > floor:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

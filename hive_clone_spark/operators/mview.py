@@ -38,15 +38,12 @@ Reference parity: no warehouse surface exists in the reference
 
 from __future__ import annotations
 
-import os
-import pathlib
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import scratch_dir, table
 from hive_clone_spark.registry import register
 
 
@@ -64,15 +61,6 @@ class MatView:
     projections: dict = field(hash=False, compare=False, default=None)
     # partial states: out_col -> ("sum", source_col) | ("count",)
     aggs: dict = field(hash=False, compare=False, default=None)
-    path: str = ""
-
-
-def mv_location(name: str) -> str:
-    # pid-isolated like sources/queries._warehouse: oracle suite, plan
-    # audit, and bench may execute this entry concurrently from
-    # different processes
-    repo = pathlib.Path(__file__).resolve().parents[2]
-    return str(repo / "spark-warehouse" / "mview" / f"{name}-{os.getpid()}")
 
 
 def build_mv(spark: SparkSession, sf_dir: str, mv: MatView) -> str:
@@ -91,9 +79,7 @@ def build_mv(spark: SparkSession, sf_dir: str, mv: MatView) -> str:
             exprs.append(F.count(F.lit(1)).alias(out))
         else:
             raise ValueError(f"mv {mv.name}: unsupported partial {spec!r}")
-    dest = mv.path or mv_location(mv.name)
-    if os.path.exists(dest):
-        shutil.rmtree(dest)
+    dest = scratch_dir(mv.name, "mview")
     base.groupBy(*mv.group_cols).agg(*exprs).write.mode("overwrite").parquet(
         dest
     )

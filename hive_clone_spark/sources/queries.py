@@ -20,40 +20,15 @@ from __future__ import annotations
 
 import os
 import pathlib
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import scratch_dir as _warehouse, table
 from hive_clone_spark.operators.relational import _dec
 from hive_clone_spark.pipeline.common import ordered, spread
 from hive_clone_spark.registry import register
 from hive_clone_spark.sources.io import write_bucketed, write_zordered
-
-
-def _warehouse(sf_dir: str, name: str) -> str:
-    """Destination dir for a write-path entry: keyed by (entry, sf,
-    pid) and CLEARED on every call.
-
-    The clear stops stale files from an earlier layout being swept in
-    by recursiveFileLookup / mergeSchema reads (entries like q58 only
-    overwrite their own batch=N subdirs); the pid component isolates
-    concurrent processes (oracle suite vs plan audit vs bench all
-    execute these write entries) that would otherwise race
-    rmtree-vs-write on the same directory. The whole tree is
-    gitignored and self-cleaning per (entry, sf, pid) reuse.
-    """
-    repo = pathlib.Path(__file__).resolve().parents[2]
-    dest = (
-        repo
-        / "spark-warehouse"
-        / name
-        / f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}"
-    )
-    if dest.exists():
-        shutil.rmtree(dest)
-    return str(dest)
 
 
 # ---------------------------------------------------------------------------
@@ -253,27 +228,6 @@ def q63_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a lossy bucket layout or a dropped bucket file surfaces as a hash
 # mismatch.
 # ---------------------------------------------------------------------------
-def _reap_stale_bucket_dirs() -> None:
-    """Remove bucketed_q67_* external dirs left by DEAD processes.
-
-    Dir names are `{sf}-{pid}`; a dir whose pid no longer exists can
-    never be read again (the in-memory catalog that pointed at it died
-    with its process), so it is pure accumulation. Live pids are left
-    alone — bench / pytest / plan-audit may run concurrently."""
-    repo = pathlib.Path(__file__).resolve().parents[2]
-    for parent in (repo / "spark-warehouse").glob("bucketed_q67_*"):
-        for d in parent.iterdir() if parent.is_dir() else ():
-            pid_part = d.name.rsplit("-", 1)[-1]
-            if not pid_part.isdigit():
-                continue
-            try:
-                os.kill(int(pid_part), 0)
-            except ProcessLookupError:
-                shutil.rmtree(d, ignore_errors=True)
-            except PermissionError:
-                pass  # alive under another uid — leave it
-
-
 def bucketed_tables(spark: SparkSession, sf_dir: str):
     """Write orders/customer as co-bucketed catalog tables (external
     location under the repo warehouse dir, pid-keyed) and return the
@@ -283,11 +237,9 @@ def bucketed_tables(spark: SparkSession, sf_dir: str):
     this process still exists, it is reused as-is — so bench's
     warmup + measured runs of q67 time the SHUFFLE-FREE JOIN the entry
     documents, not a re-drop + re-write of both bucketed tables on
-    every invocation (round-5 advice). Stale external dirs from dead
-    processes are reaped on entry."""
+    every invocation (round-5 advice)."""
     sfb = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     pid = os.getpid()
-    _reap_stale_bucket_dirs()
     names = {}
     for tbl, cols, key in (
         ("orders", ["o_custkey", "o_totalprice"], "o_custkey"),
@@ -2013,81 +1965,10 @@ def _bloom_key(i: int) -> int:
     return _BLOOM_BASE + (i * _BLOOM_MULT) % _BLOOM_P
 
 
-def _bloom_table_path(sf_dir: str) -> str:
-    """Stable per-process fixture path WITHOUT the _warehouse clear (the
-    pytest twin re-reads the file the entry wrote)."""
-    repo = pathlib.Path(__file__).resolve().parents[2]
-    return str(
-        repo
-        / "spark-warehouse"
-        / "q255_bloom"
-        / f"{os.path.basename(sf_dir.rstrip('/'))}-{os.getpid()}"
-    )
-
-
-# Age floors for reaping sibling fixture dirs. Two regimes (round-11
-# + round-12 advice):
-#  - probe INCONCLUSIVE (no kill-0 on this platform, or owned by
-#    another user): 6 h — far past any bench/pytest session.
-#  - probe says ALIVE: could still be pid reuse (kill-0 succeeds for
-#    an unrelated process — the round-11 leak), but it could also be a
-#    genuinely long-lived session whose lazy plan re-reads a fixture
-#    written hours ago (the round-12 hazard: reaping it mid-query).
-#    write_bloom_table overwrites dest per call, so a live owner's dir
-#    mtime refreshes on every use; a 7-day floor clears pid-reuse
-#    leaks eventually while never racing any plausible live session.
-_BLOOM_REAP_AGE_SEC = 6 * 3600
-_BLOOM_REAP_ALIVE_AGE_SEC = 7 * 24 * 3600
-
-
-def _reap_stale_bloom_dirs(dest: str) -> None:
-    """The per-pid suffix keeps concurrent processes (driver + pytest)
-    from clobbering each other's fixture, but dead processes used to
-    leave their dirs behind forever. Reap siblings whose owning pid is
-    gone — or whose dir outlived _BLOOM_REAP_AGE_SEC, the age floor
-    that clears leaks even under pid reuse (and on platforms where the
-    kill-0 probe is unavailable). Live processes' fresh dirs are never
-    touched."""
-    import time
-
-    parent = pathlib.Path(dest).parent
-    if not parent.is_dir():
-        return
-    for sib in parent.iterdir():
-        if str(sib) == dest:
-            continue
-        # dir names: {sf}-{pid} or {sf}-{pid}-ctl (test_sources' no-bloom
-        # control table, owned by the same pid)
-        tail = sib.name.removesuffix("-ctl").rsplit("-", 1)[-1]
-        try:
-            pid = int(tail)
-        except ValueError:
-            continue  # not a per-pid fixture dir: leave it
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)  # raises if the owner is gone
-            floor = _BLOOM_REAP_ALIVE_AGE_SEC  # alive OR pid reuse
-        except ProcessLookupError:
-            shutil.rmtree(sib, ignore_errors=True)  # owner is gone
-            continue
-        except (PermissionError, OSError):
-            # alive under another user, or no kill-0 probe on this
-            # platform: inconclusive — the tighter age floor applies
-            floor = _BLOOM_REAP_AGE_SEC
-        try:
-            age = time.time() - sib.stat().st_mtime
-        except OSError:
-            continue  # raced with its owner's own cleanup
-        if age > floor:
-            shutil.rmtree(sib, ignore_errors=True)
-
-
 def write_bloom_table(spark: SparkSession, sf_dir: str) -> str:
     """Write the scrambled-key corpus with a bloom filter on k (and
     dictionary encoding off for it); one output file, many row groups."""
-    dest = _bloom_table_path(sf_dir)
-    _reap_stale_bloom_dirs(dest)
+    dest = _warehouse(sf_dir, "q255_bloom")
     df = spark.range(0, _BLOOM_N).select(
         (
             F.lit(_BLOOM_BASE)

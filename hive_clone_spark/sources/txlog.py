@@ -54,7 +54,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import table
+from hive_clone_spark.catalog import scratch_dir as _warehouse_dir, table
 from hive_clone_spark.operators.relational import _dec
 from hive_clone_spark.pipeline.common import spread
 from hive_clone_spark.registry import register
@@ -71,7 +71,8 @@ def _publish(path: pathlib.Path, payload: dict) -> None:
     temp file that no ``*.json`` glob matches, fsync'd, then hard-linked
     to ``path``. The link is an atomic put-if-absent (FileExistsError
     when ``path`` exists), so a writer that dies mid-write leaves at most
-    an unreferenced temp file, never a torn ``path``."""
+    an unreferenced temp file, never a torn ``path``. The directory is
+    fsync'd after the link, so the new name is durable on return."""
     tmp = path.with_name(f".{path.name}.{uuid.uuid4().hex}.tmp")
     try:
         with open(tmp, "w") as f:
@@ -81,6 +82,11 @@ def _publish(path: pathlib.Path, payload: dict) -> None:
         os.link(tmp, path)
     finally:
         tmp.unlink(missing_ok=True)
+    fd = os.open(path.parent, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def _footer_minmax(path, col: str) -> tuple[int, int] | None:
@@ -319,17 +325,11 @@ class TxLog:
     # resolves the schema as of THAT version, not whatever a later
     # writer staged, and (b) a losing/aborted optimistic writer (or a
     # branch stage) never alters main's logical schema — its schema
-    # only lands if its commit does. The pre-r12 last-writer-wins
-    # ``_schema.json`` sidecar is still READ as a legacy fallback.
-    def _schema_path(self) -> pathlib.Path:
-        return self.root / "_schema.json"
-
+    # only lands if its commit does.
     def table_schema(self, spark: SparkSession, version: int | None = None):
         """Logical schema AS OF ``version`` (default latest): the
         newest ``schema`` commit action at or below it (folded through
-        checkpoints), else the legacy sidecar, else the footer of the
-        newest data file referenced at/below ``version`` that is still
-        on disk (pre-schema-action logs), else None."""
+        checkpoints), else None."""
         from pyspark.sql.types import StructType
 
         if version is None:
@@ -338,18 +338,6 @@ class TxLog:
             _, _, _, _, schema, _ = self._replay(version)
             if schema is not None:
                 return StructType.fromJson(schema)
-        p = self._schema_path()
-        if p.exists():
-            with open(p) as f:
-                return StructType.fromJson(json.load(f))
-        for v in reversed(self.versions()):
-            if version >= 0 and v > version:
-                continue
-            c = self._read_commit(v)
-            for a in reversed(c.get("add", [])):
-                fp = self.root / a["file"]
-                if fp.exists():
-                    return spark.read.parquet(str(fp)).schema
         return None
 
     def empty_df(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -520,15 +508,36 @@ class TxLog:
         if n_files is not None:
             df = df.repartition(n_files)
         self._staged_schema = json.loads(df.schema.json())
+        return [{"file": f} for _, f in self._land(df.write)]
+
+    def _land(self, writer, partition_col: str | None = None) -> list[tuple]:
+        """The one stage-and-land step: ``writer`` (a DataFrameWriter)
+        writes parquet into a fresh ``_stage-<uuid>`` dir under the
+        root, then each part file moves to ``data/<uuid>.parquet``.
+        Returns (partition value or None, "data/<uuid>.parquet") per
+        file, in partition-dir then part-name order. The stage dir is
+        removed in a ``finally``: staging that raises (in the write or
+        in a move into ``data/``) leaves no ``_stage-*`` dir behind,
+        and ``vacuum`` never looks there."""
         stage = self.root / f"_stage-{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(str(stage))
-        adds = []
-        for part in sorted(stage.glob("*.parquet")):
-            name = f"{uuid.uuid4().hex}.parquet"
-            os.replace(part, self.data_dir / name)
-            adds.append({"file": f"data/{name}"})
-        shutil.rmtree(stage)
-        return adds
+        try:
+            writer.mode("overwrite").parquet(str(stage))
+            if partition_col is None:
+                dirs = [(None, stage)]
+            else:
+                dirs = [
+                    (int(d.name.split("=", 1)[1]), d)
+                    for d in sorted(stage.glob(f"{partition_col}=*"))
+                ]
+            landed = []
+            for value, d in dirs:
+                for part in sorted(d.glob("*.parquet")):
+                    rel = f"data/{uuid.uuid4().hex}.parquet"
+                    os.replace(part, self.root / rel)
+                    landed.append((value, rel))
+            return landed
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
     def stage_data_partitioned(
         self,
@@ -570,31 +579,21 @@ class TxLog:
         # partitionBy drops the partition column from the data files, so
         # the logical (read-side) schema excludes it
         self._staged_schema = json.loads(df.drop(partition_col).schema.json())
-        stage = self.root / f"_stage-{uuid.uuid4().hex}"
-        (
-            spread(df, partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(str(stage))
+        landed = self._land(
+            spread(df, partition_col).write.partitionBy(partition_col),
+            partition_col,
         )
         key = stats_key or stats_col
         adds = []
-        for vdir in sorted(stage.glob(f"{partition_col}=*")):
-            value = int(vdir.name.split("=", 1)[1])
-            parts = sorted(vdir.glob("*.parquet"))
-            for part in parts:
-                name = f"{uuid.uuid4().hex}.parquet"
-                dest = self.data_dir / name
-                os.replace(part, dest)
-                add = {"file": f"data/{name}"}
-                if stats_col is not None:
-                    mnmx = _footer_minmax(dest, stats_col)
-                    if mnmx is not None:
-                        add["stats"] = {key: [mnmx[0], mnmx[1]]}
-                elif stats_by_value and value in stats_by_value:
-                    add["stats"] = stats_by_value[value]
-                adds.append(add)
-        shutil.rmtree(stage)
+        for value, rel in landed:
+            add = {"file": rel}
+            if stats_col is not None:
+                mnmx = _footer_minmax(self.root / rel, stats_col)
+                if mnmx is not None:
+                    add["stats"] = {key: [mnmx[0], mnmx[1]]}
+            elif stats_by_value and value in stats_by_value:
+                add["stats"] = stats_by_value[value]
+            adds.append(add)
         return adds
 
     def scan_files(
@@ -1241,12 +1240,9 @@ class TxLog:
                 cur_dv = cur_dvs.get(f) if f in cur_files else None
                 if tgt_dv != cur_dv:
                     dv_actions.append({"file": f, "dv": tgt_dv})
-            # tgt_schema None (pre-schema-action legacy log): publish
-            # NO schema action. table_schema()'s legacy sidecar is
-            # last-writer-wins and IGNORES the version argument, so
-            # "resolving" it here could stamp a post-target schema
-            # into the restore; leaving no action keeps legacy reads
-            # on their existing (sidecar) rules, unchanged.
+            # tgt_schema None (no schema action at the target): publish
+            # NO schema action rather than stamp a schema the target
+            # never had into the restore.
             tgt_meta = dict(_tm)
             cur_next = cur_meta.get("identity_next")
             if cur_next is not None:
@@ -1738,13 +1734,6 @@ class TxLog:
             # ones instead of throwing (r13 advice)
             out = out.unionByName(f, allowMissingColumns=True)
         return out
-
-
-def _warehouse_dir(sf_dir: str, name: str) -> str:
-    # same (entry, sf, pid) isolation contract as sources/queries.py
-    from hive_clone_spark.sources.queries import _warehouse
-
-    return _warehouse(sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -4280,27 +4269,17 @@ def _stage_sorted_buckets(tl: TxLog, df: DataFrame, bucket_col: str, order_col: 
     as in ``TxLog.stage_data_partitioned``."""
     import pyarrow.parquet as pq
 
-    stage = tl.root / f"_stage-{uuid.uuid4().hex}"
-    (
-        spread(df, bucket_col)
-        .sortWithinPartitions(bucket_col, order_col)
-        .write.mode("overwrite")
-        .partitionBy(bucket_col)
-        .parquet(str(stage))
+    landed = sorted(
+        tl._land(
+            spread(df, bucket_col)
+            .sortWithinPartitions(bucket_col, order_col)
+            .write.partitionBy(bucket_col),
+            bucket_col,
+        )
     )
-    out = []
-    for vdir in sorted(
-        stage.glob(f"{bucket_col}=*"), key=lambda p: int(p.name.split("=")[1])
-    ):
-        bucket = int(vdir.name.split("=", 1)[1])
-        parts = sorted(vdir.glob("*.parquet"))
-        assert len(parts) == 1, f"bucket {bucket}: {len(parts)} files"
-        name = f"{uuid.uuid4().hex}.parquet"
-        n = pq.read_metadata(parts[0]).num_rows
-        os.replace(parts[0], tl.data_dir / name)
-        out.append((bucket, f"data/{name}", n))
-    shutil.rmtree(stage)
-    return out
+    buckets = [b for b, _ in landed]
+    assert len(set(buckets)) == len(buckets), f"buckets {buckets}: one file each"
+    return [(b, rel, pq.read_metadata(tl.root / rel).num_rows) for b, rel in landed]
 
 
 @register(

@@ -25,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_clone_spark.catalog import register_views, table
+from hive_clone_spark.catalog import register_views, scratch_dir, table
 from hive_clone_spark.registry import register
 
 
@@ -84,14 +84,9 @@ _DDL_DB = "hcs_ddl"
 
 
 def _ddl_location(name: str) -> str:
-    # pid-isolated like sources/queries._warehouse: the oracle suite,
-    # plan audit, bench, and driver all execute these entries, possibly
-    # concurrently — separate processes must not race rmtree-vs-read on
-    # a shared table location (catalogs are per-session; only the
-    # filesystem is shared)
-    return os.path.join(
-        tempfile.gettempdir(), "hcs_ddl_tables", f"{name}-{os.getpid()}"
-    )
+    """A catalog table's LOCATION: this process's cleared scratch dir
+    (catalogs are per-session; only the filesystem is shared)."""
+    return scratch_dir(name, "hcs_ddl")
 
 
 def _ensure_db(spark: SparkSession) -> None:
@@ -108,7 +103,6 @@ def _create_orders_by_priority(spark: SparkSession) -> str:
     fq = f"{_DDL_DB}.orders_by_priority"
     loc = _ddl_location("orders_by_priority")
     spark.sql(f"DROP TABLE IF EXISTS {fq}")
-    shutil.rmtree(loc, ignore_errors=True)
     spark.sql(
         f"""
         CREATE TABLE {fq}

@@ -1073,16 +1073,13 @@ def q212_stream_complete_leaderboard(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def q217_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     from hive_clone_spark.sources.queries import _warehouse
     from hive_clone_spark.streaming.streams import run_to_memory
 
     src_dir = _warehouse(sf_dir, "ckpt_q217_src")
-    ckpt_dir = _warehouse(sf_dir, f"ckpt_q217_wal_{os.getpid()}")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
+    ckpt_dir = _warehouse(sf_dir, "ckpt_q217_wal")
 
     ev = table(spark, sf_dir, "events").select(
         "event_id",

@@ -135,24 +135,17 @@ def test_persisted_index_roundtrip_reconstructs_graph(spark):
     sub-exhaustive ef, which the exactness oracle cannot see."""
     import pyspark.sql.functions as F
 
-    import os
-    import pathlib
-
     from hive_clone_spark import registry
-    from hive_clone_spark.catalog import table
+    from hive_clone_spark.catalog import scratch_dir, table
     from hive_clone_spark.pipeline.similarity import _HNSW_SHARDS
 
     registry.load_all_modules()
     sf = "/root/testdata/sf0.001"
+    # scratch_dir clears the dir on every call, so take its path first
+    # and read what the entry then leaves behind
+    idx_path = scratch_dir(sf, "hnsw_index")
     registry.QUERIES["p_knn_hnsw_persisted"](spark, sf).collect()
-
-    # _warehouse() CLEARS the dir on every call — recompute its path
-    # by hand to read what the entry left behind
-    repo = pathlib.Path(registry.__file__).resolve().parents[1]
-    idx_path = (
-        repo / "spark-warehouse" / "hnsw_index" / f"sf0.001-{os.getpid()}"
-    )
-    stored = spark.read.parquet(str(idx_path)).collect()
+    stored = spark.read.parquet(idx_path).collect()
     by_shard: dict[int, list] = {}
     for r in stored:
         by_shard.setdefault(int(r["shard"]), []).append(r)

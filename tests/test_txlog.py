@@ -745,34 +745,6 @@ def test_alter_add_column_is_metadata_only(spark, tmp_path):
         tl.alter_add_column(spark, "score", "DOUBLE")
 
 
-def test_legacy_schema_sidecar_still_readable(spark, tmp_path):
-    """Logs written before the versioned schema action carry only the
-    root _schema.json sidecar; table_schema must still resolve it when
-    no commit in range records a schema (and the data files are gone,
-    so the footer probe has nothing either)."""
-    import json as _json
-
-    tl = _mk(tmp_path)
-    # simulate a pre-r12 log: a remove-all commit with NO schema
-    # action anywhere, plus the legacy sidecar
-    tl.commit("append", add=[{"file": "data/ghost.parquet"}])
-    tl.commit("delete", remove=["data/ghost.parquet"])
-    (tl.root / "_schema.json").write_text(
-        _json.dumps(
-            {
-                "type": "struct",
-                "fields": [
-                    {"name": "k", "type": "long", "nullable": True,
-                     "metadata": {}}
-                ],
-            }
-        )
-    )
-    snap = tl.read(spark)
-    assert snap.count() == 0
-    assert snap.columns == ["k"]
-
-
 def test_aborted_stage_does_not_alter_schema(spark, tmp_path):
     """A writer that STAGES but never commits (aborted, or a losing
     optimistic writer) must not alter the table's logical schema — the

@@ -5,6 +5,9 @@
     effect once;
   * a checkpoint is durable (fsync'd) before ``vacuum`` deletes the
     commits below it, since it may then be the only copy of the fold;
+  * a published name is durable: ``_publish`` fsyncs the chain
+    directory after the link;
+  * staging that raises leaves no ``_stage-*`` dir behind;
   * source guards: ``transact`` is the only retry loop and the only
     ``except CommitConflictError`` across the ``TxLog`` class and
     ``sqlapi.txlog_sql_dml``, and ``TxLog._apply`` the only fold of
@@ -255,3 +258,55 @@ def test_apply_is_the_only_action_fold():
             if over_actions and _mutates(node.body):
                 folds.append(name)
     assert folds == ["TxLog._apply"] * 3
+
+
+def test_publish_fsyncs_the_chain_dir_after_the_link(tmp_path, monkeypatch):
+    """A commit's NAME is durable only once its directory is fsync'd:
+    the hard link that publishes it must be followed by an fsync of an
+    fd on the chain directory before ``commit`` returns."""
+    tl = TxLog(str(tmp_path / "log")).create()
+    events = []
+    real_fsync, real_link = os.fsync, os.link
+
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
+
+    def link(src, dst, *args, **kwargs):
+        events.append(("link", pathlib.Path(dst).name))
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "link", link)
+    assert tl.commit("append") == 0
+    linked = events.index(("link", "00000000.json"))
+    assert ("fsync", tl.log_dir.stat().st_ino) in events[linked:]
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [
+        lambda tl, df: tl.stage_data(df, n_files=2),
+        lambda tl, df: tl.stage_data_partitioned(df, "bucket", stats_col="o_orderkey"),
+        lambda tl, df: txlog._stage_sorted_buckets(tl, df, "bucket", "o_orderkey"),
+    ],
+    ids=["stage_data", "stage_data_partitioned", "_stage_sorted_buckets"],
+)
+def test_failed_stage_leaves_no_stage_dir(spark, tmp_path, monkeypatch, stage):
+    """Every staging path goes through one stage-and-land step, which
+    removes its ``_stage-*`` dir even when staging raises (here: the
+    move into ``data/`` fails, as on a full disk). ``vacuum`` never
+    looks there, so a leaked stage dir would stay forever."""
+    tl = TxLog(str(tmp_path / "log")).create()
+    df = spark.range(8).select(
+        F.col("id").alias("o_orderkey"), (F.col("id") % 2).alias("bucket")
+    )
+
+    def replace(src, dst):
+        raise OSError(28, "No space left on device")
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(OSError, match="No space left"):
+        stage(tl, df)
+    assert list(tl.root.glob("_stage-*")) == []
+    assert list(tl.data_dir.iterdir()) == []

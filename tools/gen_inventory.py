@@ -4,8 +4,8 @@ The registry (hive_clone_spark.registry.QUERIES/ORACLE) is the single
 source of truth for what is implemented and oracle-gated; COVERAGE.md
 carries human-written context PLUS one generated table, delimited by
 marker comments. This script emits that table from the registry itself
-— module, file:line, oracle status — so the inventory cannot drift
-from the code.
+— module, path::function, oracle status — so the inventory cannot
+drift from the code, and a moved line does not force a regeneration.
 
 Usage:
     python tools/gen_inventory.py --write   # regenerate in place
@@ -80,7 +80,6 @@ def collect_rows() -> list[tuple[str, str, str, str]]:
         module = inspect.getmodule(fn)
         mod = module.__name__
         src = pathlib.Path(inspect.getsourcefile(fn)).resolve()
-        line = inspect.getsourcelines(fn)[1]
         # fallback: first line of the module docstring, so a module
         # missing from _CATEGORY gets a readable name instead of a raw
         # dotted path (the round-8 verdict's recurring cosmetic nit —
@@ -91,7 +90,7 @@ def collect_rows() -> list[tuple[str, str, str, str]]:
             first = doc.splitlines()[0].rstrip(".:") if doc else ""
             cat = first or mod
         oracle = "full oracle" if name in registry.ORACLE else "rows-only"
-        rows.append((cat, name, f"{src.relative_to(REPO)}:{line}", oracle))
+        rows.append((cat, name, f"{src.relative_to(REPO)}::{fn.__name__}", oracle))
     rows.sort(key=lambda r: (r[0], r[1]))
     return rows
 
