@@ -49,7 +49,7 @@ import os
 import pathlib
 import shutil
 import uuid
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,9 +61,24 @@ from hive_clone_spark.registry import register
 from hive_clone_spark.session import local_rows
 
 _CHECKPOINT_EVERY = 8
-# a fold's fields, in the order _replay returns them; the names are the
-# checkpoint file's keys
-_FOLD_KEYS = ("active", "stats", "dvs", "constraints", "schema", "meta")
+
+
+class Snapshot(NamedTuple):
+    """One version's fold of the log (``TxLog.snapshot``). The field
+    names are the checkpoint file's keys."""
+
+    active: set[str]  # data files
+    stats: dict[str, dict]  # data file -> {col: [min, max]}
+    dvs: dict[str, str]  # data file -> DV sidecar relpath
+    constraints: dict[str, str]  # name -> SQL predicate
+    schema: dict | None  # logical schema JSON
+    meta: dict  # column mapping, identity high-water mark, ...
+    txns: set[str]  # application txn ids of commit_idempotent
+    version: int  # the version folded up to; -1 for the empty table
+
+    @classmethod
+    def empty(cls) -> "Snapshot":
+        return cls(set(), {}, {}, {}, None, {}, set(), -1)
 
 
 def _publish(path: pathlib.Path, payload: dict) -> None:
@@ -161,14 +176,12 @@ class TxLog:
         # schema of the most recent stage_data* on THIS writer, pending
         # publication by its commit (see the schema-record section)
         self._staged_schema: dict | None = None
-        # per-version fold memo: a commit, once written, is immutable,
-        # so _replay(v) is a pure function of v while v exists. Only
-        # THIS handle's vacuum drops entries: another TxLog on the same
-        # root keeps serving memoized folds of versions vacuumed here.
-        # The change feed and the version ledger replay the same
-        # versions repeatedly — O(window x log) driver JSON parsing
-        # without this (r13 advice).
-        self._replay_cache: dict[int, tuple] = {}
+        # per-version fold memo (see snapshot): a commit, once written,
+        # is immutable, so the fold at v is a pure function of v while
+        # v exists. The change feed and the version ledger replay the
+        # same versions repeatedly — O(window x log) driver JSON
+        # parsing without this (r13 advice).
+        self._folds: dict[int, Snapshot] = {}
 
     # -- log layout ---------------------------------------------------
     @staticmethod
@@ -203,66 +216,53 @@ class TxLog:
             return json.load(f)
 
     # -- snapshot reconstruction --------------------------------------
-    def _replay(
-        self, version: int
-    ) -> tuple[
-        set[str],
-        dict[str, dict],
-        dict[str, str],
-        dict[str, str],
-        dict | None,
-        dict,
-    ]:
-        """Fold (active files, per-file stats, per-file deletion
-        vectors, constraints, logical schema, table metadata) up to
-        ``version``, starting from the nearest checkpoint at or below
-        it. Stats, DV bindings, the schema and the meta dict ride in
-        checkpoints too, so replay NEVER reads commits below the
-        checkpoint floor — after vacuum() those JSONs are gone, and a
-        replay that started at commit 0 would crash on them (and lose
-        any stats they carried). One fold serves every accessor
-        (table_meta delegates here), so a snapshot read parses the
-        checkpoint JSON exactly once.
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        """The fold of commits 0..``version`` (default latest): the one
+        way anything reads a snapshot. A version below 0 is the empty
+        table's fold; a version with no commit on disk (vacuumed or
+        never written) raises ValueError.
 
-        Each commit folds by ``_apply``'s rules. A ``dv`` action's
-        sidecar already holds the merged old + new positions (Delta's
-        DV protocol does the same superset-replace). A ``schema``
-        action (Delta's metaData, Iceberg's per-snapshot schema-id) is
-        versioned per commit, so time travel to an empty snapshot
-        resolves the schema AS OF that version, never a later
-        writer's."""
-        if version in self._replay_cache:
-            # deep copies: callers treat the fold, down to each file's
-            # stats dict and the schema, as their own
-            return copy.deepcopy(self._replay_cache[version])
-        state, start = {
-            "active": set(), "stats": {}, "dvs": {},
-            "constraints": {}, "schema": None, "meta": {},
-        }, 0
+        The fold starts from the nearest checkpoint at or below
+        ``version``. Every field rides in checkpoints, so it NEVER
+        reads commits below the checkpoint floor: after vacuum() those
+        JSONs are gone, and a fold that started at commit 0 would
+        crash on them (and lose the stats and txn ids they carried).
+        Each commit folds by ``_apply``'s rules. A fold is memoized per
+        version (a commit, once written, is immutable); callers get a
+        deep copy, down to each file's stats dict and the schema."""
+        vs = self.versions()
+        if version is None:
+            version = vs[-1] if vs else -1
+        if version < 0:
+            return Snapshot.empty()
+        if version not in vs:
+            raise ValueError(
+                f"txlog: no commit {version} (vacuumed or never written)"
+            )
+        if version in self._folds:
+            return copy.deepcopy(self._folds[version])
+        state, start = Snapshot.empty()._asdict(), 0
         for v in range(version, -1, -1):
             ckpt = self.log_dir / f"{v:08d}.checkpoint.json"
             if ckpt.exists():
                 with open(ckpt) as f:
                     d = json.load(f)
-                state.update((k, d[k]) for k in _FOLD_KEYS if k in d)
+                state.update((k, d[k]) for k in Snapshot._fields if k in d)
                 state["active"] = set(state["active"])
+                state["txns"] = set(state["txns"])
                 start = v + 1
                 break
         for v in range(start, version + 1):
-            try:
-                c = self._read_commit(v)
-            except FileNotFoundError:
-                # below the vacuum cutoff with no checkpoint to fold
-                # from: a clean error, not a FileNotFoundError leak
-                # (active_files pre-checks versions(); dvs/constraints/
-                # table_schema reach here directly)
-                raise ValueError(
-                    f"txlog: no commit {v} (vacuumed or never written)"
-                ) from None
-            self._apply(state, c)
-        fold = tuple(state[k] for k in _FOLD_KEYS)
-        self._replay_cache[version] = copy.deepcopy(fold)
+            self._apply(state, self._read_commit(v))
+        fold = Snapshot(**{**state, "version": version})
+        self._folds[version] = copy.deepcopy(fold)
         return fold
+
+    def _replay(self, version: int) -> tuple:
+        """``snapshot(version)`` as the 6-tuple (active, stats, dvs,
+        constraints, schema, meta) that the q144, q145 and q210 bodies
+        unpack."""
+        return tuple(self.snapshot(version))[:6]
 
     @staticmethod
     def _apply(state: dict, c: dict) -> None:
@@ -273,7 +273,16 @@ class TxLog:
         ``dv: None`` UNBINDS it (Delta's null deletionVector on a
         re-add — restore() uses it to re-expose rows a post-target MoR
         delete had hidden). ``constraints``, ``schema`` and ``meta``
-        replace the previous value whole."""
+        replace the previous value whole. A ``txn`` id joins ``txns``,
+        which only grows: like Delta's SetTransaction it survives
+        checkpoints and vacuum, and restore() never rolls it back.
+
+        A ``dv`` action's sidecar already holds the merged old + new
+        positions (Delta's DV protocol does the same superset-replace).
+        A ``schema`` action (Delta's metaData, Iceberg's per-snapshot
+        schema-id) is versioned per commit, so time travel to an empty
+        snapshot resolves the schema AS OF that version, never a later
+        writer's."""
         for a in c.get("add", []):
             state["active"].add(a["file"])
             if "stats" in a:
@@ -290,18 +299,13 @@ class TxLog:
         for k in ("constraints", "schema", "meta"):
             if k in c:
                 state[k] = c[k]
+        if "txn" in c:
+            state["txns"].add(c["txn"])
 
     def active_files(self, version: int | None = None) -> list[str]:
-        """Fold add/remove actions up to ``version`` (default latest),
-        starting from the nearest checkpoint at or below it."""
-        if version is None:
-            version = self.latest_version()
-        if version < 0:
-            return []
-        if version not in set(self.versions()):
-            raise ValueError(f"txlog: no commit {version}")
-        files, _, _, _, _, _ = self._replay(version)
-        return sorted(files)
+        """The data files of the snapshot at ``version`` (default
+        latest)."""
+        return sorted(self.snapshot(version).active)
 
     def history(self) -> list[dict]:
         return [
@@ -332,13 +336,8 @@ class TxLog:
         checkpoints), else None."""
         from pyspark.sql.types import StructType
 
-        if version is None:
-            version = self.latest_version()
-        if version >= 0 and version in set(self.versions()):
-            _, _, _, _, schema, _ = self._replay(version)
-            if schema is not None:
-                return StructType.fromJson(schema)
-        return None
+        schema = self.snapshot(version).schema
+        return None if schema is None else StructType.fromJson(schema)
 
     def empty_df(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         schema = self.table_schema(spark, version)
@@ -366,7 +365,7 @@ class TxLog:
         dtype = spark.sql(f"SELECT CAST(NULL AS {ddl_type})").schema[0].dataType
 
         def attempt(expected: int) -> int:
-            schema = self.table_schema(spark, expected if expected >= 0 else None)
+            schema = self.table_schema(spark, expected)
             if schema is None:
                 raise ValueError("txlog: ALTER on a table with no schema")
             if name in schema.fieldNames():
@@ -409,7 +408,7 @@ class TxLog:
         from pyspark.sql.types import StructField, StructType
 
         def attempt(expected: int) -> int:
-            schema = self.table_schema(spark, expected if expected >= 0 else None)
+            schema = self.table_schema(spark, expected)
             if schema is None:
                 raise ValueError("txlog: ALTER on a table with no schema")
             if old not in schema.fieldNames():
@@ -452,7 +451,7 @@ class TxLog:
         from pyspark.sql.types import StructType
 
         def attempt(expected: int) -> int:
-            schema = self.table_schema(spark, expected if expected >= 0 else None)
+            schema = self.table_schema(spark, expected)
             if schema is None:
                 raise ValueError("txlog: ALTER on a table with no schema")
             if name not in schema.fieldNames():
@@ -604,17 +603,13 @@ class TxLog:
         [lo, hi] (files without stats are scanned conservatively).
         Returns (all_active, chosen). Pure log-metadata work — no data
         file is opened to decide."""
-        if version is None:
-            version = self.latest_version()
-        if version not in set(self.versions()):
-            raise ValueError(f"txlog: no commit {version}")
-        active, stats, _, _, _, _ = self._replay(version)
+        snap = self.snapshot(version)
         chosen = []
-        for f in sorted(active):
-            s = stats.get(f, {}).get(col)
+        for f in sorted(snap.active):
+            s = snap.stats.get(f, {}).get(col)
             if s is None or (s[0] <= hi and s[1] >= lo):
                 chosen.append(f)
-        return sorted(active), chosen
+        return sorted(snap.active), chosen
 
     def commit(
         self,
@@ -715,13 +710,11 @@ class TxLog:
         # never needs commits below the checkpoint floor. A checkpoint
         # is a pure function of its version, so one already in place
         # (FileExistsError) is this one.
-        state = dict(zip(_FOLD_KEYS, self._replay(version)))
+        state = self.snapshot(version)._asdict()
         state["active"] = sorted(state["active"])
+        state["txns"] = sorted(state["txns"])
         try:
-            _publish(
-                self.log_dir / f"{version:08d}.checkpoint.json",
-                {"version": version, **state},
-            )
+            _publish(self.log_dir / f"{version:08d}.checkpoint.json", state)
         except FileExistsError:
             pass
 
@@ -731,17 +724,14 @@ class TxLog:
         or below it, FULL-REPLACEMENT semantics like constraints.
         Folded into checkpoints, so replay starts at the checkpoint
         floor and survives vacuum."""
-        if version is None:
-            version = self.latest_version()
-        if version < 0:
-            return {}
-        return self._replay(version)[5]
+        return self.snapshot(version).meta
 
     def txn_applied(self, txn: str) -> bool:
         """Has a commit bearing this application txn id already landed?
-        (Production formats keep the latest txn per app in checkpoints;
-        this log scans its bounded history — same contract.)"""
-        return any(self._read_commit(v).get("txn") == txn for v in self.versions())
+        A lookup in the latest fold, whose ``txns`` checkpoints carry,
+        so the record outlives vacuum (Delta keeps SetTransaction
+        actions in checkpoints for the same reason)."""
+        return txn in self.snapshot().txns
 
     def commit_idempotent(
         self,
@@ -754,10 +744,20 @@ class TxLog:
         pattern): a redelivered batch carrying an already-committed txn
         id is DROPPED — its staged files stay unreferenced (vacuum
         fodder) and the table state is unchanged. Returns the committed
-        version, or None when the txn was already applied."""
-        if self.txn_applied(txn):
-            return None
-        return self.commit(op, add=add, remove=remove, txn=txn)
+        version, or None when the txn was already applied.
+
+        Check and commit share one ``transact`` attempt: a writer that
+        lands the same txn after ``expected`` is either seen by the
+        check or makes the commit conflict, and the retry sees it."""
+
+        def attempt(expected: int) -> int | None:
+            if self.txn_applied(txn):
+                return None
+            return self.commit(
+                op, add=add, remove=remove, txn=txn, expected_version=expected
+            )
+
+        return self.transact(attempt)
 
     def append(self, df: DataFrame, n_files: int | None = None, op: str = "append") -> int:
         return self.commit(op, add=self.stage_data(df, n_files))
@@ -765,19 +765,15 @@ class TxLog:
     def overwrite(self, df: DataFrame, n_files: int | None = None, op: str = "overwrite") -> int:
         """Transactional rewrite: replace the whole active set in one
         commit — the shape MERGE (q44) and compaction (q79) publish."""
-        removes = self.active_files() if self.latest_version() >= 0 else []
+        removes = self.active_files()
         return self.commit(op, add=self.stage_data(df, n_files), remove=removes)
 
     # -- deletion vectors (merge-on-read DELETE) ----------------------
     def dvs(self, version: int | None = None) -> dict[str, str]:
         """Active deletion-vector bindings (data file -> DV sidecar
         relpath) at ``version``."""
-        if version is None:
-            version = self.latest_version()
-        if version < 0:
-            return {}
-        active, _, dvs, _, _, _ = self._replay(version)
-        return {f: p for f, p in dvs.items() if f in active}
+        snap = self.snapshot(version)
+        return {f: p for f, p in snap.dvs.items() if f in snap.active}
 
     def _read_dv(self, relpath: str) -> list[int]:
         with open(self.root / relpath) as f:
@@ -874,7 +870,7 @@ class TxLog:
                 cand = self.active_files(expected)
             if not cand:
                 return expected
-            _, _, dvs, _, _, _ = self._replay(expected)
+            dvs = self.snapshot(expected).dvs
             # basename keying, mapped back to the ACTIVE file key: on a
             # shallow clone the active set holds absolute source paths,
             # and a binding keyed any other way would be invisible to
@@ -912,12 +908,7 @@ class TxLog:
         """Active table CHECK constraints (name -> SQL predicate) at
         ``version`` — table metadata folded through replay and
         checkpoints like any other action."""
-        if version is None:
-            version = self.latest_version()
-        if version < 0:
-            return {}
-        _, _, _, cons, _, _ = self._replay(version)
-        return cons
+        return self.snapshot(version).constraints
 
     def set_constraints(
         self,
@@ -1022,8 +1013,8 @@ class TxLog:
         """Branch snapshot = main fold at the base version, then the
         branch's own commits applied with the same action rules."""
         # a branch cut from an empty table (base -1) starts from the
-        # empty fold, which is what _replay(-1) returns
-        state = dict(zip(_FOLD_KEYS, self._replay(self.branch_base(name))))
+        # empty fold, which is what snapshot(-1) returns
+        state = self.snapshot(self.branch_base(name))._asdict()
         chain = self._branch_dir(name) / "commits"
         for v in self._chain_versions(chain):
             if bversion is not None and v > bversion:
@@ -1082,7 +1073,7 @@ class TxLog:
         stage_data can never leak into the publish commit."""
         bfiles, bstats, _, bschema = self.branch_replay(name)
         base = self.branch_base(name)
-        base_schema = self._replay(base)[4] if base >= 0 else None
+        base_schema = self.snapshot(base).schema
 
         # "changed" must be STRUCTURAL (names + types), not raw-dict
         # equality: a branch writer restaging frames derived from
@@ -1103,7 +1094,7 @@ class TxLog:
 
         if _shape(bschema) == _shape(base_schema):
             bschema = None  # no branch-side schema change to carry
-        main = set(self.active_files()) if self.latest_version() >= 0 else set()
+        main = self.snapshot().active
         adds = [
             {"file": f, **({"stats": bstats[f]} if f in bstats else {})}
             for f in sorted(bfiles - main)
@@ -1125,24 +1116,24 @@ class TxLog:
         commits themselves (a checkpoint is first pinned at the cutoff
         so retained replay never needs them). Time travel below the
         cutoff becomes a clean error; this is the trade every
-        production format's VACUUM makes explicit. The error is this
-        handle's only: another TxLog on the same root still serves the
-        folds it memoized for vacuumed versions (files may be gone)."""
+        production format's VACUUM makes explicit."""
         if retain_versions < 1:
             raise ValueError("txlog: must retain at least 1 version")
-        latest = self.latest_version()
-        if latest < 0:
+        versions = self.versions()
+        if not versions:
             return {"cutoff": -1, "n_data_files_removed": 0, "n_commits_removed": 0}
         # never below the oldest commit left: an earlier vacuum already
         # dropped what lies under it and pinned a checkpoint at it
-        versions = self.versions()
-        cutoff = max(versions[0], latest - retain_versions + 1)
-        retained = [v for v in versions if v >= cutoff]
+        cutoff = max(versions[0], versions[-1] - retain_versions + 1)
         referenced: set[str] = set()
         referenced_dvs: set[str] = set()
-        for v in retained:
-            referenced.update(self.active_files(v))
-            referenced_dvs.update(self.dvs(v).values())
+        for v in versions:
+            if v >= cutoff:
+                snap = self.snapshot(v)
+                referenced |= snap.active
+                referenced_dvs.update(
+                    p for f, p in snap.dvs.items() if f in snap.active
+                )
         # pin the cutoff checkpoint (incl. stats) BEFORE dropping older
         # commits, so retained replay never reads below the cutoff
         ckpt = self.log_dir / f"{cutoff:08d}.checkpoint.json"
@@ -1159,17 +1150,17 @@ class TxLog:
                     dvf.unlink()
                     n_files += 1
         n_commits = 0
-        for v in self.versions():
+        for v in versions:
             if v < cutoff:
                 (self.log_dir / self._commit_name(v)).unlink()
                 old_ckpt = self.log_dir / f"{v:08d}.checkpoint.json"
                 if old_ckpt.exists():
                     old_ckpt.unlink()
                 n_commits += 1
-        # vacuumed versions must ERROR on access, not serve a memoized
-        # pre-vacuum fold — drop their cache entries
-        self._replay_cache = {
-            v: r for v, r in self._replay_cache.items() if v >= cutoff
+        # vacuumed versions error on access (snapshot checks that the
+        # commit is on disk); their memoized folds are dead weight
+        self._folds = {
+            v: r for v, r in self._folds.items() if v >= cutoff
         }
         return {
             "cutoff": cutoff,
@@ -1189,7 +1180,8 @@ class TxLog:
 
         The identity high-water mark (``identity_next``) is NOT rolled
         back — Delta makes the same carve-out — so ids handed out by
-        undone commits are never re-issued.
+        undone commits are never re-issued. Nor is the txn record
+        (``txns``): a batch an undone commit applied stays applied.
 
         Guards: restoring below the vacuum cutoff errors (the target
         version is no longer replayable); a target data file or DV
@@ -1202,20 +1194,21 @@ class TxLog:
         """
 
         def attempt(expected: int) -> int:
-            if to_version not in set(self.versions()):
+            try:
+                tgt = self.snapshot(to_version)
+            except ValueError:
+                tgt = Snapshot.empty()
+            if tgt.version < 0:
                 raise ValueError(
                     f"txlog: cannot restore to version {to_version} — "
                     "no such commit (vacuumed or never written)"
                 )
-            tgt_files, tgt_stats, tgt_dvs, tgt_cons, tgt_schema, _tm = (
-                self._replay(to_version)
-            )
-            cur_files, _, cur_dvs, _, _, cur_meta = self._replay(expected)
+            cur = self.snapshot(expected)
             missing = [
-                f for f in sorted(tgt_files)
+                f for f in sorted(tgt.active)
                 if not (self.root / f).exists()
             ] + [
-                d for _, d in sorted(tgt_dvs.items())
+                d for _, d in sorted(tgt.dvs.items())
                 if not (self.root / d).exists()
             ]
             if missing:
@@ -1226,25 +1219,25 @@ class TxLog:
                 )
             add = [
                 {"file": f, **(
-                    {"stats": tgt_stats[f]} if f in tgt_stats else {}
+                    {"stats": tgt.stats[f]} if f in tgt.stats else {}
                 )}
-                for f in sorted(tgt_files - cur_files)
+                for f in sorted(tgt.active - cur.active)
             ]
-            remove = sorted(cur_files - tgt_files)
+            remove = sorted(cur.active - tgt.active)
             # net DV diff over files live in the TARGET snapshot:
             # rebind where the target binding differs, unbind (None)
             # where the target had none but the current state does
             dv_actions = []
-            for f in sorted(tgt_files):
-                tgt_dv = tgt_dvs.get(f)
-                cur_dv = cur_dvs.get(f) if f in cur_files else None
+            for f in sorted(tgt.active):
+                tgt_dv = tgt.dvs.get(f)
+                cur_dv = cur.dvs.get(f) if f in cur.active else None
                 if tgt_dv != cur_dv:
                     dv_actions.append({"file": f, "dv": tgt_dv})
-            # tgt_schema None (no schema action at the target): publish
+            # tgt.schema None (no schema action at the target): publish
             # NO schema action rather than stamp a schema the target
             # never had into the restore.
-            tgt_meta = dict(_tm)
-            cur_next = cur_meta.get("identity_next")
+            tgt_meta = tgt.meta
+            cur_next = cur.meta.get("identity_next")
             if cur_next is not None:
                 tgt_meta = {
                     **tgt_meta,
@@ -1258,9 +1251,9 @@ class TxLog:
                 add=add,
                 remove=remove,
                 dv=dv_actions or None,
-                constraints=tgt_cons,
+                constraints=tgt.constraints,
                 meta=tgt_meta,
-                schema=tgt_schema,
+                schema=tgt.schema,
                 expected_version=expected,
             )
 
@@ -1292,17 +1285,12 @@ class TxLog:
         file is DV-bound (nothing to purge)."""
 
         def attempt(expected: int) -> int:
-            if expected < 0:
-                return expected
-            files, _, dvs_map, _, _, _ = self._replay(expected)
-            bound = sorted(f for f in files if f in dvs_map)
+            dvs_map = self.dvs(expected)
+            bound = sorted(dvs_map)
             if not bound:
                 return expected
             survivors = self._read_files(
-                spark,
-                bound,
-                {f: dvs_map[f] for f in bound},
-                version=expected,
+                spark, bound, dvs_map, version=expected
             )
             out = self.to_physical(survivors, expected)
             adds = (
@@ -1330,13 +1318,9 @@ class TxLog:
         production reader does with a pushed-down per-file bitmap
         filter; positions are scan-order stable because data files are
         immutable."""
-        if version is None:
-            version = self.latest_version()
+        snap = self.snapshot(version)
         return self._read_files(
-            spark,
-            self.active_files(version),
-            self.dvs(version),
-            version=version,
+            spark, sorted(snap.active), snap.dvs, version=snap.version
         )
 
     def _read_files(
@@ -1364,8 +1348,7 @@ class TxLog:
             # logical names happens after any DV filtering below —
             # still a metadata-only projection, zero extra passes.
             ls, mapping = self._log_schema_at(version)
-            if ls is not None:
-                reader = reader.schema(ls)
+            reader = reader.schema(ls)
         df = reader.parquet(*files)
         active_dvs = {f: p for f, p in dvs.items() if f in set(rel_files)}
         return self._rename(
@@ -1375,28 +1358,24 @@ class TxLog:
 
     def _log_schema_at(
         self, version: int
-    ) -> tuple["StructType | None", dict[str, str]]:
+    ) -> tuple["StructType", dict[str, str]]:
         """(physical read schema, logical->physical rename mapping) as
         of ``version``, resolved from the LOG: the logical schema at
         that version with column-mapped fields renamed to the PHYSICAL
-        names the data files carry. ``(None, {})`` when the log holds
-        no schema action at ``version`` (pre-schema-action legacy
-        logs) — callers fall back to footer inference. ONE rule shared
-        by _read_files and _scan_files_at (r13 advice: two verbatim
-        copies of the rename rule could drift); the _replay memo makes
-        repeated per-version resolution (change feed windows) a dict
-        hit, not a log re-fold."""
+        names the data files carry. ONE rule shared by _read_files and
+        _scan_files_at (r13 advice: two verbatim copies of the rename
+        rule could drift); the snapshot memo makes repeated
+        per-version resolution (change feed windows) a dict hit, not a
+        log re-fold."""
         from pyspark.sql.types import StructField, StructType
 
-        if not (0 <= version and version in set(self.versions())):
-            return None, {}
-        _, _, _, _, logical, vmeta = self._replay(version)
-        if logical is None:
-            return None, {}
-        ls = StructType.fromJson(logical)
+        snap = self.snapshot(version)
+        if snap.schema is None:
+            raise ValueError(f"txlog: no recorded schema at version {version}")
+        ls = StructType.fromJson(snap.schema)
         mapping = {
             k: v
-            for k, v in vmeta.get("mapping", {}).items()
+            for k, v in snap.meta.get("mapping", {}).items()
             if k in ls.fieldNames() and v != k
         }
         if mapping:
@@ -1419,13 +1398,10 @@ class TxLog:
         rule). The parquet reader NULL-fills columns a file predates —
         what ``option(mergeSchema)`` reconstructed by reading every
         footer (a small Spark job per read site; at scale, a pass over
-        every file's metadata). Falls back to mergeSchema when the log
-        carries no schema at ``version`` (pre-schema-action logs)."""
+        every file's metadata)."""
         files = [str(self.root / f) for f in rel_files]
         ls, _ = self._log_schema_at(version)
-        if ls is not None:
-            return spark.read.schema(ls).parquet(*files)
-        return spark.read.option("mergeSchema", "true").parquet(*files)
+        return spark.read.schema(ls).parquet(*files)
 
     def _apply_dvs(
         self, spark: SparkSession, df: DataFrame, dvs: dict[str, str]
@@ -3769,18 +3745,17 @@ def shallow_clone(src: TxLog, dest_root: str, version: int | None = None) -> TxL
     """Create a new TxLog at ``dest_root`` whose commit 0 references
     the source snapshot's files by absolute path (stats and DV
     bindings carried along; nothing is copied)."""
-    at = src.latest_version() if version is None else version
-    files, stats, dvs, cons, _schema, _meta = src._replay(at)
+    snap = src.snapshot(version)
     add = []
-    for f in sorted(files):
+    for f in sorted(snap.active):
         a = {"file": str((src.root / f).resolve())}
-        if f in stats:
-            a["stats"] = stats[f]
+        if f in snap.stats:
+            a["stats"] = snap.stats[f]
         add.append(a)
     dv = [
         {"file": str((src.root / f).resolve()), "dv": str((src.root / p).resolve())}
-        for f, p in sorted(dvs.items())
-        if f in files
+        for f, p in sorted(snap.dvs.items())
+        if f in snap.active
     ]
     dest = TxLog(dest_root).create()
     # the clone inherits the source's logical schema, table metadata
@@ -3788,14 +3763,13 @@ def shallow_clone(src: TxLog, dest_root: str, version: int | None = None) -> TxL
     # exposes physical names / NULL-fills the logical ones), and CHECK
     # constraints as of the fork — a later change in the source must
     # not leak into the clone
-    meta = src.table_meta(at)
     dest.commit(
-        f"clone-from-v{at}",
+        f"clone-from-v{snap.version}",
         add=add,
         dv=dv or None,
-        schema=_schema,
-        meta=meta or None,
-        constraints=cons or None,
+        schema=snap.schema,
+        meta=snap.meta or None,
+        constraints=snap.constraints or None,
     )
     return dest
 

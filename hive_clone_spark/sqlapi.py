@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,10 +89,11 @@ def _ddl_location(name: str) -> str:
 
 
 def _ensure_db(spark: SparkSession) -> None:
-    loc = os.path.join(tempfile.gettempdir(), "hcs_ddl_tables", "_db")
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {_DDL_DB} LOCATION '{loc}'"
-    )
+    """The DDL database, located in this process's scratch dir. The
+    location is built only when the database is missing: scratch_dir
+    clears the dir on every call."""
+    if not spark.catalog.databaseExists(_DDL_DB):
+        spark.sql(f"CREATE DATABASE {_DDL_DB} LOCATION '{_ddl_location('_db')}'")
 
 
 def _create_orders_by_priority(spark: SparkSession) -> str:

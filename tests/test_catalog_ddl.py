@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from hive_clone_spark.sqlapi import (
     _DDL_DB,
     _create_orders_by_priority,
+    _ddl_location,
     _ensure_db,
 )
 
@@ -52,14 +53,9 @@ def test_ctas_insert_showtables_describe_read_drop(spark, sf_dir):
 def test_saveastable_roundtrip_and_recreate(spark, sf_dir):
     """The DataFrame-writer path: saveAsTable overwrite must be
     idempotent and the catalog schema must match the frame's."""
-    import os
-    import shutil
-    import tempfile
-
     _ensure_db(spark)
-    loc = os.path.join(tempfile.gettempdir(), "hcs_ddl_tables", "t_test")
     spark.sql(f"DROP TABLE IF EXISTS {_DDL_DB}.t_test")
-    shutil.rmtree(loc, ignore_errors=True)
+    loc = _ddl_location("t_test")
     df = spark.range(5).select(
         F.col("id").cast("int").alias("k"), F.lit("x").alias("v")
     )

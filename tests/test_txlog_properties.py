@@ -192,21 +192,40 @@ def test_branch_wap_publish_matches_model(
 
 @settings(max_examples=25, deadline=None)
 @given(
-    # (txn_id, redeliver) — duplicates across the sequence ARE the test
-    batches=st.lists(
-        st.tuples(st.integers(min_value=0, max_value=5), st.booleans()),
+    # (txn_id, redeliver) deliveries — duplicates across the sequence
+    # ARE the test — and ("vacuum", retain_versions) steps; sequences
+    # are long enough for several checkpoints
+    steps=st.lists(
+        st.one_of(
+            st.tuples(
+                st.integers(min_value=0, max_value=2 * _CHECKPOINT_EVERY),
+                st.booleans(),
+            ),
+            st.tuples(st.just("vacuum"), st.integers(min_value=1, max_value=3)),
+        ),
         min_size=1,
-        max_size=10,
+        max_size=4 * _CHECKPOINT_EVERY,
     )
 )
-def test_commit_idempotent_exactly_once(tmp_path_factory, batches):
+# batch 0 lands, then enough batches for a checkpoint, a vacuum that
+# drops batch 0's commit, and batch 0 redelivered
+@example(
+    steps=[(t, t == 0) for t in range(_CHECKPOINT_EVERY + 1)]
+    + [("vacuum", 1), (0, False)]
+)
+def test_commit_idempotent_exactly_once(tmp_path_factory, steps):
     """Exactly-once sink contract: a redelivered batch (same txn id)
     is dropped — the table state and version count advance only on
-    FIRST delivery, no matter how deliveries interleave."""
+    FIRST delivery, no matter how deliveries interleave, and no matter
+    whether checkpoints and vacuum have dropped the commit that
+    applied it."""
     tl = TxLog(str(tmp_path_factory.mktemp("txidem") / "log")).create()
     counter = 0
     applied: dict[int, str] = {}  # txn -> the file its first delivery added
-    for txn, redeliver in batches:
+    for txn, arg in steps:
+        if txn == "vacuum":
+            tl.vacuum(retain_versions=arg)
+            continue
         name = f"data/f{counter:04d}.parquet"
         counter += 1
         v = tl.commit_idempotent(f"app-{txn}", "append", add=[{"file": name}])
@@ -215,7 +234,7 @@ def test_commit_idempotent_exactly_once(tmp_path_factory, batches):
         else:
             assert v is not None
             applied[txn] = name
-        if redeliver:  # immediate duplicate delivery
+        if arg:  # redeliver: an immediate duplicate delivery
             assert tl.commit_idempotent(
                 f"app-{txn}", "append", add=[{"file": name}]
             ) is None

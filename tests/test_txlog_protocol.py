@@ -2,7 +2,8 @@
 
   * every read-modify-write path retries a lost optimistic race through
     ``TxLog.transact``: it keeps the racing commit and applies its own
-    effect once;
+    effect once; ``commit_idempotent`` lands a txn once even when
+    another handle commits the same txn mid-attempt;
   * a checkpoint is durable (fsync'd) before ``vacuum`` deletes the
     commits below it, since it may then be the only copy of the fold;
   * a published name is durable: ``_publish`` fsyncs the chain
@@ -10,8 +11,10 @@
   * staging that raises leaves no ``_stage-*`` dir behind;
   * source guards: ``transact`` is the only retry loop and the only
     ``except CommitConflictError`` across the ``TxLog`` class and
-    ``sqlapi.txlog_sql_dml``, and ``TxLog._apply`` the only fold of
-    add/remove/dv actions. Registered entry bodies are not covered.
+    ``sqlapi.txlog_sql_dml``, ``TxLog._apply`` the only fold of
+    add/remove/dv actions, and no reader but ``TxLog._replay`` takes a
+    fold apart by position; ``txn_applied`` opens no commit file.
+    Registered entry bodies are not covered.
 """
 
 from __future__ import annotations
@@ -60,6 +63,16 @@ def _setup_constraint(spark, tl):
 
 # path -> (setup, action, expected op, check(snapshot rows, log))
 _RMW_PATHS = {
+    "commit_idempotent": (
+        None,
+        lambda spark, tl: tl.commit_idempotent(
+            "batch-0", "stream-append", add=_stage(tl, _rows(spark, [_M + 1]))
+        ),
+        "stream-append",
+        lambda rows, tl: tl.txn_applied("batch-0")
+        and sorted(r["o_orderkey"] for r in rows)
+        == list(range(1, _M + 2)) + [_RACER],
+    ),
     "alter_drop_column": (
         None,
         lambda spark, tl: tl.alter_drop_column(spark, "flag"),
@@ -164,6 +177,29 @@ def test_rmw_path_retries_a_lost_race_once(spark, tmp_path, path):
     assert check(rows, tl)
 
 
+def test_commit_idempotent_same_txn_race_lands_once(tmp_path, monkeypatch):
+    """A second handle commits the SAME txn between this handle's check
+    and its commit: the commit conflicts, the retry's check sees the
+    txn, and the txn lands exactly once."""
+    tl = TxLog(str(tmp_path / "log")).create()
+    other = TxLog(str(tl.root))
+    real_check, raced = TxLog.txn_applied, []
+
+    def check_then_race(self, txn):
+        applied = real_check(self, txn)
+        if self is tl and not raced:
+            raced.append(
+                other.commit_idempotent(txn, "append", add=[{"file": "data/b.parquet"}])
+            )
+        return applied
+
+    monkeypatch.setattr(TxLog, "txn_applied", check_then_race)
+    assert tl.commit_idempotent("batch-9", "append", add=[{"file": "data/a.parquet"}]) is None
+    assert raced == [0]
+    assert [tl._read_commit(v).get("txn") for v in tl.versions()] == ["batch-9"]
+    assert tl.active_files() == ["data/b.parquet"]
+
+
 def test_checkpoint_is_fsynced_before_vacuum_unlinks_commits(
     spark, tmp_path, monkeypatch
 ):
@@ -208,14 +244,18 @@ def test_checkpoint_already_in_place_is_kept(spark, tmp_path):
 
 
 def _protocol_functions():
-    """(name, node) of every TxLog method and of txlog_sql_dml."""
+    """(name, node) of every TxLog method, of txlog_sql_dml and of
+    shallow_clone."""
     tree = ast.parse(inspect.getsource(txlog))
     cls = next(
         n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "TxLog"
     )
     out = [(f"TxLog.{n.name}", n) for n in cls.body if isinstance(n, ast.FunctionDef)]
-    dml = ast.parse(inspect.getsource(sqlapi.txlog_sql_dml)).body[0]
-    return out + [("txlog_sql_dml", dml)]
+    helpers = [
+        (fn.__name__, ast.parse(inspect.getsource(fn)).body[0])
+        for fn in (sqlapi.txlog_sql_dml, txlog.shallow_clone)
+    ]
+    return out + helpers
 
 
 def test_transact_is_the_only_retry_driver():
@@ -310,3 +350,35 @@ def test_failed_stage_leaves_no_stage_dir(spark, tmp_path, monkeypatch, stage):
         stage(tl, df)
     assert list(tl.root.glob("_stage-*")) == []
     assert list(tl.data_dir.iterdir()) == []
+
+
+def _fold_call(node) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("snapshot", "_replay")
+    )
+
+
+def test_snapshot_is_the_only_fold_reader():
+    """Readers take a fold's fields by name from ``TxLog.snapshot``: no
+    method but ``_replay``, the tuple view entry bodies unpack, calls
+    ``_replay``, subscripts a fold or unpacks one into a tuple. And
+    ``txn_applied`` is a lookup in the fold: its one call is
+    ``snapshot``, so it opens no commit file."""
+    by_position = []
+    for name, fn in _protocol_functions():
+        if name == "TxLog._replay":
+            continue
+        for node in ast.walk(fn):
+            if _fold_call(node) and node.func.attr == "_replay":
+                by_position.append(name)
+            if isinstance(node, ast.Subscript) and _fold_call(node.value):
+                by_position.append(name)
+            if isinstance(node, ast.Assign) and _fold_call(node.value):
+                if isinstance(node.targets[0], ast.Tuple):
+                    by_position.append(name)
+    assert by_position == []
+    txn_applied = dict(_protocol_functions())["TxLog.txn_applied"]
+    calls = [n for n in ast.walk(txn_applied) if isinstance(n, ast.Call)]
+    assert [ast.unparse(n.func) for n in calls] == ["self.snapshot"]
