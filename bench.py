@@ -12,10 +12,8 @@ and any first-request set-up, then one measured request traced by
 ``perfbench/layers.Tracer``: ``Tracer.mark()`` before the entry call,
 when it returns its frame (the *body*) and after ``.collect()`` (the
 *collect* phase). The sample is ``body.s + collect.s`` and the entry's
-trace record goes to the detail file. A sample slower than the entry's
-own warm-up, or over 1.5x its committed baseline median, is suspect: one
-more traced request runs and the faster of the two is kept, with its
-trace.
+trace record goes to the detail file. No request is repeated: keeping
+the faster of two samples only selects on noise.
 
 A budget (SPARK_GRAFT_BENCH_BUDGET, default 1500 s of request time)
 bounds the run: once it is spent, each remaining entry's warm-up is its
@@ -27,7 +25,7 @@ cheapest entries.
 bench_detail.json next to this file gets every sample and every trace
 record; ``tools/bench_gate.py`` gates the records' work counters against
 ``tools/bench_baseline.json``. stdout carries only the total, the 10
-slowest medians and the ratio to the baseline over shared entries,
+slowest entries and the ratio to the baseline over shared entries,
 because a full per-entry dict overflows the driver's output-tail
 capture; the per-query WindowExec warning is silenced so the captured
 tail keeps that line.
@@ -113,8 +111,7 @@ def main() -> None:
     # descending known cost, entries without a baseline first (docstring)
     bench_names.sort(key=lambda n: -base_medians.get(n, float("inf")))
 
-    runs: dict[str, list[float]] = {}
-    medians: dict[str, float] = {}
+    times: dict[str, float] = {}
     traces: dict[str, dict] = {}
     cold_only: list[str] = []
     spent = 0.0
@@ -126,36 +123,22 @@ def main() -> None:
         spent += warm_dt
         if spent > BUDGET_SEC:
             cold_only.append(name)
-            runs[name] = [round(warm_dt, 4)]
-            medians[name] = runs[name][0]
+            times[name] = round(warm_dt, 4)
             continue
         rec = traced_request(spark, tracer, fn, sf_dir)
         dt = rec["body.s"] + rec["collect.s"]
         spent += dt
-        samples = [round(dt, 4)]
-        base_med = base_medians.get(name)
-        suspect = dt > warm_dt or (
-            base_med is not None and dt > 1.5 * base_med and dt - base_med > 0.3
-        )
-        if suspect and spent <= BUDGET_SEC:
-            retry = traced_request(spark, tracer, fn, sf_dir)
-            retry_dt = retry["body.s"] + retry["collect.s"]
-            spent += retry_dt
-            samples.append(round(retry_dt, 4))
-            if retry_dt < dt:
-                rec = retry
-        runs[name] = samples
-        medians[name] = min(samples)
+        times[name] = round(dt, 4)
         traces[name] = rec
 
-    total = round(sum(medians.values()), 2)
+    total = round(sum(times.values()), 2)
     # ratio over the entries shared with the baseline: a clean run sits
     # near 1.0, a contended or throttled one reads well above it
     vs_baseline = None
-    shared = set(medians) & set(base_medians)
+    shared = set(times) & set(base_medians)
     if shared and base.get("sf") == sf:
         vs_baseline = round(
-            sum(medians[q] for q in shared) / sum(base_medians[q] for q in shared), 3
+            sum(times[q] for q in shared) / sum(base_medians[q] for q in shared), 3
         )
     (ROOT / "bench_detail.json").write_text(
         json.dumps(
@@ -163,8 +146,7 @@ def main() -> None:
                 "metric": "headline_queries_total",
                 "value": total,
                 "unit": "sec",
-                "queries": medians,
-                "runs_per_query": runs,
+                "queries": times,
                 "budget_sec": BUDGET_SEC,
                 "degraded_queries": sorted(cold_only),
                 "cold_only_queries": cold_only,
@@ -187,7 +169,7 @@ def main() -> None:
     )
     slowest = dict(
         sorted(
-            ((k, round(v, 2)) for k, v in medians.items()),
+            ((k, round(v, 2)) for k, v in times.items()),
             key=lambda kv: -kv[1],
         )[:10]
     )
@@ -198,7 +180,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": slowest,
-                "n_queries": len(medians),
+                "n_queries": len(times),
                 "runs": 1,
                 "n_degraded": len(cold_only),
                 "vs_baseline_ratio": vs_baseline,

@@ -80,7 +80,8 @@ def reap_scratch_dirs() -> None:
     owner's dir can never be read again (its in-memory catalog and
     plans died with it). A live-looking or unprobeable owner's dir goes
     only past its age floor; this process's own dirs are never
-    touched."""
+    touched. Each `<name>/` parent left empty goes too, by rmdir only:
+    a parent another process has just written into is not empty."""
     for d in _SCRATCH_ROOT.glob("*/*"):
         m = _SCRATCH_NAME.fullmatch(d.name)
         if m is None or int(m[1]) == os.getpid():
@@ -99,6 +100,11 @@ def reap_scratch_dirs() -> None:
             continue  # its owner removed it meanwhile
         if age > floor:
             shutil.rmtree(d, ignore_errors=True)
+    for parent in _SCRATCH_ROOT.glob("*/"):
+        try:
+            os.rmdir(parent)
+        except OSError:
+            pass  # not empty
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

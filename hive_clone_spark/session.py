@@ -44,15 +44,12 @@ CHECKPOINT_FILE_MANAGER = (
 def get_spark(
     app_name: str = "hive-clone-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
-    driver_memory: str | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
-    """Create (or reuse) the tuned SparkSession."""
+    """Create (or reuse) the tuned SparkSession. The driver heap comes
+    from the deployment setting SPARK_GRAFT_DRIVER_MEM (default 16g)."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    )
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

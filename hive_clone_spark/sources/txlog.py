@@ -2205,9 +2205,11 @@ def q126_txlog_merge_minimal_rewrite(
     """,
 )
 def q128_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from hive_clone_spark.streaming.streams import read_events_stream, run_foreach
+    from hive_clone_spark.streaming.streams import (
+        events_path,
+        read_events_stream,
+        run_foreach,
+    )
 
     tl = TxLog(_warehouse_dir(sf_dir, "txlog_q128")).create()
     ckpt = _warehouse_dir(sf_dir, "txlog_q128_ckpt")
@@ -2223,8 +2225,7 @@ def q128_stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         delivered.append(batch_id)
 
     src = read_events_stream(
-        spark, os.path.join(sf_dir, "events.parque[t]"),
-        max_files_per_trigger=None,
+        spark, events_path(sf_dir), max_files_per_trigger=None
     )
     run_foreach(src, sink, ckpt)
     versions_after_drain = tl.latest_version() + 1
@@ -3451,7 +3452,11 @@ def q187_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from hive_clone_spark.catalog import table as _table
-    from hive_clone_spark.streaming.streams import EVENTS_SCHEMA, run_foreach
+    from hive_clone_spark.streaming.streams import (
+        EVENTS_SCHEMA,
+        read_events_stream,
+        run_foreach,
+    )
 
     # stage the events into 4 files -> a genuine 4-batch stream
     staged = _warehouse_dir(sf_dir, "cdc_q187_src")
@@ -3503,11 +3508,7 @@ def q187_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         delivered.append(batch_id)
 
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(staged, "*.parquet"))
-    )
+    src = read_events_stream(spark, os.path.join(staged, "*.parquet"))
     run_foreach(src, upsert, ckpt)
 
     versions_after_drain = tl.latest_version() + 1

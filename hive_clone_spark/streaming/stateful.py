@@ -233,22 +233,19 @@ def countdown_stream(events_stream: DataFrame) -> DataFrame:
     """,
 )
 def q80_stream_countdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from pyspark.sql.window import Window
-
-    from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
+    from hive_clone_spark.streaming.streams import (
+        events_path,
+        final_state,
+        read_events_stream,
+        run_to_memory,
+    )
 
     src = read_events_stream(
-        spark, os.path.join(sf_dir, "events.parque[t]"),
-        columns=["user_id", "event_id", "ts"],
+        spark, events_path(sf_dir), columns=["user_id", "event_id", "ts"]
     )
     run_to_memory(countdown_stream(src), "q80_countdown", output_mode="update")
-    t = spark.table("q80_countdown")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        t.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
+        final_state(spark, "q80_countdown", "user_id", "n_events")
         .select(
             "user_id", "n_events", "consumed_us", "n_expirations", "remaining_us"
         )
@@ -383,12 +380,14 @@ def session_ttl_stream(events_stream: DataFrame) -> DataFrame:
     """,
 )
 def q94_stream_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
+    from hive_clone_spark.streaming.streams import (
+        events_path,
+        read_events_stream,
+        run_to_memory,
+    )
 
     src = read_events_stream(
-        spark, os.path.join(sf_dir, "events.parque[t]"),
+        spark, events_path(sf_dir),
         max_files_per_trigger=None,
         columns=["user_id", "event_id", "ts"],
     )
@@ -498,10 +497,9 @@ def topk_stream(events_stream: DataFrame) -> DataFrame:
     """,
 )
 def q138_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     from hive_clone_spark.sources.queries import _warehouse
     from hive_clone_spark.streaming.streams import (
+        final_state,
         read_events_stream,
         run_to_memory,
     )
@@ -520,13 +518,7 @@ def q138_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         columns=["event_id", "user_id", "event_type", "value"],
     )
     run_to_memory(topk_stream(src), "q138_topk", output_mode="update")
-    t = spark.table("q138_topk")
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
-    final = (
-        t.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-    )
+    final = final_state(spark, "q138_topk", "event_type", "n_seen")
     z = F.posexplode(F.arrays_zip("vals", "ids", "users"))
     return (
         final.select("event_type", "n_seen", z.alias("pos", "e"))
@@ -636,25 +628,19 @@ def throttle_stream(events_stream: DataFrame) -> DataFrame:
     """,
 )
 def q177_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from pyspark.sql.window import Window
-
     from hive_clone_spark.streaming.streams import (
+        events_path,
+        final_state,
         read_events_stream,
         run_to_memory,
     )
 
     src = read_events_stream(
-        spark, os.path.join(sf_dir, "events.parque[t]"),
-        columns=["user_id", "event_id", "ts"],
+        spark, events_path(sf_dir), columns=["user_id", "event_id", "ts"]
     )
     run_to_memory(throttle_stream(src), "q177_throttle", output_mode="update")
-    t = spark.table("q177_throttle")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_total"))
     return (
-        t.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
+        final_state(spark, "q177_throttle", "user_id", "n_total")
         .select(
             "user_id",
             "n_total",
@@ -765,13 +751,9 @@ def kmv_stream(hashed_stream: DataFrame) -> DataFrame:
     """,
 )
 def q205_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from pyspark.sql.window import Window
-
     from hive_clone_spark.pipeline.common import portable_hash
     from hive_clone_spark.sources.queries import _warehouse
-    from hive_clone_spark.streaming.streams import run_to_memory
+    from hive_clone_spark.streaming.streams import final_state, run_to_memory
 
     src_dir = _warehouse(sf_dir, "kmv_q205")
     # stage only (event_type, h): the kmv worker never reads
@@ -793,13 +775,7 @@ def q205_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src_dir)
     )
     run_to_memory(kmv_stream(src), "q205_kmv", output_mode="update")
-    t = spark.table("q205_kmv")
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
-    final = (
-        t.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-    )
+    final = final_state(spark, "q205_kmv", "event_type", "n_seen")
     exact = (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -928,10 +904,9 @@ def user_census(events_stream: DataFrame) -> DataFrame:
     """,
 )
 def q228_stream_composite_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     from hive_clone_spark.sources.queries import _warehouse
     from hive_clone_spark.streaming.streams import (
+        final_state,
         read_events_stream,
         run_to_memory,
     )
@@ -952,11 +927,6 @@ def q228_stream_composite_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         columns=["user_id", "event_type", "value"],
     )
     run_to_memory(user_census(src), "q228_census", output_mode="update")
-    t = spark.table("q228_census")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        t.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk")
-        .orderBy("user_id")
+    return final_state(spark, "q228_census", "user_id", "n_events").orderBy(
+        "user_id"
     )

@@ -29,9 +29,23 @@ a query starts. Beyond that:
   * `run_foreach` drains through a foreachBatch sink and sets no conf,
     because those sinks shuffle inside each batch and a pin would
     change their plans.
+
+The streaming entries share one home for each rule they apply:
+  * `events_path`: where the events feed is read from (a glob, so the
+    file source gets a directory basePath);
+  * `redelivered_events`: the at-least-once feed, every event twice,
+    with both copies in micro-batch 0;
+  * `click_purchase_join`: the click→purchase stream-stream join, its
+    watermarks (`WATERMARK` on both sides) and its interval
+    `purchase_ts ∈ [click_ts, click_ts + horizon]`, for every join type;
+  * `settled_floor`: the event time below which that join's outer rows
+    can no longer change;
+  * `final_state`: the last row per key of an update-mode drain.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +57,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.sql.window import Window
+
+from hive_clone_spark.catalog import table
 
 # Each stateful operator materializes one state store PER shuffle
 # partition; a stream-stream join keeps two sides. Size the stream's
@@ -53,6 +70,9 @@ from pyspark.sql.types import (
 # only the drain needs it.
 STATE_PARTITIONS = 8
 
+# Event-time lateness every watermark in this module allows.
+WATERMARK = "10 minutes"
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -62,6 +82,13 @@ EVENTS_SCHEMA = StructType(
         StructField("value", DoubleType()),
     ]
 )
+
+
+def events_path(sf_dir: str) -> str:
+    """The stream source path of the sf dir's events table: a glob, not
+    the bare file path, because the file-stream source requires its
+    basePath to be a directory, and a glob anchors it to sf_dir."""
+    return os.path.join(sf_dir, "events.parque[t]")
 
 
 def read_events_stream(
@@ -77,8 +104,7 @@ def read_events_stream(
     `max_files_per_trigger=None` drops the per-trigger file cap so every
     matched file lands in micro-batch 0 — required by consumers whose
     semantics need all redelivered copies co-resident within one
-    watermark horizon (q66's dedup: a duplicate arriving in a later
-    batch AFTER the watermark expired its twin's state would leak).
+    watermark horizon (`redelivered_events`).
 
     `columns` narrows the DECLARED schema to those fields: the state
     workers downstream (applyInPandasWithState) are opaque to the
@@ -104,7 +130,7 @@ def read_events_stream(
     return reader.parquet(path)
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def tumbling_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """Streaming twin of `q23_tumbling_window`: 1h tumbling windows per
     event_type, late data beyond the watermark dropped."""
     return (
@@ -124,7 +150,7 @@ def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFra
     )
 
 
-def session_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def session_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """Streaming twin of `q25_session_window`: per-user 5m-gap sessions."""
     return (
         events.withWatermark("ts", watermark)
@@ -170,6 +196,23 @@ def run_to_memory(
     return q
 
 
+def final_state(
+    spark: SparkSession, name: str, key: str, counter: str
+) -> DataFrame:
+    """The final row per `key` of the update-mode drain in memory table
+    `name`. An update drain emits a key's row again in every
+    micro-batch that changed its state, so the table holds one row per
+    (key, batch); `counter` grows with every event folded into the
+    state, and the row with its highest value is the key's last."""
+    w = Window.partitionBy(key).orderBy(F.desc(counter))
+    return (
+        spark.table(name)
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") == 1)
+        .drop("rk")
+    )
+
+
 def run_foreach(stream_df: DataFrame, sink, checkpoint: str):
     """Drain the stream through the foreachBatch `sink(batch_df,
     batch_id)` with the availableNow trigger, checkpointing to
@@ -187,43 +230,76 @@ def run_foreach(stream_df: DataFrame, sink, checkpoint: str):
 
 
 def click_purchase_join(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
+    clicks: DataFrame,
+    purchases: DataFrame,
+    how: str = "inner",
+    horizon: str = "1 hour",
 ) -> DataFrame:
-    """Stream-stream inner join: each click paired with the same user's
-    purchases within `horizon` after it. Both sides are watermarked so
-    Spark can bound the join state: click state is droppable once the
-    watermark passes click_ts + horizon, purchase state once it passes
+    """Stream-stream join of each click to the same user's purchases
+    within `horizon` after it. Both sides are watermarked so Spark can
+    bound the join state: click state is droppable once the watermark
+    passes click_ts + horizon, purchase state once it passes
     purchase_ts — the time-bound condition is what makes an unbounded
-    stream-stream join feasible at all."""
-    c = (
-        clicks.withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
+    stream-stream join feasible at all.
+
+    `how` is any join type Spark streams: inner, left_outer and
+    full_outer give click_id, user_id, click_ts, purchase_id,
+    purchase_ts and purchase_value, with the user_id of whichever side
+    is present; left_semi gives the click columns only (click_id,
+    user_id, click_ts), each matched click once."""
+    c = clicks.withWatermark("ts", WATERMARK).select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("click_ts"),
     )
-    p = (
-        purchases.withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
+    p = purchases.withWatermark("ts", WATERMARK).select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("value").alias("purchase_value"),
     )
-    return c.join(
+    joined = c.join(
         p,
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
-    ).select(
+        how,
+    )
+    if how == "left_semi":
+        return joined.select("click_id", F.col("c_user").alias("user_id"), "click_ts")
+    return joined.select(
         "click_id",
-        F.col("c_user").alias("user_id"),
+        F.coalesce("c_user", "p_user").alias("user_id"),
         "click_ts",
         "purchase_id",
         "purchase_ts",
         "purchase_value",
+    )
+
+
+def settled_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row, one column `b`: the event time below which the outcome
+    of a `click_purchase_join` over the sf dir's events is final. The
+    global watermark is the MIN over every withWatermark node of that
+    node's own max event time − delay (measured at sf0.001: with the
+    click side ending at 19:30 and the purchase side at 23:26, the
+    eviction boundary tracked the click side's max), so `b` is
+    least(max click ts, max purchase ts) − `WATERMARK`, minus 1 s of
+    slack for the watermark's millisecond flooring. An unmatched
+    purchase is settled once purchase_ts < b; an unmatched click once
+    click_ts + horizon < b, since a purchase inside its horizon could
+    still arrive until then. Computed from the batch table, for the
+    caller to broadcast."""
+    ev = table(spark, sf_dir, "events")
+    return ev.agg(
+        (
+            F.least(
+                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+            )
+            - F.expr(f"INTERVAL {WATERMARK}")
+            - F.expr("INTERVAL 1 second")
+        ).alias("b")
     )
 
 
@@ -268,7 +344,7 @@ def write_stream_exactly_once(
     return run_foreach(stream_df, sink, checkpoint_dir)
 
 
-def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def dedup_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """At-least-once → effectively-once: drop redelivered events by id.
 
     `dropDuplicatesWithinWatermark` keeps one state-store row per key
@@ -279,4 +355,24 @@ def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     producers, file re-uploads)."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
+    )
+
+
+def redelivered_events(
+    spark: SparkSession, sf_dir: str, columns: list[str] | None = None
+) -> DataFrame:
+    """The sf dir's events delivered twice, a model of at-least-once
+    redelivery: the union of two independent sources over the same
+    feed. Neither leg has a per-trigger file cap. Dedup correctness
+    requires both copies of an event to land within the watermark of
+    each other, which a multi-file source drip-fed at
+    maxFilesPerTrigger=1 cannot guarantee: a duplicate in a later
+    micro-batch whose twin's state already aged out of the watermark
+    would leak. With no cap, all files of both legs arrive in
+    micro-batch 0. `columns` narrows both legs' declared schema."""
+    path = events_path(sf_dir)
+    return read_events_stream(
+        spark, path, max_files_per_trigger=None, columns=columns
+    ).unionByName(
+        read_events_stream(spark, path, max_files_per_trigger=None, columns=columns)
     )

@@ -176,17 +176,14 @@ def q25_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q59_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from hive_clone_spark.streaming.streams import (
         click_purchase_join,
+        events_path,
         read_events_stream,
         run_to_memory,
     )
 
-    # glob, not the bare file path: the file-stream source requires its
-    # basePath to be a directory, and a glob anchors it to sf_dir
-    src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
+    src = read_events_stream(spark, events_path(sf_dir))
     joined = click_purchase_join(
         src.where(F.col("event_type") == "click"),
         src.where(F.col("event_type") == "purchase"),
@@ -230,15 +227,14 @@ def q59_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q60_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from hive_clone_spark.streaming.streams import (
         enrich_with_dim,
+        events_path,
         read_events_stream,
         run_to_memory,
     )
 
-    src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
+    src = read_events_stream(spark, events_path(sf_dir))
     dim = table(spark, sf_dir, "customer")
     run_to_memory(enrich_with_dim(src, dim), "q60_enriched", output_mode="append")
     return (
@@ -284,26 +280,13 @@ def q60_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q66_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from hive_clone_spark.streaming.streams import (
         dedup_stream,
-        read_events_stream,
+        redelivered_events,
         run_to_memory,
     )
 
-    path = os.path.join(sf_dir, "events.parque[t]")
-    # No per-trigger file cap on EITHER source: dedup correctness
-    # requires both redelivered copies of an event to land within the
-    # 10-minute watermark of each other, which a multi-file source
-    # drip-fed at maxFilesPerTrigger=1 cannot guarantee (a duplicate in
-    # a later micro-batch whose twin's state already aged out of the
-    # watermark would leak and break the oracle). With no cap, all
-    # files of both union legs arrive in micro-batch 0.
-    redelivered = read_events_stream(spark, path, max_files_per_trigger=None).unionByName(
-        read_events_stream(spark, path, max_files_per_trigger=None)
-    )
-    deduped = dedup_stream(redelivered)
+    deduped = dedup_stream(redelivered_events(spark, sf_dir))
     run_to_memory(deduped, "q66_dedup", output_mode="append")
     t = spark.table("q66_dedup")
     return (
@@ -356,23 +339,21 @@ def q66_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q68_stream_stateful_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from pyspark.sql.window import Window
-
     from hive_clone_spark.streaming.stateful import ema_stream
-    from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
+    from hive_clone_spark.streaming.streams import (
+        events_path,
+        final_state,
+        read_events_stream,
+        run_to_memory,
+    )
 
     src = read_events_stream(
-        spark, os.path.join(sf_dir, "events.parque[t]"),
+        spark, events_path(sf_dir),
         columns=["user_id", "event_id", "ts", "value"],
     )
     run_to_memory(ema_stream(src), "q68_ema", output_mode="update")
-    t = spark.table("q68_ema")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
     return (
-        t.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
+        final_state(spark, "q68_ema", "user_id", "n_seen")
         .select("user_id", "n_seen", F.round("ema", 6).alias("ema"))
         .orderBy("user_id")
     )
@@ -406,17 +387,16 @@ def q68_stream_stateful_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q72_stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from hive_clone_spark.sources.queries import _warehouse
     from hive_clone_spark.streaming.streams import (
+        events_path,
         read_events_stream,
         write_stream_exactly_once,
     )
 
     out_dir = _warehouse(sf_dir, "q72_sink")
     ckpt_dir = _warehouse(sf_dir, "q72_ckpt")
-    src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
+    src = read_events_stream(spark, events_path(sf_dir))
     write_stream_exactly_once(src, out_dir, ckpt_dir)
     back = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
     return (
@@ -436,18 +416,13 @@ def q72_stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "clicks that never converted" computable on a live feed. Inner
 # stream-stream joins (q59) emit matches as they meet; the OUTER form
 # additionally emits a null-completed row once the watermark proves no
-# match can still arrive. That proof is watermark-relative, and the
-# GLOBAL watermark is the MIN over every withWatermark node of (that
-# node's own max event time − delay) — measured here: with the click
-# side ending at 19:30 and the purchase side at 23:26 (sf0.001), the
-# eviction boundary tracked the CLICK side's max, not the stream's.
-# A click's null row is guaranteed emitted once
-#   click_ts < least(max_click_ts, max_purchase_ts) − delay − horizon.
-# The entry reports only that SETTLED region (minus 1 s of slack for
-# the watermark's millisecond flooring) on BOTH sides — clicks whose
-# outcome could still change if the stream continued are excluded by
-# construction. That is the honest semantics of outer results on an
-# unbounded stream: you only ever know the settled prefix.
+# match can still arrive. That proof is watermark-relative: a click's
+# null row is guaranteed emitted once click_ts + horizon is below
+# `streams.settled_floor`. The entry reports only that SETTLED region
+# on BOTH sides — clicks whose outcome could still change if the
+# stream continued are excluded by construction. That is the honest
+# semantics of outer results on an unbounded stream: you only ever
+# know the settled prefix.
 #
 # Scale design: same watermark-bounded two-sided state as q59 (state
 # drops once the proof window passes); the settled-region filter is a
@@ -489,63 +464,34 @@ def q72_stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q88_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from hive_clone_spark.catalog import table as _table
-    from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
-
-    src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
-    c = (
-        src.where(F.col("event_type") == "click")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
+    from hive_clone_spark.streaming.streams import (
+        click_purchase_join,
+        events_path,
+        read_events_stream,
+        run_to_memory,
+        settled_floor,
     )
-    p = (
-        src.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 hour")),
-        "leftOuter",
+
+    src = read_events_stream(spark, events_path(sf_dir))
+    joined = click_purchase_join(
+        src.where(F.col("event_type") == "click"),
+        src.where(F.col("event_type") == "purchase"),
+        how="left_outer",
     )
     run_to_memory(joined, "q88_outer", output_mode="append")
     drained = spark.table("q88_outer")
-    # settled-region boundary from the batch table (a 1-row broadcast):
-    # min of the two sides' own max event times − delay − horizon − 1 s
-    ev = _table(spark, sf_dir, "events")
-    mx = ev.agg(
-        (
-            F.least(
-                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            )
-            - F.expr("INTERVAL 70 minutes")
-            - F.expr("INTERVAL 1 second")
-        ).alias("b")
-    )
+    # a fresh alias of the key: the self-join below cannot re-instance
+    # the memory table's relation, so its sides may share no attribute
     settled_nulls = (
         drained.where(F.col("purchase_ts").isNull())
-        .crossJoin(F.broadcast(mx))
-        .where(F.col("click_ts") < F.col("b"))
-        .select(F.col("c_user").alias("user_id"))
-        .groupBy("user_id")
+        .crossJoin(F.broadcast(settled_floor(spark, sf_dir)))
+        .where(F.col("click_ts") + F.expr("INTERVAL 1 hour") < F.col("b"))
+        .groupBy(F.col("user_id").alias("user_id"))
         .agg(F.count("*").alias("n_expired_clicks"))
     )
     pairs = (
         drained.where(F.col("purchase_ts").isNotNull())
-        .groupBy(F.col("c_user").alias("user_id"))
+        .groupBy("user_id")
         .agg(
             F.count("*").alias("n_pairs"),
             F.round(
@@ -582,9 +528,9 @@ def q88_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     (its candidate clicks all lie AT OR BEFORE it — once the
 #     watermark passes purchase_ts, any such click would be rejected
 #     as late, so absence is proven with no horizon wait).
-# The entry reports only the settled region of EACH side (q88's
-# measured min-across-nodes watermark, minus 1 s flooring slack); the
-# oracle derives both regions from the batch table independently.
+# The entry reports only the settled region of EACH side, both below
+# `streams.settled_floor`; the oracle derives both regions from the
+# batch table independently.
 #
 # Scale design: identical watermark-bounded two-sided state to
 # q59/q88 — the asymmetric settle boundaries change which rows the
@@ -635,70 +581,43 @@ def q88_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q102_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from hive_clone_spark.catalog import table as _table
-    from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
-
-    src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
-    c = (
-        src.where(F.col("event_type") == "click")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
+    from hive_clone_spark.streaming.streams import (
+        click_purchase_join,
+        events_path,
+        read_events_stream,
+        run_to_memory,
+        settled_floor,
     )
-    p = (
-        src.where(F.col("event_type") == "purchase")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 hour")),
-        "fullOuter",
+
+    src = read_events_stream(spark, events_path(sf_dir))
+    joined = click_purchase_join(
+        src.where(F.col("event_type") == "click"),
+        src.where(F.col("event_type") == "purchase"),
+        how="full_outer",
     )
     run_to_memory(joined, "q102_full_outer", output_mode="append")
     drained = spark.table("q102_full_outer")
-    ev = _table(spark, sf_dir, "events")
-    wm = ev.agg(
-        (
-            F.least(
-                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            )
-            - F.expr("INTERVAL 10 minutes")
-            - F.expr("INTERVAL 1 second")
-        ).alias("b")
-    )
+    wm = settled_floor(spark, sf_dir)
+    # fresh aliases of the key, as in q88's self-join
     expired_c = (
         drained.where(F.col("purchase_id").isNull())
         .crossJoin(F.broadcast(wm))
         .where(F.col("click_ts") + F.expr("INTERVAL 1 hour") < F.col("b"))
-        .groupBy(F.col("c_user").alias("user_id"))
+        .groupBy(F.col("user_id").alias("user_id"))
         .agg(F.count("*").alias("n_expired_clicks"))
     )
     orphan_p = (
         drained.where(F.col("click_id").isNull())
         .crossJoin(F.broadcast(wm))
         .where(F.col("purchase_ts") < F.col("b"))
-        .groupBy(F.col("p_user").alias("user_id"))
+        .groupBy(F.col("user_id").alias("user_id"))
         .agg(F.count("*").alias("n_orphan_purchases"))
     )
     pairs = (
         drained.where(
             F.col("click_id").isNotNull() & F.col("purchase_id").isNotNull()
         )
-        .groupBy(F.col("c_user").alias("user_id"))
+        .groupBy("user_id")
         .agg(
             F.count("*").alias("n_pairs"),
             F.round(
@@ -767,28 +686,18 @@ def q102_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q146_stream_dedup_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from hive_clone_spark.streaming.streams import (
         dedup_stream,
-        read_events_stream,
+        redelivered_events,
         run_to_memory,
     )
 
-    path = os.path.join(sf_dir, "events.parque[t]")
-    # no per-trigger cap: both redelivered copies must land within one
-    # watermark horizon (q66's pinned assumption). Declared columns
-    # narrowed to what the dedup key + window aggregate touch —
-    # user_id otherwise rides through the dedup STATE STORE and both
-    # stateful shuffles unused (§2.3; the r13 stateful-streaming
+    # Declared columns narrowed to what the dedup key + window aggregate
+    # touch — user_id otherwise rides through the dedup STATE STORE and
+    # both stateful shuffles unused (§2.3; the r13 stateful-streaming
     # column-narrowing discipline applied to this chain).
-    cols = ["event_id", "ts", "event_type", "value"]
-    redelivered = read_events_stream(
-        spark, path, max_files_per_trigger=None, columns=cols
-    ).unionByName(
-        read_events_stream(
-            spark, path, max_files_per_trigger=None, columns=cols
-        )
+    redelivered = redelivered_events(
+        spark, sf_dir, columns=["event_id", "ts", "event_type", "value"]
     )
     agg = (
         dedup_stream(redelivered)
@@ -995,8 +904,6 @@ _LEADER_FILES = 5
     """,
 )
 def q212_stream_complete_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from hive_clone_spark.sources.queries import _warehouse
     from hive_clone_spark.streaming.streams import run_to_memory
 
@@ -1164,30 +1071,18 @@ def q217_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def q240_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from hive_clone_spark.streaming.streams import (
+        click_purchase_join,
+        events_path,
         read_events_stream,
         run_to_memory,
     )
 
-    src = read_events_stream(spark, os.path.join(sf_dir, "events.parque[t]"))
-    clicks = (
-        src.where(F.col("event_type") == "click")
-        .select("event_id", "user_id", F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "10 minutes")
-    )
-    purchases = (
-        src.where(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-    )
-    semi = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("click_ts"))
-        & (F.col("p_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_semi",
+    src = read_events_stream(spark, events_path(sf_dir))
+    semi = click_purchase_join(
+        src.where(F.col("event_type") == "click"),
+        src.where(F.col("event_type") == "purchase"),
+        how="left_semi",
     )
     run_to_memory(semi, "q240_semi", output_mode="append")
     out = spark.table("q240_semi")

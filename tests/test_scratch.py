@@ -56,6 +56,7 @@ def test_reaper_removes_only_dead_owners_dirs(root):
         _mk(root, f"txlog_q91/sf0.01-{dead}"),
         _mk(root, f"q255_bloom/sf0.001-{dead}"),
         _mk(root, f"q255_bloom/sf0.001-{dead}-ctl"),
+        _mk(root, f"q72_sink/sf0.1-{dead}"),
     ]
     kept = [
         _mk(root, f"txlog_q91/sf0.01-{me}", age_s=30 * _DAY),
@@ -67,6 +68,9 @@ def test_reaper_removes_only_dead_owners_dirs(root):
     catalog.reap_scratch_dirs()
     assert [d for d in gone if d.exists()] == []
     assert [d for d in kept if not d.exists()] == []
+    # an emptied parent goes; a parent with a live child stays
+    assert not (root / "q72_sink").exists()
+    assert (root / "q255_bloom").is_dir()
 
 
 def test_reaper_age_floors(root, monkeypatch):

@@ -245,6 +245,30 @@ def test_stream_drains_live_only_in_streams_module():
     assert pins == [], f"shuffle.partitions set outside streams.py: {pins}"
 
 
+def test_streaming_rules_live_only_in_streams_module():
+    """The events stream glob and the click→purchase interval live
+    only in `streams.py`, as do the settled floor (`F.least`) and the
+    update-drain final-row Window (`row_number`) among the streaming
+    modules."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(streams.__file__).resolve().parent.parent
+    everywhere = re.compile(r"events\.parque\[t\]|>=\s*F\.col\([\"']click_ts")
+    in_streaming = re.compile(r"F\.least\(|row_number\(")
+    copies = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "streaming/streams.py":
+            continue
+        text = path.read_text()
+        if everywhere.search(text) or (
+            rel.startswith("streaming/") and in_streaming.search(text)
+        ):
+            copies.append(rel)
+    assert copies == [], f"streaming rules copied outside streams.py: {copies}"
+
+
 def test_session_sets_filesystem_checkpoint_manager(spark):
     from hive_clone_spark.session import CHECKPOINT_FILE_MANAGER
 

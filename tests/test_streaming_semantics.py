@@ -113,9 +113,11 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert got == [1, 2, 3]
 
 
-def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("how", ["inner", "left_semi"])
+def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path, how):
     """Stream-stream time-bounded join drained with availableNow equals
-    the batch interval join on the same rows."""
+    the batch interval join of the same type on the same rows: for
+    left_semi, each click with at least one match, once."""
     import glob
     import shutil
 
@@ -133,15 +135,14 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
     part = glob.glob(f"{stage}/part-*.parquet")[0]
     shutil.copy(part, f"{src}/000.parquet")
 
-    from hive_clone_spark.streaming import streams
-
     stream = streams.read_events_stream(spark, src)
     joined = streams.click_purchase_join(
         stream.where(F.col("event_type") == "click"),
         stream.where(F.col("event_type") == "purchase"),
+        how=how,
     )
-    streams.run_to_memory(joined, "ssj_sink", output_mode="append")
-    got = {tuple(map(str, r)) for r in spark.table("ssj_sink").collect()}
+    streams.run_to_memory(joined, f"ssj_sink_{how}", output_mode="append")
+    got = sorted(tuple(map(str, r)) for r in spark.table(f"ssj_sink_{how}").collect())
 
     batch = spark.read.schema(streams.EVENTS_SCHEMA).parquet(src)
     bc = batch.where(F.col("event_type") == "click").select(
@@ -155,24 +156,21 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
         F.col("ts").alias("purchase_ts"),
         F.col("value").alias("purchase_value"),
     )
-    want = {
+    cols = ["click_id", "user_id", "click_ts"]
+    if how == "inner":
+        cols += ["purchase_id", "purchase_ts", "purchase_value"]
+    want = sorted(
         tuple(map(str, r))
         for r in bc.join(
             bp,
             (F.col("user_id") == F.col("p_user"))
             & (F.col("purchase_ts") >= F.col("click_ts"))
             & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+            how,
         )
-        .select(
-            "click_id",
-            "user_id",
-            "click_ts",
-            "purchase_id",
-            "purchase_ts",
-            "purchase_value",
-        )
+        .select(cols)
         .collect()
-    }
+    )
     assert got == want
     assert len(got) > 0
 
@@ -273,12 +271,16 @@ def test_session_ttl_state_is_evicted_and_bounded(spark):
         _SESS_TTL_US,
         session_ttl_stream,
     )
-    from hive_clone_spark.streaming.streams import read_events_stream, run_to_memory
+    from hive_clone_spark.streaming.streams import (
+        events_path,
+        read_events_stream,
+        run_to_memory,
+    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     sf_dir = "/root/testdata/sf0.001"
     src = read_events_stream(
-        spark, sf_dir + "/events.parque[t]", max_files_per_trigger=None
+        spark, events_path(sf_dir), max_files_per_trigger=None
     )
     q = run_to_memory(
         session_ttl_stream(src.withWatermark("ts", "10 minutes")),
